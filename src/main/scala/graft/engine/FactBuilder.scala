@@ -21,9 +21,13 @@ import org.apache.spark.sql.functions._
   *    wrote (`4_Fact:50` vs `2_Silver:49`) — engine relies on Spark's
   *    default case-insensitive resolution; do not enable
   *    spark.sql.caseSensitive.
-  *  - the composite merge is a left_anti join on 4 key columns; the
-  *    incremental source is small → broadcast anti join, the existing
-  *    fact is never shuffled.
+  *  - the composite merge is a left_anti join on 4 key columns. The
+  *    incremental source is small, so AQE ends with a broadcast anti
+  *    join, but the existing fact is still shuffled once: the source's
+  *    estimate (a product over the chained joins) starts the plan as a
+  *    sort-merge join, whose fact-side shuffle map stage runs before
+  *    AQE switches, and the multiplicity-preserving update join
+  *    broadcasts the fact's four key columns (see [[Upsert]]).
   */
 object FactBuilder {
 

@@ -51,16 +51,17 @@ object Ingest {
                   bronzePath: String): DataFrame = {
     val df = readCsv(spark, csvPath)
     df.write.mode("overwrite").parquet(bronzePath)
-    spark.read.parquet(bronzePath)
+    ParquetTable.open(spark, bronzePath)
   }
 
   /** Bronze parquet scan — `spark.read.format('parquet')
     * .option('inferSchema', True).load(path)` (`2_Silver:7-9`).
     * inferSchema is a no-op for self-describing parquet; kept for
-    * fidelity of surface.
+    * fidelity of surface. The schema comes from one footer read on the
+    * driver ([[ParquetTable.open]]), not from an inference job.
     */
   def readBronze(spark: SparkSession, bronzePath: String): DataFrame =
-    spark.read.format("parquet").option("inferSchema", "true").load(bronzePath)
+    ParquetTable.open(spark, bronzePath, Map("inferSchema" -> "true"))
 
   /** JSON-lines source (the third landing format a lakehouse ingest
     * meets after CSV and parquet). Same schema discipline as

@@ -23,11 +23,10 @@ final class SalesPipeline(spark: SparkSession, catalog: TableCatalog) {
 
   /** Run the full pipeline from a raw CSV. Returns the fact table. */
   def run(csvPath: String, incremental: Boolean): DataFrame = {
-    Ingest.csvToBronze(spark, csvPath, bronzePath)
-    val bronze = Ingest.readBronze(spark, bronzePath)
+    val bronze = Ingest.csvToBronze(spark, csvPath, bronzePath)
     val silver = SilverTransform.transform(bronze)
     SilverTransform.writeSilver(silver, silverPath)
-    val silverBack = spark.read.parquet(silverPath)
+    val silverBack = ParquetTable.open(spark, silverPath)
     // one silver scan computes all four dims' distinct key sets
     scd.buildAll(ScdType1.all, silverBack, incremental)
     FactBuilder.build(spark, catalog, silverBack)

@@ -48,9 +48,12 @@ final case class DimSpec(table: String, naturalKey: Seq[String],
   *  - the src-vs-sink join broadcasts whenever the dim fits under
   *    autoBroadcastJoinThreshold; for a billion-row dimension it
   *    degrades gracefully to a shuffle join on the natural key;
-  *  - the ONLY driver round-trip is the deliberate scalar `max(key)`
-  *    (`3(1):123-124` — a single Long), which sequences key allocation
-  *    between two jobs exactly like the reference.
+  *  - the key base is the sink's `max(key)` (`3(1):123-124` — a
+  *    single Long), taken first from the parquet row-group statistics
+  *    on the driver ([[ScdType1.keyBase]]); only a sink without usable
+  *    statistics pays the reference's scalar `agg(max)` round-trip.
+  *    Either way the base is fixed before the MERGE job starts,
+  *    sequencing key allocation exactly like the reference.
   */
 final class ScdType1(spark: SparkSession, catalog: TableCatalog) {
 
@@ -68,18 +71,29 @@ final class ScdType1(spark: SparkSession, catalog: TableCatalog) {
     * attrs) set in a single scan + single shuffle, where per-dim
     * `build` would scan silver once per dimension. At 100 TB the scan
     * IS the cost (the distinct outputs are dimension-sized), so this
-    * divides the dominant I/O by the number of dimensions. The small
-    * grouped result is cached while the per-dim join/merge logic runs
-    * unchanged.
+    * divides the dominant I/O by the number of dimensions.
+    *
+    * The small grouped result is materialised once as a leaf relation
+    * (an RDD-backed DataFrame over the aggregate, then persisted) and
+    * every branch of every dim's join/MERGE reads that. Persisting the
+    * aggregate itself does not do this: a dim's plan uses the source
+    * several times (the src⋈sink join, the old/new split, the MERGE's
+    * anti join and union), the analyzer re-instances the repeated
+    * Expand-aggregate subtrees, and those copies no longer match the
+    * cached plan — three of the four source branches of each MERGE
+    * re-scanned silver and re-ran the aggregate. A leaf relation has
+    * nothing to re-instance, so every copy hits the cache, and its RDD
+    * lineage recomputes a lost block (unlike `localCheckpoint`, whose
+    * blocks die with their executor).
     */
   def buildAll(specs: Seq[DimSpec], silver: DataFrame,
                incremental: Boolean): Map[String, DataFrame] = {
     import org.apache.spark.sql.functions.grouping_id
     val allCols: Seq[String] = specs.flatMap(_.cols).distinct
-    val grouped = silver
+    val agg = silver
       .groupingSets(specs.map(_.cols.map(col)), allCols.map(col): _*)
       .agg(grouping_id().as("__gid"))
-      .persist()
+    val grouped = spark.createDataFrame(agg.rdd, agg.schema).persist()
     try {
       // grouping_id: bit (n-1-i) set iff allCols(i) is aggregated away
       def gidFor(spec: DimSpec): Long =
@@ -139,10 +153,7 @@ final class ScdType1(spark: SparkSession, catalog: TableCatalog) {
     // max+1 with a null-guard for an empty sink (SURVEY §7.4)
     val base: Long =
       if (!incremental || !exists) 1L
-      else {
-        val row = dfSink.agg(max(col(key))).head()
-        if (row.isNullAt(0)) 1L else row.getLong(0) + 1L
-      }
+      else ScdType1.keyBase(spark, catalog.pathFor(spec.table), key)
 
     // key allocation (`3(1):133`): base + monotonically_increasing_id()
     val dfNewKeyed = dfNew.withColumn(
@@ -170,6 +181,22 @@ final class ScdType1(spark: SparkSession, catalog: TableCatalog) {
 }
 
 object ScdType1 {
+
+  /** The incremental key base of the sink table at `path`: `max(key) +
+    * 1`, or 1 when no row holds a non-null key. The maximum comes from
+    * the parquet row-group statistics ([[ParquetTable.footerMax]]) with
+    * no Spark job; a sink where some non-empty row group lacks them
+    * falls back to the `agg(max)` job.
+    */
+  private[graft] def keyBase(spark: SparkSession, path: String,
+                             key: String): Long = {
+    val maxKey = ParquetTable.footerMax(spark, path, key).getOrElse {
+      val row = ParquetTable.open(spark, path).agg(max(col(key))).head()
+      if (row.isNullAt(0)) None else Some(row.getLong(0))
+    }
+    maxKey.fold(1L)(_ + 1L)
+  }
+
   /** The four reference dimensions (`3(1)`–`3(4)`; schemas per
     * FIXTURES.md §A3).
     */

@@ -40,7 +40,10 @@ final class TableCatalog(val spark: SparkSession, val basePath: String) {
     }
   }
 
-  def read(name: String): DataFrame = spark.read.parquet(pathFor(name))
+  /** The table's rows, opened without a schema-inference job
+    * ([[ParquetTable.open]]).
+    */
+  def read(name: String): DataFrame = ParquetTable.open(spark, pathFor(name))
 
   /** Initial full load — `format('parquet').mode('overwrite')
     * .option('path', …).saveAsTable(…)` (`3(1):171-176`): the parquet
