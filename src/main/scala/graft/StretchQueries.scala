@@ -5874,7 +5874,7 @@ object StretchQueries {
   }
 
   /** score CTE: s = round(1e6 · ln(cnt/C)), C = Σ cnt — the same
-    * once-per-piece rounding UnigramLm.withScores does with Spark
+    * once-per-piece rounding UnigramLm.train's rescore does with Spark
     * round/log (both engines: IEEE double division, ≤1-ulp ln,
     * half-away-from-zero round; the boundary margin is probed in
     * NOTES like the vocab-drift gate's).
@@ -5889,8 +5889,8 @@ object StretchQueries {
     * r ∈ {1, 2}: Viterbi pass under s{r−1}, frequency-weighted path
     * counts, M-step (zero-count pieces drop, single chars floor at 1;
     * with `targetV` set, prune to the top-V by (cnt, piece) with
-    * single chars exempt — UnigramLm.mStep's vocabulary budget),
-    * rescore. Ends with `us2(piece, cnt, s)`.
+    * single chars exempt — the vocabulary budget of UnigramLm.train's
+    * M-step), rescore. Ends with `us2(piece, cnt, s)`.
     */
   private def unigramTrainCtesOf(targetV: Option[Int]): String = {
     val head = Seq(

@@ -36,13 +36,95 @@ class UnigramLmSpec extends SparkSpec {
 
   test("empty corpus fails loudly at training, not with a silent " +
     "empty vocabulary") {
+    // the message is the reference trainer's, and no persisted block
+    // remains after the failure or after a successful fit
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[Exception] {
       UnigramLm.train(empty, "text", rounds = 1)
     }
     assert(e.getMessage.contains("empty vocabulary"),
       s"wrong failure mode: ${e.getMessage}")
+    val ref = intercept[Exception] {
+      UnigramLmReference.train(empty, "text", rounds = 1)
+    }
+    assert(e.getClass == ref.getClass && e.getMessage == ref.getMessage,
+      s"failure changed: ${e.getMessage} vs ${ref.getMessage}")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the failed fit leaked persisted blocks")
+    UnigramLm.train(documents("sf0.001"), "text", rounds = 2).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the fit leaked persisted blocks")
+  }
+
+  private def documents(sf: String) =
+    spark.read.parquet(s"/root/testdata/$sf/documents.parquet")
+
+  /** Documents with nulls, an empty text, CJK, Hangul and non-BMP
+    * characters. `ﬀa` (U+FB00) and `𝔘a` (U+1D518) each occur 5 times,
+    * so they tie on count; UTF-8 orders `ﬀa` first and UTF-16 orders
+    * `𝔘a` first. 23 words with counts 10..32 rank above the pair, so a
+    * `targetV` of 24 cuts between them.
+    */
+  private def craftedCorpus = {
+    val common = Seq("qa", "qb", "qc", "qd", "qe", "中文", "数据", "分析",
+      "模型", "训练", "😀x", "😀y", "𝔘b", "ﬀb", "日本語", "한국어", "zq",
+      "zr", "zs", "zt", "é𝔘", "ñ中", "𝕏𝕐")
+    val occurrences = common.zipWithIndex.flatMap { case (w, i) =>
+      Seq.fill(10 + i)(w) } ++ Seq.fill(5)("ﬀa") ++ Seq.fill(5)("𝔘a") ++
+      Seq("averyveryverylongword")
+    val texts = occurrences.zipWithIndex.groupBy(_._2 % 37).toSeq
+      .sortBy(_._1).map { case (_, ws) => ws.map(_._1).mkString(" ") }
+    val rows = texts.map(Option(_)) ++ Seq(None, Some(""), None)
+    rows.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+      .toDF("doc_id", "text")
+  }
+
+  test("driver-local EM ≡ the DataFrame trainer: rows and schema " +
+    "(nullability included) on sf0.001, sf0.01 and a crafted " +
+    "null/CJK/non-BMP corpus, rounds 1-3, targetV None and 24, " +
+    "under repartition(7)") {
+    val corpora = Seq("sf0.001" -> documents("sf0.001"),
+      "sf0.01" -> documents("sf0.01"), "crafted" -> craftedCorpus)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.getString(0))
+    for ((name, docs) <- corpora; rounds <- 1 to 3;
+         targetV <- Seq(None, Some(24))) {
+      val what = s"$name rounds=$rounds targetV=$targetV"
+      val ref = UnigramLmReference.train(docs, "text", rounds = rounds,
+        targetV = targetV)
+      val refRows = rows(ref)
+      for (input <- Seq(docs, docs.repartition(7))) {
+        val got = UnigramLm.train(input, "text", rounds = rounds,
+          targetV = targetV)
+        assert(got.schema == ref.schema, s"$what: schema ${got.schema}")
+        assert(rows(got) == refRows, s"$what: rows differ")
+      }
+      if (name == "crafted" && rounds == 1 && targetV.nonEmpty) {
+        val pieces = refRows.map(_.getString(0)).toSet
+        assert(pieces("ﬀa") && !pieces("𝔘a"),
+          s"the crafted pair must straddle the cut: $pieces")
+      }
+    }
+  }
+
+  test("job-count guard: an EM round adds at most two jobs (no replay " +
+    "of earlier rounds), train and encode stay at their measured counts") {
+    val docs = documents("sf0.01")
+    val jobs = (1 to 3).map { r =>
+      jobsOf(UnigramLm.train(docs, "text", rounds = r))._2 }
+    info(s"train jobs for rounds 1..3: ${jobs.mkString(", ")}")
+    assert(jobs(1) <= 11, s"train(rounds = 2) took ${jobs(1)} jobs")
+    assert(jobs(1) - jobs(0) <= 2 && jobs(2) - jobs(1) <= 2,
+      s"a round replays earlier lineage: ${jobs.mkString(", ")}")
+    val vocab = UnigramLm.train(docs, "text", rounds = 2)
+    val (enc, encJobs) = jobsOf(UnigramLm.encode(docs, "text", "doc_id",
+      vocab))
+    assert(encJobs == 0, s"building encode took $encJobs jobs")
+    val (_, countJobs) = jobsOf(enc.count())
+    info(s"encode + count jobs: $countJobs")
+    assert(countJobs <= 2, s"encode + count took $countJobs jobs")
   }
 
   test("train: coverage is total (every corpus char survives as a " +

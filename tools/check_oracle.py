@@ -68,6 +68,11 @@ def main(outdir, sfdir):
             print(f"ok   {name} ({len(gr)} rows)")
             n_ok += 1
     print(f"== {n_ok} ok, {n_bad} failed ==")
+    if n_ok + n_bad == 0:
+        # an empty oracle_sql.json (e.g. a Verify name filter that
+        # matched nothing) compared nothing: that is not a pass
+        print("FAIL: no queries compared")
+        return 1
     return 1 if n_bad else 0
 
 
