@@ -20,6 +20,13 @@ object StretchQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** The row count an index recorded in `_ROWS` — the exhaustive
+    * shortlist length of the full-probe gates, read without a job.
+    */
+  private def indexRows(s: SparkSession, idx: String): Int =
+    Ivf.indexRowCount(s, idx)
+      .getOrElse(sys.error(s"index at $idx has no _ROWS")).toInt
+
   /** Run `body` under the at-scale shuffle layout (no broadcast
     * joins, no AQE partition coalescing), restoring the session confs
     * after. Gates that must exercise the multi-file-per-partition
@@ -1844,7 +1851,7 @@ object StretchQueries {
     // q_v_topk_mrl slices the full vector per row — FLOP savings but
     // the scan still reads every float; here the prefix persists as
     // its own column at index-build time and the shortlist scan's
-    // ReadSchema never carries the float vector (PlanQualitySpec
+    // ReadSchema never carries the float vector (IvfSpec
     // pin), the IO saving that matters at 100 TB. Full probe +
     // exhaustive rescore ⇒ brute force, q_v_topk's oracle
     "q_v_topk_mrl_idx" -> ((s, dir) => {
@@ -1853,10 +1860,9 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndexMrl(emb, s"$dir/embeddings.parquet", scratch,
         k = 4, mrlDims = 4, iters = 2)
-      Ivf.searchIndexMrl(s, scratch, emb.filter(col("vec_id") < 16),
-        k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        shortlist = Ivf.Shortlist.Mrl(indexRows(s, scratch)))
     }),
 
     // incremental growth on the MRL artifact: build on HALF, append
@@ -1875,10 +1881,8 @@ object StretchQueries {
       Ivf.writeIndex(half0, Ivf.train(half0, k = 4, iters = 2), idx,
         mrlDims = 4)
       Ivf.appendToIndex(half1, idx)
-      Ivf.searchIndexMrl(s, idx, emb.filter(col("vec_id") < 16),
-        k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, idx)
-          .getOrElse(sys.error(s"index at $idx has no _ROWS")).toInt)
+      Ivf.searchIndex(s, idx, emb.filter(col("vec_id") < 16), k = 5, nprobe = 4,
+        shortlist = Ivf.Shortlist.Mrl(indexRows(s, idx)))
     }),
 
     // filtered MRL search — the encoding family's last missing _flt
@@ -1892,11 +1896,10 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndexMrl(emb, s"$dir/embeddings.parquet", scratch,
         k = 4, mrlDims = 4, iters = 2)
-      Ivf.searchIndexMrlWhere(s, scratch,
+      Ivf.searchIndex(s, scratch,
         emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+        k = 5, nprobe = 4, predicate = Some(col("label") < 5),
+        shortlist = Ivf.Shortlist.Mrl(indexRows(s, scratch)))
     }),
 
     // filtered ANN (the vector-DB "filtered search"): a static
@@ -1912,8 +1915,9 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndex(emb, s"$dir/embeddings.parquet", scratch, k = 4,
         iters = 2)
-      Ivf.searchIndexWhere(s, scratch, emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        predicate = Some(col("label") < 5))
     }),
 
     // per-query filtered ANN: the INDEXED arm of the positive miner
@@ -1934,7 +1938,7 @@ object StretchQueries {
     // FILTERED graph ANN: attribute-carrying HNSW index (label stored
     // on the graph rows), predicate evaluated scan-side, traversal
     // routes THROUGH failing nodes while only passing ones spend the
-    // result budget (ShardGraph.searchWhere — pre-filtering the graph
+    // result budget (ShardGraph.search's pass — pre-filtering the graph
     // disconnects it exactly when the predicate is selective, the
     // ACORN problem; post-filtering starves k). Own scratch path: the
     // attrs fingerprint differs from the plain index and sharing the
@@ -1947,8 +1951,9 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Hnsw.ensureIndex(emb, s"$dir/embeddings.parquet", scratch,
         shards = 4, m = 8, efC = 32, attrCols = Seq("label"))
-      Hnsw.searchIndexWhere(s, scratch, emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4, ef = 0)
+      Hnsw.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4, ef = 0,
+        predicate = Some(col("label") < 5))
     }),
 
     // graph ANN (sharded HNSW): build-if-stale persisted index, cold
@@ -2180,9 +2185,8 @@ object StretchQueries {
         graft.streaming.StreamingVectorIndex.upsertStream(s, feed, idx,
           ckpt, opCol = Some("op"))
       }
-      Ivf.searchIndexPqResidual(s, idx, latestQ, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, idx)
-          .getOrElse(sys.error(s"index at $idx has no _ROWS")).toInt)
+      Ivf.searchIndex(s, idx, latestQ, k = 5, nprobe = 4,
+        shortlist = Ivf.Shortlist.PqResidual(indexRows(s, idx)))
     }),
 
     // CDC into the MRL stored-prefix artifact (round-16; the
@@ -2206,9 +2210,8 @@ object StretchQueries {
         graft.streaming.StreamingVectorIndex.upsertStream(s, feed, idx,
           ckpt, opCol = Some("op"))
       }
-      Ivf.searchIndexMrl(s, idx, latestQ, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, idx)
-          .getOrElse(sys.error(s"index at $idx has no _ROWS")).toInt)
+      Ivf.searchIndex(s, idx, latestQ, k = 5, nprobe = 4,
+        shortlist = Ivf.Shortlist.Mrl(indexRows(s, idx)))
     }),
 
     // CDC into the int8-quantized artifact: appendToIndex re-derives
@@ -2232,9 +2235,8 @@ object StretchQueries {
         graft.streaming.StreamingVectorIndex.upsertStream(s, feed, idx,
           ckpt, opCol = Some("op"))
       }
-      Ivf.searchIndexCompressed(s, idx, latestQ, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, idx)
-          .getOrElse(sys.error(s"index at $idx has no _ROWS")).toInt)
+      Ivf.searchIndex(s, idx, latestQ, k = 5, nprobe = 4,
+        shortlist = Ivf.Shortlist.Sq8(indexRows(s, idx)))
     }),
 
     // the sign-packed twin: the b-column APPEND branch under the same
@@ -2254,9 +2256,8 @@ object StretchQueries {
         graft.streaming.StreamingVectorIndex.upsertStream(s, feed, idx,
           ckpt, opCol = Some("op"))
       }
-      Ivf.searchIndexBin(s, idx, latestQ, k = 5, nprobe = 4,
-        shortlistK = Ivf.indexRowCount(s, idx)
-          .getOrElse(sys.error(s"index at $idx has no _ROWS")).toInt)
+      Ivf.searchIndex(s, idx, latestQ, k = 5, nprobe = 4,
+        shortlist = Ivf.Shortlist.Binary(indexRows(s, idx)))
     }),
 
     // the maintenance autopilot COMPOSED with the streaming write
@@ -2463,8 +2464,9 @@ object StretchQueries {
       val hot = Hnsw.hottestShard(s, idx)
         .getOrElse(sys.error(s"empty index at $idx"))
       Hnsw.splitShard(s, idx, hot)
-      Hnsw.searchIndexWhere(s, idx, emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 5, ef = 0)
+      Hnsw.searchIndex(s, idx, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 5, ef = 0,
+        predicate = Some(col("label") < 5))
     }),
 
     // the HNSW maintenance loop as a DEPLOYMENT gate: build on half
@@ -2541,8 +2543,9 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndex(emb, s"$dir/embeddings.parquet", scratch, k = 4,
         iters = 2, binarize = true)
-      Ivf.searchIndexBin(s, scratch, emb.filter(col("vec_id") < 16),
-        k = 5, nprobe = 4, shortlistK = 64)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        shortlist = Ivf.Shortlist.Binary(64))
     }),
 
     // filtered ANN on the COMPRESSED arm: the label predicate applies
@@ -2557,8 +2560,10 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndex(emb, s"$dir/embeddings.parquet", scratch, k = 4,
         iters = 2, binarize = true)
-      Ivf.searchIndexBinWhere(s, scratch, emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4, shortlistK = 64)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        predicate = Some(col("label") < 5),
+          shortlist = Ivf.Shortlist.Binary(64))
     }),
 
     "q_v_topk_ivf_c" -> ((s, dir) => {
@@ -2573,10 +2578,9 @@ object StretchQueries {
       // the corpus outgrows it). The count comes from the index's own
       // _ROWS metadata, recorded at build time — never a per-execution
       // count job inside the timed search (round-6 VERDICT #1)
-      Ivf.searchIndexCompressed(s, scratch, emb.filter(col("vec_id") < 16),
-        k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        shortlist = Ivf.Shortlist.Sq8(indexRows(s, scratch)))
     }),
 
     // filtered ANN on the int8 arm — the last encoding to get a
@@ -2589,11 +2593,10 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndex(emb, s"$dir/embeddings.parquet", scratch, k = 4,
         iters = 2, quantize = true)
-      Ivf.searchIndexCompressedWhere(s, scratch,
+      Ivf.searchIndex(s, scratch,
         emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+        k = 5, nprobe = 4, predicate = Some(col("label") < 5),
+        shortlist = Ivf.Shortlist.Sq8(indexRows(s, scratch)))
     }),
 
     // IVF-PQ: candidates from probed clusters, scored from m-byte PQ
@@ -2643,10 +2646,9 @@ object StretchQueries {
         "/graft_pq_residx_q_" + graft.engine.Scratch.encode(dir)
       Ivf.ensureIndexPqResidual(emb, s"$dir/embeddings.parquet", scratch,
         k = 4, iters = 2, pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
-      Ivf.searchIndexPqResidual(s, scratch, emb.filter(col("vec_id") < 16),
-        k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        shortlist = Ivf.Shortlist.PqResidual(indexRows(s, scratch)))
     }),
 
     "q_v_topk_pq_idx" -> ((s, dir) => {
@@ -2655,10 +2657,9 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndexPq(emb, s"$dir/embeddings.parquet", scratch, k = 4,
         iters = 2, pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
-      Ivf.searchIndexPq(s, scratch, emb.filter(col("vec_id") < 16),
-        k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16), k = 5,
+        nprobe = 4,
+        shortlist = Ivf.Shortlist.Pq(indexRows(s, scratch)))
     }),
 
     // filtered ANN on the PQ arm — the last index type to get a
@@ -2675,10 +2676,9 @@ object StretchQueries {
         graft.engine.Scratch.encode(dir)
       Ivf.ensureIndexPq(emb, s"$dir/embeddings.parquet", scratch, k = 4,
         iters = 2, pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
-      Ivf.searchIndexPqWhere(s, scratch, emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+      Ivf.searchIndex(s, scratch, emb.filter(col("vec_id") < 16),
+        k = 5, nprobe = 4, predicate = Some(col("label") < 5),
+        shortlist = Ivf.Shortlist.Pq(indexRows(s, scratch)))
     }),
 
     // the residual-encoded twin: same pushed predicate, same
@@ -2689,11 +2689,10 @@ object StretchQueries {
         "/graft_pq_residx_q_" + graft.engine.Scratch.encode(dir)
       Ivf.ensureIndexPqResidual(emb, s"$dir/embeddings.parquet", scratch,
         k = 4, iters = 2, pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
-      Ivf.searchIndexPqResidualWhere(s, scratch,
+      Ivf.searchIndex(s, scratch,
         emb.filter(col("vec_id") < 16),
-        predicate = col("label") < 5, k = 5, nprobe = 4,
-        rescoreK = Ivf.indexRowCount(s, scratch)
-          .getOrElse(sys.error(s"index at $scratch has no _ROWS")).toInt)
+        k = 5, nprobe = 4, predicate = Some(col("label") < 5),
+        shortlist = Ivf.Shortlist.PqResidual(indexRows(s, scratch)))
     }),
 
     // LSH top-k in the probe-all-buckets exhaustive mode (maxHamming

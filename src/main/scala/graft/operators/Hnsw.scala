@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.NativeExpressions.{cosine, nearestCentroids}
@@ -113,11 +113,20 @@ object Hnsw {
       s1 > s2 || (s1 == s2 && ids(i1) < ids(i2))
 
     /** Classic layer search from `eps`: bounded best-first expansion,
-      * result = up to `ef` best visited (every visited node when
-      * `ef >= n` — the exhaustive mode's guarantee).
+      * result = up to `ef` best visited nodes passing `pass` (every
+      * passing visited node when `ef >= n` — the exhaustive mode's
+      * guarantee).
+      *
+      * FILTERED search routes through EVERY node: a failing node stays
+      * a stepping stone (pre-filtering the graph would disconnect it
+      * exactly when the predicate is selective, the failure mode
+      * ACORN-style filtered ANN exists to avoid), but only passing
+      * nodes are admitted to the result set, so `ef` budgets PASSING
+      * results.
       */
     private def searchLayer(q: Array[Float], qNorm: Double,
-                            eps: Seq[Int], ef: Int, level: Int)
+                            eps: Seq[Int], ef: Int, level: Int,
+                            pass: Int => Boolean = _ => true)
         : Array[(Double, Int)] = {
       val visited = new java.util.BitSet(n)
       // candidates: best first. results: worst first (for eviction).
@@ -129,13 +138,19 @@ object Hnsw {
         if (!visited.get(e)) {
           visited.set(e)
           val s = simTo(e, q, qNorm)
-          cand.enqueue((s, e)); res.enqueue((s, e))
-          if (res.size > ef) res.dequeue(): Unit
+          cand.enqueue((s, e))
+          if (pass(e)) {
+            res.enqueue((s, e))
+            if (res.size > ef) res.dequeue(): Unit
+          }
         }
       }
       while (cand.nonEmpty) {
         val (cs, c) = cand.dequeue()
         val worst = if (res.isEmpty) Double.NegativeInfinity else res.head._1
+        // the frontier cutoff only applies once the PASSING budget is
+        // met: with fewer than ef passing results every reachable
+        // node is still a potential route to one
         if (res.size >= ef && !better(cs, c, worst, res.head._2)) {
           cand.clear() // every remaining candidate is no better
         } else {
@@ -143,10 +158,15 @@ object Hnsw {
             if (!visited.get(nb)) {
               visited.set(nb)
               val s = simTo(nb, q, qNorm)
+              // expansion admits every unvisited node (routability);
+              // the result heap admits only passing ones
               if (res.size < ef ||
                   better(s, nb, res.head._1, res.head._2)) {
-                cand.enqueue((s, nb)); res.enqueue((s, nb))
-                if (res.size > ef) res.dequeue(): Unit
+                cand.enqueue((s, nb))
+                if (pass(nb)) {
+                  res.enqueue((s, nb))
+                  if (res.size > ef) res.dequeue(): Unit
+                }
               }
             }
           }
@@ -260,9 +280,14 @@ object Hnsw {
     }
 
     /** Candidate ids for `q`: descend levels greedily, then layer-0
-      * search with `ef` (`ef <= 0` → unbounded = exhaustive).
+      * search with `ef` (`ef <= 0` → unbounded = exhaustive), admitting
+      * only nodes passing `pass` to the result. Unbounded search visits
+      * every node reachable from the entry — by repair's guarantee,
+      * every node — so exhaustive filtered search is provably exact and
+      * shares a brute-force oracle over the filtered slice.
       */
-    def search(q: Array[Float], ef: Int): Array[Long] = {
+    def search(q: Array[Float], ef: Int,
+               pass: Int => Boolean = _ => true): Array[Long] = {
       if (n == 0 || entry < 0) return Array.empty
       var qsq = 0.0
       var j = 0
@@ -279,75 +304,7 @@ object Hnsw {
       // tie-heavy clump pruned itself into a 9-node sink). With the
       // entry seeded, unbounded search visits everything reachable
       // from the entry = everything, by repair's guarantee.
-      searchLayer(q, qn, Seq(ep, entry), effEf, 0).map(t => ids(t._2))
-    }
-
-    /** FILTERED candidate ids: graph traversal routes through EVERY
-      * node (a failing node stays a stepping stone — pre-filtering
-      * the graph would disconnect it exactly when the predicate is
-      * selective, the failure mode ACORN-style filtered ANN exists
-      * to avoid), but only nodes passing `pass` are admitted to the
-      * result set, and `ef` budgets PASSING results. `ef <= 0` →
-      * unbounded: every passing node reachable from the entry — which
-      * by repair's guarantee is every passing node, so exhaustive
-      * filtered search is provably exact and shares a brute-force
-      * oracle over the filtered slice.
-      */
-    def searchWhere(q: Array[Float], ef: Int,
-                    pass: Int => Boolean): Array[Long] = {
-      if (n == 0 || entry < 0) return Array.empty
-      var qsq = 0.0
-      var j = 0
-      while (j < q.length) { qsq += q(j).toDouble * q(j).toDouble; j += 1 }
-      val qn = math.sqrt(qsq)
-      var ep = entry
-      var lev = levels(entry)
-      while (lev > 0) { ep = greedyStep(q, qn, ep, lev); lev -= 1 }
-      val effEf = if (ef <= 0) n else ef
-      val visited = new java.util.BitSet(n)
-      val cand = new scala.collection.mutable.PriorityQueue[(Double, Int)]()(
-        Ordering.by[(Double, Int), (Double, Long)](t => (t._1, -ids(t._2))))
-      val res = new scala.collection.mutable.PriorityQueue[(Double, Int)]()(
-        Ordering.by[(Double, Int), (Double, Long)](t => (-t._1, ids(t._2))))
-      Seq(ep, entry).foreach { e =>
-        if (!visited.get(e)) {
-          visited.set(e)
-          val s = simTo(e, q, qn)
-          cand.enqueue((s, e))
-          if (pass(e)) {
-            res.enqueue((s, e))
-            if (res.size > effEf) res.dequeue(): Unit
-          }
-        }
-      }
-      while (cand.nonEmpty) {
-        val (cs, c) = cand.dequeue()
-        val worst = if (res.isEmpty) Double.NegativeInfinity else res.head._1
-        // the frontier cutoff only applies once the PASSING budget is
-        // met: with fewer than ef passing results every reachable
-        // node is still a potential route to one
-        if (res.size >= effEf && !better(cs, c, worst, res.head._2)) {
-          cand.clear()
-        } else {
-          adj(c)(0).foreach { nb =>
-            if (!visited.get(nb)) {
-              visited.set(nb)
-              val s = simTo(nb, q, qn)
-              // expansion admits every unvisited node (routability);
-              // the result heap admits only passing ones
-              if (res.size < effEf ||
-                  better(s, nb, res.head._1, res.head._2)) {
-                cand.enqueue((s, nb))
-                if (pass(nb)) {
-                  res.enqueue((s, nb))
-                  if (res.size > effEf) res.dequeue(): Unit
-                }
-              }
-            }
-          }
-        }
-      }
-      res.dequeueAll.reverse.toArray.map(t => ids(t._2))
+      searchLayer(q, qn, Seq(ep, entry), effEf, 0, pass).map(t => ids(t._2))
     }
   }
 
@@ -1259,12 +1216,27 @@ object Hnsw {
     * the probed shards (the full-probe oracle mode). Queries are
     * small by the same contract as every ANN entry point here: they
     * broadcast to the shards.
+    *
+    * `predicate` is FILTERED graph ANN over an attribute-carrying
+    * index (built with `ensureIndex(attrCols = …)`): any Column over
+    * the stored attribute columns, evaluated SCAN-SIDE on the shard
+    * rows. The traversal routes through failing nodes while admitting
+    * only passing ones to the result budget ([[ShardGraph.search]] —
+    * the ACORN-style semantics: pre-filtering the graph would
+    * disconnect it exactly when the predicate is selective; a
+    * post-filter would starve the k budget). `ef` then counts PASSING
+    * candidates, and `ef = 0` is exhaustive over the passing set, so
+    * the full-probe gate shares a brute-force oracle over the filtered
+    * slice. NULL predicate rows fail (SQL boolean semantics). The
+    * rescore scan re-applies the predicate, so it reads only
+    * qualifying vectors.
     */
   def searchIndex(spark: SparkSession, indexPath: String,
                   queries: DataFrame, k: Int, nprobe: Int = 2,
                   ef: Int = 64,
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
+                  vecCol: String = "embedding",
+                  predicate: Option[Column] = None): DataFrame = {
     import spark.implicits._
     val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
     // (q_id, vec, probe clusters) — bounded driver round-trip, then a
@@ -1282,55 +1254,28 @@ object Hnsw {
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
     val bq = spark.sparkContext.broadcast(byShard)
     val probed = byShard.keys.toSeq.sorted
-    val graph = spark.read.parquet(s"$indexPath/graph")
+    def shards = spark.read.parquet(s"$indexPath/graph")
       .filter(col("cluster").isin(probed: _*))
-    val cands = graph
-      .select(col("cluster"), col("vec_id"), col("vec"), col("adj"))
-      .as[(Int, Long, Seq[Float], Seq[Seq[Long]])]
+    val pass = predicate.map(p => coalesce(p.cast("boolean"), lit(false)))
+    val cands = shards
+      .select(col("cluster"), col("vec_id"), col("vec"), col("adj"),
+        pass.getOrElse(lit(true)).as("__pass"))
+      .as[(Int, Long, Seq[Float], Seq[Seq[Long]], Boolean)]
       .groupByKey(_._1)
       .flatMapGroups { (cl, it) =>
         val rows = it.toArray.sortBy(_._2)
-        val ids = rows.map(_._2)
-        val idToIdx = ids.zipWithIndex.toMap
-        // restore the STORED graph (levels from stored adjacency
-        // shape; never rebuilt at search time)
-        val g = new ShardGraph(ids, rows.map(_._3.toArray), m = 16,
-          levelsIn = rows.map(_._4.length - 1))
-        var i = 0
-        while (i < g.n) {
-          val stored = rows(i)._4
-          var l = 0
-          while (l < stored.length) {
-            g.adj(i)(l).clear()
-            g.adj(i)(l) ++= stored(l).iterator.flatMap(idToIdx.get(_))
-            l += 1
-          }
-          i += 1
-        }
-        // entry = (max level, min id) — exactly the node the build's
-        // insertion order left as entry (sorted inserts only replace
-        // the entry on a STRICTLY higher level), so the repair pass's
-        // reachability guarantee holds from here
-        if (g.n > 0) {
-          var best = 0
-          i = 1
-          while (i < g.n) {
-            if (g.levels(i) > g.levels(best)) best = i
-            i += 1
-          }
-          g.entry = best
-        }
+        val g = restoreShard(rows.map(_._2), rows.map(_._3), rows.map(_._4))
+        val passes = rows.map(_._5)
         bq.value.getOrElse(cl, Array.empty[(Long, Array[Float])])
           .iterator.flatMap { case (qid, qv) =>
-            g.search(qv, ef).iterator
+            g.search(qv, ef, i => passes(i)).iterator
               .filter(_ != qid)
               .map(nid => (qid, nid))
           }
       }
       .toDF("q_id", "n_id")
     // exact rescore over the stored vectors — the graph only nominated
-    val corpus = spark.read.parquet(s"$indexPath/graph")
-      .filter(col("cluster").isin(probed: _*))
+    val corpus = pass.fold(shards)(p => shards.filter(p))
       .select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
     val q = queries.select(col(idCol).cast("long").as("q_id"),
       col(vecCol).cast("array<float>").as("q_vec"))
@@ -1342,97 +1287,38 @@ object Hnsw {
     TopK.topKPerKey(scored, k)(spark)
   }
 
-  /** FILTERED graph ANN over an attribute-carrying index (built with
-    * `ensureIndex(attrCols = …)`): the predicate — any Column over the
-    * stored attribute columns — evaluates SCAN-SIDE on the shard rows,
-    * and the traversal routes through failing nodes while admitting
-    * only passing ones to the result budget ([[ShardGraph.searchWhere]]
-    * — the ACORN-style semantics: pre-filtering the graph would
-    * disconnect it exactly when the predicate is selective; a
-    * post-filter would starve the k budget). `ef` counts PASSING
-    * candidates; `ef = 0` is exhaustive over the passing set (repair
-    * guarantees reachability), so the full-probe gate shares a
-    * brute-force oracle over the filtered slice. NULL predicate rows
-    * fail (SQL boolean semantics). The rescore phase re-applies the
-    * predicate at its scan, so it reads only qualifying vectors.
+  /** Restore one shard's STORED graph from its id-sorted rows: levels
+    * from the stored adjacency shape, never rebuilt at search time.
     */
-  def searchIndexWhere(spark: SparkSession, indexPath: String,
-                       queries: DataFrame,
-                       predicate: org.apache.spark.sql.Column,
-                       k: Int, nprobe: Int = 2, ef: Int = 64,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
-    val qRows = queries
-      .select(col(idCol).cast("long").as("q_id"),
-        col(vecCol).cast("array<float>").as("q_vec"),
-        nearestCentroids(col(vecCol), model.centroids, nprobe).as("probe"))
-      .as[(Long, Seq[Float], Seq[Int])]
-      .collect()
-    val byShard: Map[Int, Array[(Long, Array[Float])]] = qRows
-      .flatMap { case (qid, v, probe) =>
-        probe.map(c => (c, (qid, v.toArray)))
+  private def restoreShard(ids: Array[Long], vecs: Array[Seq[Float]],
+                           adj: Array[Seq[Seq[Long]]]): ShardGraph = {
+    val idToIdx = ids.zipWithIndex.toMap
+    val g = new ShardGraph(ids, vecs.map(_.toArray), m = 16,
+      levelsIn = adj.map(_.length - 1))
+    var i = 0
+    while (i < g.n) {
+      val stored = adj(i)
+      var l = 0
+      while (l < stored.length) {
+        g.adj(i)(l).clear()
+        g.adj(i)(l) ++= stored(l).iterator.flatMap(idToIdx.get(_))
+        l += 1
       }
-      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val bq = spark.sparkContext.broadcast(byShard)
-    val probed = byShard.keys.toSeq.sorted
-    val graph = spark.read.parquet(s"$indexPath/graph")
-      .filter(col("cluster").isin(probed: _*))
-    val cands = graph
-      .select(col("cluster"), col("vec_id"), col("vec"), col("adj"),
-        coalesce(predicate.cast("boolean"), lit(false)).as("__pass"))
-      .as[(Int, Long, Seq[Float], Seq[Seq[Long]], Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroups { (cl, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val ids = rows.map(_._2)
-        val idToIdx = ids.zipWithIndex.toMap
-        val pass = rows.map(_._5)
-        val g = new ShardGraph(ids, rows.map(_._3.toArray), m = 16,
-          levelsIn = rows.map(_._4.length - 1))
-        var i = 0
-        while (i < g.n) {
-          val stored = rows(i)._4
-          var l = 0
-          while (l < stored.length) {
-            g.adj(i)(l).clear()
-            g.adj(i)(l) ++= stored(l).iterator.flatMap(idToIdx.get(_))
-            l += 1
-          }
-          i += 1
-        }
-        // entry = (max level, min id), exactly as [[searchIndex]]
-        // restores it — the stored graph is already repaired at build
-        // time, so reachability holds from this entry
-        if (g.n > 0) {
-          var best = 0
-          var i2 = 1
-          while (i2 < g.n) {
-            if (g.levels(i2) > g.levels(best)) best = i2
-            i2 += 1
-          }
-          g.entry = best
-        }
-        bq.value.getOrElse(cl, Array.empty[(Long, Array[Float])])
-          .iterator.flatMap { case (qid, qv) =>
-            g.searchWhere(qv, ef, i => pass(i)).iterator
-              .filter(_ != qid)
-              .map(nid => (qid, nid))
-          }
+      i += 1
+    }
+    // entry = (max level, min id) — exactly the node the build's
+    // insertion order left as entry (sorted inserts only replace
+    // the entry on a STRICTLY higher level), so the repair pass's
+    // reachability guarantee holds from here
+    if (g.n > 0) {
+      var best = 0
+      i = 1
+      while (i < g.n) {
+        if (g.levels(i) > g.levels(best)) best = i
+        i += 1
       }
-      .toDF("q_id", "n_id")
-    val corpus = spark.read.parquet(s"$indexPath/graph")
-      .filter(col("cluster").isin(probed: _*))
-      .filter(coalesce(predicate.cast("boolean"), lit(false)))
-      .select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
-    val q = queries.select(col(idCol).cast("long").as("q_id"),
-      col(vecCol).cast("array<float>").as("q_vec"))
-    val scored = cands
-      .join(corpus, Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosine(col("q_vec"), col("n_vec")).as("cosine"))
-    TopK.topKPerKey(scored, k)(spark)
+      g.entry = best
+    }
+    g
   }
 }

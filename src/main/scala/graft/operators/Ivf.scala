@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -140,17 +140,20 @@ object Ivf {
                  vecCol: String = "embedding"): DataFrame = {
     val c = assign(corpus, model, vecCol)
       .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"), col("cluster"))
-    scoreAndRank(c, queries, model, k, nprobe, idCol, vecCol)
+    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
+      probes(model, nprobe, vecCol))
+    TopK.topKPerKey(pairs(c, q, cosine(col("q_vec"), col("n_vec")),
+      matched = false), k)(c.sparkSession)
   }
 
-  private def scoreAndRank(c: DataFrame, queries: DataFrame, model: IvfModel,
-                           k: Int, nprobe: Int, idCol: String,
-                           vecCol: String,
-                           matchCol: Option[String] = None): DataFrame = {
-    val qCols = Seq(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      explode(nearestCentroids(col(vecCol), model.centroids, nprobe))
-        .as("cluster")) ++ matchCol.map(m => col(m).as("q_match"))
-    val q = queries.select(qCols: _*)
+  /** Each query's `nprobe` nearest cluster ids, one row each. */
+  private def probes(model: IvfModel, nprobe: Int, vecCol: String): Column =
+    explode(nearestCentroids(col(vecCol), model.centroids, nprobe))
+      .as("cluster")
+
+  /** Candidate pairs from the probed clusters, scored by `score`. */
+  private def pairs(c: DataFrame, q: DataFrame, score: Column,
+                    matched: Boolean): DataFrame = {
     // each corpus row carries exactly one cluster id and a query's probe
     // list is distinct, so every (query, candidate) pair joins at most
     // once — scores feed the bounded top-k aggregator directly (the
@@ -163,11 +166,9 @@ object Ivf {
     // spent entirely on qualifying candidates — post-filtering a
     // finished top-k would return < k rows whenever non-matching
     // neighbors crowded the list
-    val matched = matchCol.fold(joined)(_ =>
-      joined.filter(col("n_match") <=> col("q_match")))
-    val scored = matched.select(col("q_id"), col("n_id"),
-      cosine(col("q_vec"), col("n_vec")).as("cosine"))
-    TopK.topKPerKey(scored, k)(c.sparkSession)
+    val kept = if (matched) joined.filter(col("n_match") <=> col("q_match"))
+      else joined
+    kept.select(col("q_id"), col("n_id"), score.as("cosine"))
   }
 
   // ── Index persistence ─────────────────────────────────────────────────
@@ -218,8 +219,8 @@ object Ivf {
     * corpus at `<path>/corpus` partitioned by `cluster` (one posting
     * list per partition directory). With `quantize = true` the corpus
     * also carries the int8 form (`q8` + `q_scale` —
-    * [[graft.functions.VectorFunctions.withQuantizedInt8]]), which
-    * [[searchIndexCompressed]] scans INSTEAD of the float vectors:
+    * [[graft.functions.VectorFunctions.withQuantizedInt8]]), which a
+    * [[Shortlist.Sq8]] search scans INSTEAD of the float vectors:
     * parquet being columnar, the 4×-smaller quantized column is all
     * the shortlist phase reads.
     */
@@ -229,6 +230,38 @@ object Ivf {
                  pq: Option[Pq.PqModel] = None,
                  binarize: Boolean = false,
                  mrlDims: Int = 0): Unit = {
+    val assigned = assign(df, model, vecCol)
+    val q8 = if (quantize)
+      graft.functions.VectorFunctions.withQuantizedInt8(assigned, vecCol)
+    else assigned
+    // sign-packed column for [[Shortlist.Binary]]: ⌈d/64⌉ longs per row
+    // (32× smaller than the float vector) — parquet being columnar,
+    // the binary shortlist phase reads ONLY this
+    val b8 = if (binarize)
+      q8.withColumn("b",
+        graft.functions.NativeExpressions.signPack(col(vecCol)))
+    else q8
+    // Matryoshka stored-prefix column (round-15 VERDICT #3): the
+    // first `mrlDims` components materialized as their OWN column —
+    // parquet being columnar, [[Shortlist.Mrl]]'s shortlist scan
+    // reads dim/mrlDims× fewer vector bytes than the float column,
+    // turning the prefix ladder's FLOP saving into an IO saving
+    val m8 = if (mrlDims > 0)
+      b8.withColumn("mrl", slice(col(vecCol), 1, mrlDims))
+    else b8
+    persistIndex(model, pq, path,
+      pq.map(p => Pq.withCodes(m8, p, vecCol)).getOrElse(m8), mrlDims)
+  }
+
+  /** Write an encoded corpus and every artifact an index build stamps
+    * beside it: centroids, PQ codebooks, `_SCHEMA`, `_MRL_DIMS`,
+    * `_ROWS` and `_ROWS_BASE`. Every build persists through here, so
+    * no encoding can leave one of them out.
+    */
+  private def persistIndex(model: IvfModel, pq: Option[Pq.PqModel],
+                           path: String, out: DataFrame,
+                           mrlDims: Int): Unit = {
+    val spark = out.sparkSession
     // the tiny model artifacts (centroids, PQ codebooks — driver-local
     // matrices) write CONCURRENTLY with the corpus job below: the two
     // writes share nothing, and running the small jobs on a side
@@ -239,29 +272,9 @@ object Ivf {
     // and re-encoded the corpus per query run, the one place the ANN
     // story wasn't the production shape
     val modelWrites = scala.concurrent.Future {
-      saveModel(df.sparkSession, model, s"$path/centroids")
-      pq.foreach(p => Pq.saveModel(df.sparkSession, p, s"$path/pq"))
+      saveModel(spark, model, s"$path/centroids")
+      pq.foreach(p => Pq.saveModel(spark, p, s"$path/pq"))
     }(scala.concurrent.ExecutionContext.global)
-    val assigned = assign(df, model, vecCol)
-    val q8 = if (quantize)
-      graft.functions.VectorFunctions.withQuantizedInt8(assigned, vecCol)
-    else assigned
-    // sign-packed column for [[searchIndexBin]]: ⌈d/64⌉ longs per row
-    // (32× smaller than the float vector) — parquet being columnar,
-    // the binary shortlist phase reads ONLY this
-    val b8 = if (binarize)
-      q8.withColumn("b",
-        graft.functions.NativeExpressions.signPack(col(vecCol)))
-    else q8
-    // Matryoshka stored-prefix column (round-15 VERDICT #3): the
-    // first `mrlDims` components materialized as their OWN column —
-    // parquet being columnar, [[searchIndexMrl]]'s shortlist scan
-    // reads dim/mrlDims× fewer vector bytes than the float column,
-    // turning the prefix ladder's FLOP saving into an IO saving
-    val m8 = if (mrlDims > 0)
-      b8.withColumn("mrl", slice(col(vecCol), 1, mrlDims))
-    else b8
-    val out = pq.map(p => Pq.withCodes(m8, p, vecCol)).getOrElse(m8)
     out.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$path/corpus")
     // join the side-thread writes BEFORE stamping metadata: a caller
@@ -273,17 +286,17 @@ object Ivf {
     // and an index whose every row has been deleted (a legal CDC
     // state — an all-tombstone epoch) has no parquet footer left to
     // infer it from (round-14 ADVICE)
-    writeSchemaFile(df.sparkSession, s"$path/_SCHEMA", out.schema)
+    writeSchemaFile(spark, s"$path/_SCHEMA", out.schema)
     // the prefix width persists beside the schema: appendToIndex must
     // slice its delta identically, and search must slice the QUERY
     // side to the stored width — neither can infer it from a column
     // whose corpus may be empty (all-tombstone CDC state)
     if (mrlDims > 0)
-      writeCountFile(df.sparkSession, s"$path/_MRL_DIMS", mrlDims.toLong)
-    val n = writeRowCount(df.sparkSession, path)
+      writeCountFile(spark, s"$path/_MRL_DIMS", mrlDims.toLong)
+    val n = writeRowCount(spark, path)
     // the BUILD-time count, stamped only here (never by append): the
     // denominator of the drift meter appendedFraction reads
-    writeCountFile(df.sparkSession, s"$path/_ROWS_BASE", n)
+    writeCountFile(spark, s"$path/_ROWS_BASE", n)
   }
 
   /** Incrementally ADD vectors to an existing on-disk index without
@@ -943,8 +956,8 @@ object Ivf {
 
   /** [[ensureIndex]] for the Matryoshka stored-prefix artifact
     * (round-15 VERDICT #3): the corpus persists with the first
-    * `mrlDims` components as their own `mrl` column, so
-    * [[searchIndexMrl]]'s shortlist reads prefix bytes only — the
+    * `mrlDims` components as their own `mrl` column, so a
+    * [[Shortlist.Mrl]] search's shortlist reads prefix bytes only — the
     * q8/binary column discipline applied to the MRL ladder. Same
     * freshness protocol: a changed prefix width at the same path
     * forces a rebuild.
@@ -986,61 +999,202 @@ object Ivf {
       writeIndex(df, model, dir, vecCol, quantize = false, pq = Some(pq))
     }
 
-  /** ANN top-k against a reloaded on-disk index. The queries' probe
-    * set (≤ nprobe·|queries| cluster ids — queries are small by
-    * contract, so this is a bounded driver round-trip like the
-    * centroid matrix itself) becomes an `isin` filter on the partition
-    * column: Spark prunes unprobed partition directories at planning
-    * time and the scan never opens their files.
+  /** Build-and-persist the RESIDUAL-encoded IVF-PQ index (codebooks
+    * trained on centroid residuals — [[Pq.trainResidual]]'s recall
+    * win at the same code size). Same artifact shape and freshness
+    * protocol as [[ensureIndexPq]]; the fingerprint carries
+    * `residual=1`, so switching encodings rebuilds rather than
+    * silently mixing code semantics.
+    */
+  def ensureIndexPqResidual(df: DataFrame, sourcePath: String,
+                            indexPath: String,
+                            k: Int, iters: Int = 3, seed: Long = 42L,
+                            idCol: String = "vec_id",
+                            vecCol: String = "embedding",
+                            pqM: Int = 8, pqK: Int = 16,
+                            pqIters: Int = 8,
+                            pqSampleN: Int = 4096): Unit =
+    graft.engine.Scratch.ensureAt(df.sparkSession, indexPath, sourcePath,
+      fingerprint = s"src=$sourcePath,k=$k,iters=$iters,seed=$seed," +
+        s"idCol=$idCol,vecCol=$vecCol," +
+        s"pqM=$pqM,pqK=$pqK,pqIters=$pqIters,pqSampleN=$pqSampleN," +
+        "residual=1",
+      markerName = "_INDEX_READY") { dir =>
+      val model = train(df, k, iters, seed, idCol, vecCol)
+      val pq = Pq.trainResidual(df, model, pqM, pqK, pqIters, pqSampleN,
+        seed, idCol, vecCol)
+      persistIndex(model, Some(pq), dir,
+        Pq.withResidualCodes(df, model, pq, vecCol), mrlDims = 0)
+    }
+
+  /** How [[searchIndex]] shortlists a stored encoding before the exact
+    * rescore. Every case runs the same pipeline — probe → pruned scan
+    * → predicate → shortlist → exact rescore — and names only the
+    * corpus columns its shortlist scan reads (parquet being columnar,
+    * the scan reads nothing else) and the approximate cosine it ranks
+    * them by. The exact cosine over the float vectors of the
+    * shortlisted ids decides the final order, so an approximate score
+    * can cost a candidate that missed the shortlist but never mis-rank
+    * the answer; full probe + an exhaustive shortlist is therefore
+    * exactly brute force over the (filtered) corpus.
+    *
+    * The encoding is the caller's choice, never read from the index:
+    * the float column is always stored, so an [[Exact]] search over a
+    * quantized or PQ index is legal and tested.
+    */
+  sealed abstract class Shortlist {
+    /** Corpus columns the shortlist scan reads beside `n_id`/`cluster`. */
+    private[Ivf] def scan(ix: Stored): Seq[Column]
+    /** Per-query columns staged before the broadcast, beside `q_id`. */
+    private[Ivf] def query(ix: Stored): Seq[Column]
+    /** Per-(query, probe) columns that need the probed `cluster`. */
+    private[Ivf] def staged(q: DataFrame, ix: Stored): DataFrame = q
+    /** Approximate cosine of one joined (query, candidate) pair. */
+    private[Ivf] def approx(ix: Stored): Column
+    /** Shortlist length per query; None when `approx` is already exact. */
+    private[Ivf] def shortK(k: Int): Option[Int]
+  }
+
+  object Shortlist {
+    import graft.functions.NativeExpressions.{signPack, hammingPacked}
+    import graft.operators.{Pq => Codes}
+
+    /** The float scan: exact cosine over every probed candidate, no
+      * rescore.
+      */
+    case object Exact extends Shortlist {
+      private[Ivf] def scan(ix: Stored) = Seq(col(ix.vecCol).as("n_vec"))
+      private[Ivf] def query(ix: Stored) = Seq(col(ix.vecCol).as("q_vec"))
+      private[Ivf] def approx(ix: Stored) = cosine(col("q_vec"), col("n_vec"))
+      private[Ivf] def shortK(k: Int): Option[Int] = None
+    }
+
+    /** The int8 column of a `quantize = true` index — 1/4 the vector
+      * bytes of the float scan. Cosine is scale-invariant, so
+      * cosine(q8, q_vec) needs no dequantization (FAISS-style
+      * asymmetric scoring: full-precision query against the
+      * compressed corpus; `q_scale` is never read). int8 elements are
+      * exact in float (|q| ≤ 127), so the cast is free.
+      */
+    final case class Sq8(rescoreK: Int = 0) extends Shortlist {
+      private[Ivf] def scan(ix: Stored) =
+        Seq(col("q8").cast("array<float>").as("n_q8"))
+      private[Ivf] def query(ix: Stored) = Seq(col(ix.vecCol).as("q_vec"))
+      private[Ivf] def approx(ix: Stored) = cosine(col("q_vec"), col("n_q8"))
+      private[Ivf] def shortK(k: Int): Option[Int] =
+        Some(Codes.shortlistLength(rescoreK, k))
+    }
+
+    /** The sign-packed column of a `binarize = true` index — ⌈d/64⌉
+      * longs per row, 32× smaller than the float vectors — ranked by
+      * Hamming distance (ties by id), keeping `max(shortlistK, k)` per
+      * query: the production shape of [[SimilaritySearch.binTopK]].
+      * With full probe the pair space equals binTopK's exactly (same
+      * tie-break, same rescore), so the full-probe gate shares
+      * q_v_topk_bin's oracle and the shortlist selection replays in
+      * SQL.
+      */
+    final case class Binary(shortlistK: Int = 64) extends Shortlist {
+      private[Ivf] def scan(ix: Stored) = Seq(col("b").as("nb"))
+      private[Ivf] def query(ix: Stored) =
+        Seq(signPack(col(ix.vecCol)).as("qb"))
+      private[Ivf] def approx(ix: Stored) =
+        (-hammingPacked(col("nb"), col("qb"))).cast("double")
+      private[Ivf] def shortK(k: Int): Option[Int] =
+        Some(math.max(shortlistK, k))
+    }
+
+    /** The m-int `pq_code` column of an [[ensureIndexPq]] index (32×
+      * less vector data than floats at m=8/dim=64), scored by ADC: each
+      * query becomes a lookup table staged before the broadcast, so a
+      * candidate costs m table lookups. The codebooks reload through
+      * the stat-validated cache — never re-trained per query.
+      */
+    final case class Pq(rescoreK: Int = 0) extends Shortlist {
+      private[Ivf] def scan(ix: Stored) = Seq(col("pq_code"), col("pq_norm"))
+      private[Ivf] def query(ix: Stored) =
+        Seq(Codes.adcTable(col(ix.vecCol), ix.pq).as("__t"))
+      private[Ivf] def approx(ix: Stored) = Codes.approxScore(ix.pq)
+      private[Ivf] def shortK(k: Int): Option[Int] =
+        Some(Codes.shortlistLength(rescoreK, k))
+    }
+
+    /** The residual codes of an [[ensureIndexPqResidual]] index:
+      * score = (dot(q, centroid) + ADC(residual)) over the stored exact
+      * norm, [[Pq.topKClusteredResidual]]'s decomposition against the
+      * reloaded models. The centroid dot is one per (query, probe),
+      * computed before the broadcast.
+      */
+    final case class PqResidual(rescoreK: Int = 0) extends Shortlist {
+      private[Ivf] def scan(ix: Stored) = Seq(col("pq_code"), col("pq_norm"))
+      private[Ivf] def query(ix: Stored) =
+        Codes.residualQueryCols(ix.pq, ix.vecCol)
+      override private[Ivf] def staged(q: DataFrame, ix: Stored) =
+        Codes.withCentroidDot(q, ix.model)
+      private[Ivf] def approx(ix: Stored) = Codes.residualScore(ix.pq)
+      private[Ivf] def shortK(k: Int): Option[Int] =
+        Some(Codes.shortlistLength(rescoreK, k))
+    }
+
+    /** The stored Matryoshka prefix of an [[ensureIndexMrl]] index —
+      * the production form of [[SimilaritySearch.topKMatryoshka]],
+      * which slices at the scan and so still reads full vectors. The
+      * shortlist scan reads `(id, mrl, cluster)` only, dim/mrlDims×
+      * fewer vector bytes (IvfSpec "searchIndexMrl: … shortlist scan
+      * reads the stored prefix only"); the query side slices itself to
+      * the stored width (`_MRL_DIMS`, a driver metadata read).
+      */
+    final case class Mrl(rescoreK: Int = 0) extends Shortlist {
+      private[Ivf] def scan(ix: Stored) = Seq(col("mrl"))
+      private[Ivf] def query(ix: Stored) =
+        Seq(slice(col(ix.vecCol), 1, ix.mrlDims).as("q_pre"))
+      private[Ivf] def approx(ix: Stored) = cosine(col("q_pre"), col("mrl"))
+      private[Ivf] def shortK(k: Int): Option[Int] =
+        Some(Codes.shortlistLength(rescoreK, k))
+    }
+  }
+
+  /** What a [[Shortlist]] reads from the index it searches: the
+    * centroids, and — loaded only by the encodings that use them — the
+    * PQ codebooks and the stored MRL prefix width. Both models come
+    * through the stat-validated caches: one FS listing, no Spark job.
+    */
+  private[Ivf] final class Stored(spark: SparkSession, path: String,
+                                  val vecCol: String) {
+    val model: IvfModel = loadModelCached(spark, s"$path/centroids")
+    lazy val pq: Pq.PqModel = Pq.loadModelCached(spark, s"$path/pq")
+    lazy val mrlDims: Int = readCountFile(spark, s"$path/_MRL_DIMS")
+      .getOrElse(sys.error(s"no _MRL_DIMS at $path — not an " +
+        "ensureIndexMrl artifact")).toInt
+  }
+
+  /** ANN top-k against a reloaded on-disk index, over any stored
+    * encoding (`shortlist`, default the float scan).
+    *
+    * The queries' probe set (≤ nprobe·|queries| cluster ids — queries
+    * are small by contract, so this is a bounded driver round-trip
+    * like the centroid matrix itself) becomes an `isin` filter on the
+    * partition column: Spark prunes unprobed partition directories at
+    * planning time and the scan never opens their files.
+    *
+    * `predicate` is filtered ANN (the vector-DB "filtered search"): a
+    * static condition over whatever attribute columns [[writeIndex]]
+    * stored applies AT THE SHORTLIST SCAN, stacked on the partition
+    * pruning. It is a plain Filter, so NULL rows fail and Spark pushes
+    * it into the reader (`PushedFilters`, pinned in IvfSpec); the
+    * rescore scan reads only qualifying floats. Post-filtering a
+    * finished top-k instead would return fewer than k rows whenever
+    * non-matching neighbors crowd the list; here the whole budget
+    * lands on qualifying candidates.
     */
   def searchIndex(spark: SparkSession, indexPath: String,
                   queries: DataFrame, k: Int, nprobe: Int = 2,
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val c = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"), col("cluster"))
-    scoreAndRank(c, queries, model, k, nprobe, idCol, vecCol)
-  }
-
-  /** Filtered ANN over a persisted index (the vector-DB "filtered
-    * search" shape): a STATIC attribute predicate — over whatever
-    * extra columns [[writeIndex]] stored alongside the vectors —
-    * applies AT THE INDEX SCAN, stacked on the nprobe partition
-    * pruning. Because the predicate is a plain column comparison on a
-    * parquet scan, Spark pushes it into the reader (`PushedFilters`,
-    * pinned in IvfSpec), so at 100 TB the scan skips non-qualifying
-    * row groups via column statistics instead of materializing them.
-    *
-    * Contrast with post-filtering an UNFILTERED top-k: that returns
-    * fewer than k valid rows whenever non-matching neighbors crowd the
-    * list (and zero rows for a selective predicate); here every scored
-    * candidate already qualifies, so the full k budget lands on the
-    * filtered set. With full probe (nprobe ≥ number of clusters) the
-    * result is exactly brute-force-over-the-filtered-corpus, which is
-    * what the driver gate's oracle replays.
-    */
-  def searchIndexWhere(spark: SparkSession, indexPath: String,
-                       queries: DataFrame, predicate: org.apache.spark.sql.Column,
-                       k: Int, nprobe: Int = 2,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val c = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-      .filter(predicate)
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"), col("cluster"))
-    scoreAndRank(c, queries, model, k, nprobe, idCol, vecCol)
-  }
+                  vecCol: String = "embedding",
+                  predicate: Option[Column] = None,
+                  shortlist: Shortlist = Shortlist.Exact): DataFrame =
+    search(spark, indexPath, queries, k, nprobe, idCol, vecCol, predicate,
+      shortlist, matchCol = None)
 
   /** Per-query filtered ANN over a persisted index: each query matches
     * only candidates whose `matchCol` equals its own (the indexed arm
@@ -1067,11 +1221,6 @@ object Ivf {
                        k: Int, nprobe: Int = 2,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
     val qVals = queries.select(col(matchCol)).distinct().collect()
       .map(_.get(0)).toIndexedSeq
     val (nonNull, hasNull) = (qVals.filter(_ != null), qVals.contains(null))
@@ -1080,444 +1229,38 @@ object Ivf {
     val attrFilter =
       if (hasNull) col(matchCol).isin(nonNull: _*) || col(matchCol).isNull
       else col(matchCol).isin(nonNull: _*)
-    val c = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-      .filter(attrFilter)
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-        col(matchCol).as("n_match"), col("cluster"))
-    scoreAndRank(c, queries, model, k, nprobe, idCol, vecCol,
-      matchCol = Some(matchCol))
+    search(spark, indexPath, queries, k, nprobe, idCol, vecCol,
+      Some(attrFilter), Shortlist.Exact, Some(matchCol))
   }
 
-  /** IVF-PQ search against an [[ensureIndexPq]] artifact, all from a
-    * cold reload — the full FAISS-IVFPQ production shape:
-    *
-    *  1. Codebooks + centroids reload through the stat-validated
-    *     caches (one FS listing each, no Spark job, no re-training).
-    *  2. SHORTLIST from the stored m-int `pq_code` column only (32×
-    *     less vector data than floats at m=8/dim=64): each query
-    *     becomes an ADC lookup table staged before the broadcast, so
-    *     scoring a candidate is m table lookups; partition pruning
-    *     limits the scan to the nprobe probed posting lists.
-    *  3. RESCORE exact cosine over the float vectors of the
-    *     `rescoreK`-per-query shortlist only (semi-join on ids).
+  /** The one search pipeline: probe → pruned scan → predicate →
+    * shortlist → exact rescore (skipped when the shortlist score is
+    * already exact).
     */
-  def searchIndexPq(spark: SparkSession, indexPath: String,
-                    queries: DataFrame, k: Int, nprobe: Int = 2,
-                    rescoreK: Int = 0,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame =
-    searchIndexPqImpl(spark, indexPath, queries, None, k, nprobe,
-      rescoreK, idCol, vecCol)
-
-  /** [[searchIndexPq]] with a static attribute predicate — filtered
-    * ANN on the PQ arm, closing the asymmetry with
-    * [[searchIndexWhere]]/[[searchIndexBinWhere]]/Hnsw: the predicate
-    * applies AT THE CODE-COLUMN SHORTLIST SCAN (a plain Filter over
-    * whatever attribute columns [[writeIndex]] stored — NULL
-    * predicate rows fail, and unlike a coalesce wrapper the plain
-    * form reaches `PushedFilters`), stacked on the cluster partition
-    * pruning. The whole ADC shortlist budget therefore lands on
-    * qualifying candidates and the rescore reads only qualifying
-    * floats; post-filtering a finished neighbor list would starve k
-    * by the predicate's selectivity. Full probe + exhaustive
-    * shortlist ⇒ exactly brute-force-over-the-filtered-corpus, the
-    * relation the driver gate's oracle replays.
-    */
-  def searchIndexPqWhere(spark: SparkSession, indexPath: String,
-                         queries: DataFrame,
-                         predicate: org.apache.spark.sql.Column,
-                         k: Int, nprobe: Int = 2,
-                         rescoreK: Int = 0,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame =
-    searchIndexPqImpl(spark, indexPath, queries, Some(predicate), k,
-      nprobe, rescoreK, idCol, vecCol)
-
-  private def searchIndexPqImpl(spark: SparkSession, indexPath: String,
-                    queries: DataFrame,
-                    predicate: Option[org.apache.spark.sql.Column],
-                    k: Int, nprobe: Int,
-                    rescoreK: Int,
-                    idCol: String,
-                    vecCol: String): DataFrame = {
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val pq = Pq.loadModelCached(spark, s"$indexPath/pq")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val corpusAll = spark.read.parquet(s"$indexPath/corpus")
+  private def search(spark: SparkSession, indexPath: String,
+                     queries: DataFrame, k: Int, nprobe: Int,
+                     idCol: String, vecCol: String,
+                     predicate: Option[Column], shortlist: Shortlist,
+                     matchCol: Option[String]): DataFrame = {
+    val ix = new Stored(spark, indexPath, vecCol)
+    val probe = probes(ix.model, nprobe, vecCol)
+    // built before the probe job: an encoding whose model is missing
+    // fails here, without spending the probe
+    val nCols = (col(idCol).as("n_id") +: shortlist.scan(ix)) ++
+      matchCol.map(m => col(m).as("n_match")) :+ col("cluster")
+    val qCols = (col(idCol).as("q_id") +: shortlist.query(ix) :+ probe) ++
+      matchCol.map(m => col(m).as("q_match"))
+    val probed = queries.select(probe).distinct().collect().map(_.getInt(0))
+    val pruned = spark.read.parquet(s"$indexPath/corpus")
       .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-    val corpus = predicate.fold(corpusAll)(p => corpusAll.filter(p))
-    val cq = corpus.select(col(idCol).as("n_id"), col("pq_code"),
-      col("pq_norm"), col("cluster"))
-    val q = queries.select(col(idCol).as("q_id"),
-      Pq.adcTable(col(vecCol), pq).as("__t"),
-      explode(nearestCentroids(col(vecCol), model.centroids, nprobe))
-        .as("cluster"))
-    val cands = cq.join(broadcast(q), Seq("cluster"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"), Pq.approxScore(pq))
-    Pq.rescoreExact(cands, corpus, queries, k, shortK, idCol, vecCol)
-  }
-
-  /** Build-and-persist the RESIDUAL-encoded IVF-PQ index (codebooks
-    * trained on centroid residuals — [[Pq.trainResidual]]'s recall
-    * win at the same code size). Same artifact shape and freshness
-    * protocol as [[ensureIndexPq]]; the fingerprint carries
-    * `residual=1`, so switching encodings rebuilds rather than
-    * silently mixing code semantics.
-    */
-  def ensureIndexPqResidual(df: DataFrame, sourcePath: String,
-                            indexPath: String,
-                            k: Int, iters: Int = 3, seed: Long = 42L,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding",
-                            pqM: Int = 8, pqK: Int = 16,
-                            pqIters: Int = 8,
-                            pqSampleN: Int = 4096): Unit =
-    graft.engine.Scratch.ensureAt(df.sparkSession, indexPath, sourcePath,
-      fingerprint = s"src=$sourcePath,k=$k,iters=$iters,seed=$seed," +
-        s"idCol=$idCol,vecCol=$vecCol," +
-        s"pqM=$pqM,pqK=$pqK,pqIters=$pqIters,pqSampleN=$pqSampleN," +
-        "residual=1",
-      markerName = "_INDEX_READY") { dir =>
-      val spark = df.sparkSession
-      val model = train(df, k, iters, seed, idCol, vecCol)
-      val pq = Pq.trainResidual(df, model, pqM, pqK, pqIters, pqSampleN,
-        seed, idCol, vecCol)
-      // tiny model artifacts write concurrently with the corpus job —
-      // the writeIndex discipline (guide §2.6)
-      val modelWrites = scala.concurrent.Future {
-        saveModel(spark, model, s"$dir/centroids")
-        Pq.saveModel(spark, pq, s"$dir/pq")
-      }(scala.concurrent.ExecutionContext.global)
-      Pq.withResidualCodes(df, model, pq, vecCol)
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(s"$dir/corpus")
-      scala.concurrent.Await.result(modelWrites,
-        scala.concurrent.duration.Duration.Inf)
-      val n = writeRowCount(spark, dir)
-      writeCountFile(spark, s"$dir/_ROWS_BASE", n)
+    val corpus = predicate.fold(pruned)(p => pruned.filter(p))
+    val scored = pairs(corpus.select(nCols: _*),
+      shortlist.staged(queries.select(qCols: _*), ix),
+      shortlist.approx(ix), matched = matchCol.isDefined)
+    shortlist.shortK(k) match {
+      case None => TopK.topKPerKey(scored, k)(spark)
+      case Some(n) =>
+        Pq.rescoreExact(scored, corpus, queries, k, n, idCol, vecCol)
     }
-
-  /** Search an [[ensureIndexPqResidual]] artifact cold: probe →
-    * residual-ADC shortlist (score = dot(q, centroid) + ADC(residual)
-    * over the stored exact norm, [[Pq.topKClusteredResidual]]'s
-    * decomposition against the RELOADED models) → exact rescore of
-    * the shortlist only.
-    */
-  def searchIndexPqResidual(spark: SparkSession, indexPath: String,
-                            queries: DataFrame, k: Int, nprobe: Int = 2,
-                            rescoreK: Int = 0,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame =
-    searchIndexPqResidualImpl(spark, indexPath, queries, None, k,
-      nprobe, rescoreK, idCol, vecCol)
-
-  /** [[searchIndexPqResidual]] with a static attribute predicate —
-    * the residual-encoded twin of [[searchIndexPqWhere]]: same
-    * plain-Filter pushdown at the code-column scan, same
-    * full-probe-is-exact contract over the filtered corpus.
-    */
-  def searchIndexPqResidualWhere(spark: SparkSession, indexPath: String,
-                                 queries: DataFrame,
-                                 predicate: org.apache.spark.sql.Column,
-                                 k: Int, nprobe: Int = 2,
-                                 rescoreK: Int = 0,
-                                 idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): DataFrame =
-    searchIndexPqResidualImpl(spark, indexPath, queries,
-      Some(predicate), k, nprobe, rescoreK, idCol, vecCol)
-
-  private def searchIndexPqResidualImpl(spark: SparkSession,
-                            indexPath: String,
-                            queries: DataFrame,
-                            predicate: Option[org.apache.spark.sql.Column],
-                            k: Int, nprobe: Int,
-                            rescoreK: Int,
-                            idCol: String,
-                            vecCol: String): DataFrame = {
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val pq = Pq.loadModelCached(spark, s"$indexPath/pq")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val corpusAll = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-    val corpus = predicate.fold(corpusAll)(p => corpusAll.filter(p))
-    val cq = corpus.select(col(idCol).as("n_id"), col("pq_code"),
-      col("pq_norm"), col("cluster"))
-    // same shortlist stage as the in-memory path — one implementation
-    // ([[Pq.residualCandidates]]), two corpus sources
-    val cands = Pq.residualCandidates(cq, queries, model, pq, nprobe,
-      idCol, vecCol)
-    Pq.rescoreExact(cands, corpus, queries, k, shortK, idCol, vecCol)
-  }
-
-  /** Matryoshka search against an [[ensureIndexMrl]] artifact — the
-    * production form of [[SimilaritySearch.topKMatryoshka]], whose
-    * own scaladoc notes that slicing at the scan saves FLOPs but
-    * still READS full vectors:
-    *
-    *  1. SHORTLIST over the stored `mrl` prefix column only — the
-    *     scan's ReadSchema carries `(id, mrl, cluster)` and never the
-    *     float vector (pinned in PlanQualitySpec), so at 100 TB the
-    *     hot scan is dim/mrlDims× smaller; partition pruning limits
-    *     it to the nprobe probed posting lists. The QUERY side slices
-    *     itself to the stored width (`_MRL_DIMS` — a driver metadata
-    *     read, like the centroid matrix).
-    *  2. RESCORE exact full-dimension cosine over the
-    *     `rescoreK`-per-query shortlist only (semi-join on ids).
-    *
-    * Full probe + exhaustive shortlist ⇒ exactly brute force (MRL
-    * prefix order can only cost a candidate the shortlist dropped),
-    * so the driver gate shares q_v_topk's oracle; the bounded-
-    * shortlist recall trade is SimilaritySpec/IvfSpec territory.
-    */
-  def searchIndexMrl(spark: SparkSession, indexPath: String,
-                     queries: DataFrame, k: Int, nprobe: Int = 2,
-                     rescoreK: Int = 0,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame =
-    searchIndexMrlImpl(spark, indexPath, queries, None, k, nprobe,
-      rescoreK, idCol, vecCol)
-
-  /** [[searchIndexMrl]] with a static attribute predicate — the MRL
-    * twin of [[searchIndexCompressedWhere]]/[[searchIndexPqWhere]],
-    * completing the filtered-ANN family across every index encoding:
-    * the predicate applies AT THE PREFIX-COLUMN SHORTLIST SCAN
-    * (plain Filter over the stored attribute columns, pushed to the
-    * parquet reader), stacked on the cluster partition pruning, so
-    * the whole shortlist budget lands on qualifying candidates and
-    * the rescore reads only qualifying floats. Full probe +
-    * exhaustive shortlist ⇒ exactly brute-force-over-the-filtered-
-    * corpus, the relation the driver gate's oracle replays.
-    */
-  def searchIndexMrlWhere(spark: SparkSession, indexPath: String,
-                          queries: DataFrame,
-                          predicate: org.apache.spark.sql.Column,
-                          k: Int, nprobe: Int = 2,
-                          rescoreK: Int = 0,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame =
-    searchIndexMrlImpl(spark, indexPath, queries, Some(predicate), k,
-      nprobe, rescoreK, idCol, vecCol)
-
-  private def searchIndexMrlImpl(spark: SparkSession, indexPath: String,
-                     queries: DataFrame,
-                     predicate: Option[org.apache.spark.sql.Column],
-                     k: Int, nprobe: Int,
-                     rescoreK: Int,
-                     idCol: String,
-                     vecCol: String): DataFrame = {
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val dims = readCountFile(spark, s"$indexPath/_MRL_DIMS").getOrElse(
-      sys.error(s"no _MRL_DIMS at $indexPath — not an ensureIndexMrl " +
-        "artifact")).toInt
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val corpusAll = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-    val corpus = predicate.fold(corpusAll)(p => corpusAll.filter(p))
-    val cm = corpus.select(col(idCol).as("n_id"), col("mrl"),
-      col("cluster"))
-    val q = queries
-      .select(col(idCol).as("q_id"),
-        slice(col(vecCol), 1, dims).as("q_pre"),
-        explode(nearestCentroids(col(vecCol), model.centroids, nprobe))
-          .as("cluster"))
-    val approx = cm.join(broadcast(q), Seq("cluster"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosine(col("q_pre"), col("mrl")).as("cosine"))
-    val shortlist = TopK.topKPerKey(approx, shortK)(spark)
-      .select(col("q_id"), col("n_id"))
-    val exactVecs = corpus
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .join(broadcast(shortlist), Seq("n_id"))
-    val rescored = exactVecs
-      .join(broadcast(queries.select(col(idCol).as("q_id"),
-        col(vecCol).as("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosine(col("q_vec"), col("n_vec")).as("cosine"))
-    TopK.topKPerKey(rescored, k)(spark)
-  }
-
-  /** Compressed-domain ANN against a `quantize = true` index — the
-    * shape a 100 TB embedding corpus actually searches:
-    *
-    *  1. SHORTLIST over the int8 column only. Cosine is scale-
-    *     invariant, so cosine(q8, q_vec) needs no dequantization at
-    *     all (FAISS-style asymmetric scoring: full-precision query
-    *     against the compressed corpus — `q_scale` isn't even read).
-    *     Parquet being columnar, this scan reads 1/4 the vector bytes
-    *     of the float path; partition pruning limits it to the nprobe
-    *     probed posting lists as in [[searchIndex]].
-    *  2. RESCORE full-precision, but ONLY the `rescoreK`-per-query
-    *     shortlist: the float column is read through a semi-join on
-    *     the shortlisted ids — |queries|·rescoreK rows of float
-    *     vectors, never the corpus.
-    *
-    * Recall: the exact cosine decides the final order, so quantization
-    * error can only cost a candidate that missed the shortlist;
-    * `rescoreK` (≥ k, default 4k) is the knob. IvfSpec measures the
-    * compressed path against the uncompressed one.
-    */
-  def searchIndexCompressed(spark: SparkSession, indexPath: String,
-                            queries: DataFrame, k: Int, nprobe: Int = 2,
-                            rescoreK: Int = 0,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame =
-    searchIndexCompressedImpl(spark, indexPath, queries, None, k,
-      nprobe, rescoreK, idCol, vecCol)
-
-  /** [[searchIndexCompressed]] with a static attribute predicate —
-    * the int8 twin of [[searchIndexPqWhere]], completing the
-    * filtered-ANN family across every index encoding: same
-    * plain-Filter pushdown at the quantized-column shortlist scan,
-    * same full-probe-is-exact contract over the filtered corpus.
-    */
-  def searchIndexCompressedWhere(spark: SparkSession, indexPath: String,
-                            queries: DataFrame,
-                            predicate: org.apache.spark.sql.Column,
-                            k: Int, nprobe: Int = 2,
-                            rescoreK: Int = 0,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame =
-    searchIndexCompressedImpl(spark, indexPath, queries,
-      Some(predicate), k, nprobe, rescoreK, idCol, vecCol)
-
-  private def searchIndexCompressedImpl(spark: SparkSession,
-                            indexPath: String,
-                            queries: DataFrame,
-                            predicate: Option[org.apache.spark.sql.Column],
-                            k: Int, nprobe: Int,
-                            rescoreK: Int,
-                            idCol: String,
-                            vecCol: String): DataFrame = {
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val corpusAll = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-    val corpus = predicate.fold(corpusAll)(p => corpusAll.filter(p))
-    // int8 elements are exact in float (|q| ≤ 127), so the cast is free
-    val cq = corpus.select(col(idCol).as("n_id"),
-      col("q8").cast("array<float>").as("n_q8"), col("cluster"))
-    val q = queries
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        explode(nearestCentroids(col(vecCol), model.centroids, nprobe))
-          .as("cluster"))
-    val approx = cq.join(broadcast(q), Seq("cluster"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosine(col("q_vec"), col("n_q8")).as("cosine"))
-    val shortlist = TopK.topKPerKey(approx, shortK)(spark)
-      .select(col("q_id"), col("n_id"))
-    // full-precision vectors for shortlisted ids only
-    val exactVecs = corpus
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .join(broadcast(shortlist), Seq("n_id"))
-    val rescored = exactVecs
-      .join(broadcast(queries.select(col(idCol).as("q_id"),
-        col(vecCol).as("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosine(col("q_vec"), col("n_vec")).as("cosine"))
-    TopK.topKPerKey(rescored, k)(spark)
-  }
-
-  /** Binary-shortlist search over a `binarize = true` index — the
-    * production shape of [[SimilaritySearch.binTopK]]: partition
-    * pruning routes to the `nprobe` nearest clusters, the shortlist
-    * phase scans ONLY `(id, b, cluster)` — the sign-packed column is
-    * 32× smaller than the float vectors, so at 100 TB the hot scan
-    * is ~3 TB of longs — and the exact cosine rescores the
-    * `shortlistK` survivors from the full vectors of the shortlisted
-    * ids alone. With full probe the pair space equals
-    * [[SimilaritySearch.binTopK]]'s exactly (same hamming tie-break,
-    * same rescore), so the full-probe gate shares q_v_topk_bin's
-    * full-replay oracle; partial-probe recall is IvfSpec territory.
-    */
-  /** [[searchIndexBin]] with a static attribute predicate (filtered
-    * ANN on the compressed arm): the predicate applies AT THE
-    * SHORTLIST SCAN — a parquet pushdown over whatever attribute
-    * columns [[writeIndex]] stored, stacked on the cluster partition
-    * pruning — so the WHOLE `shortlistK` Hamming budget lands on
-    * qualifying candidates and the rescore reads only qualifying
-    * float vectors. Post-filtering the unfiltered shortlist instead
-    * would shrink it by the predicate's selectivity and starve the
-    * final k exactly like the uncompressed post-filter does. The
-    * shortlist selection is deterministic (ham asc, id asc), so the
-    * full pipeline — now over the filtered candidate set — replays in
-    * the SQL oracle like [[searchIndexBin]]'s.
-    */
-  def searchIndexBinWhere(spark: SparkSession, indexPath: String,
-                          queries: DataFrame,
-                          predicate: org.apache.spark.sql.Column,
-                          k: Int, nprobe: Int = 2, shortlistK: Int = 64,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame =
-    searchIndexBinImpl(spark, indexPath, queries, Some(predicate), k,
-      nprobe, shortlistK, idCol, vecCol)
-
-  def searchIndexBin(spark: SparkSession, indexPath: String,
-                     queries: DataFrame, k: Int, nprobe: Int = 2,
-                     shortlistK: Int = 64,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame =
-    searchIndexBinImpl(spark, indexPath, queries, None, k, nprobe,
-      shortlistK, idCol, vecCol)
-
-  private def searchIndexBinImpl(spark: SparkSession, indexPath: String,
-                     queries: DataFrame,
-                     predicate: Option[org.apache.spark.sql.Column],
-                     k: Int, nprobe: Int,
-                     shortlistK: Int,
-                     idCol: String,
-                     vecCol: String): DataFrame = {
-    import graft.functions.NativeExpressions.{signPack, hammingPacked}
-    val model = loadModelCached(spark, s"$indexPath/centroids")
-    val probed = queries
-      .select(explode(
-        nearestCentroids(col(vecCol), model.centroids, nprobe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0))
-    val corpusAll = spark.read.parquet(s"$indexPath/corpus")
-      .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-    // NULL predicate rows fail — a plain Filter already has exactly
-    // that semantics, and (unlike a coalesce wrapper, which blocks
-    // the data-source translation) it reaches PushedFilters
-    val corpus = predicate.fold(corpusAll)(p => corpusAll.filter(p))
-    val cb = corpus.select(col(idCol).as("n_id"), col("b").as("nb"),
-      col("cluster"))
-    val q = queries
-      .select(col(idCol).as("q_id"), signPack(col(vecCol)).as("qb"),
-        explode(nearestCentroids(col(vecCol), model.centroids, nprobe))
-          .as("cluster"))
-    val approx = cb.join(broadcast(q), Seq("cluster"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        (-hammingPacked(col("nb"), col("qb"))).cast("double").as("cosine"))
-    val shortlist = TopK.topKPerKey(approx, math.max(shortlistK, k))(spark)
-      .select(col("q_id"), col("n_id"))
-    val exactVecs = corpus
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .join(broadcast(shortlist), Seq("n_id"))
-    val rescored = exactVecs
-      .join(broadcast(queries.select(col(idCol).as("q_id"),
-        col(vecCol).as("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosine(col("q_vec"), col("n_vec")).as("cosine"))
-    TopK.topKPerKey(rescored, k)(spark)
   }
 }

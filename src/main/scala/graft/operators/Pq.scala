@@ -327,11 +327,17 @@ object Pq {
     * kernel), never ±Infinity.
     */
   private[operators] def approxScore(model: PqModel): Column =
-    (adcScore(col("__t"), col("pq_code"), model.k) /
-      when(col("pq_norm") =!= 0.0, col("pq_norm"))).as("cosine")
+    adcScore(col("__t"), col("pq_code"), model.k) /
+      when(col("pq_norm") =!= 0.0, col("pq_norm"))
 
-  /** Shortlist → exact-cosine rescore → final top-k (shared tail of
-    * both search paths; identical to the IVF compressed path's).
+  /** Candidates kept per query for the exact rescore: `rescoreK`
+    * (never below k), or 4k when it is 0.
+    */
+  private[operators] def shortlistLength(rescoreK: Int, k: Int): Int =
+    if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
+
+  /** Shortlist → exact-cosine rescore → final top-k: the shared tail of
+    * every approximate search, in memory and over a stored index.
     */
   private[operators] def rescoreExact(cands: DataFrame, corpus: DataFrame,
                            queries: DataFrame, k: Int, shortK: Int,
@@ -356,14 +362,14 @@ object Pq {
   def topK(corpus: DataFrame, queries: DataFrame, model: PqModel, k: Int,
            rescoreK: Int = 0, idCol: String = "vec_id",
            vecCol: String = "embedding"): DataFrame = {
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
+    val shortK = shortlistLength(rescoreK, k)
     val c = withCodes(corpus, model, vecCol)
       .select(col(idCol).as("n_id"), col("pq_code"), col("pq_norm"))
     val q = queries.select(col(idCol).as("q_id"),
       adcTable(col(vecCol), model).as("__t"))
     val cands = c.crossJoin(broadcast(q))
       .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"), approxScore(model))
+      .select(col("q_id"), col("n_id"), approxScore(model).as("cosine"))
     rescoreExact(cands, corpus, queries, k, shortK, idCol, vecCol)
   }
 
@@ -442,9 +448,9 @@ object Pq {
   }
 
   /** Residual-ADC candidate scoring over a residual-ENCODED corpus
-    * (`n_id`, `pq_code`, `pq_norm`, `cluster`) — the shared shortlist
-    * stage of [[topKClusteredResidual]] (in-memory) and
-    * [[Ivf.searchIndexPqResidual]] (cold reload). Per (query, probe):
+    * (`n_id`, `pq_code`, `pq_norm`, `cluster`) — the shortlist stage
+    * of [[topKClusteredResidual]]; [[Ivf.Shortlist.PqResidual]] stages
+    * the same three pieces over a stored index. Per (query, probe):
     * the shared ADC table plus the centroid dot — nq·nprobe rows of
     * driver-free arithmetic, built BEFORE the broadcast so the
     * candidate join pays lookups only; approximate cosine =
@@ -455,22 +461,34 @@ object Pq {
       ivf: Ivf.IvfModel, model: PqModel, nprobe: Int,
       idCol: String, vecCol: String): DataFrame = {
     import NativeExpressions.nearestCentroids
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("__qv"),
-        adcTable(col(vecCol), model).as("__t"),
+    val q = withCentroidDot(queries.select(
+      (col(idCol).as("q_id") +: residualQueryCols(model, vecCol)) :+
         explode(nearestCentroids(col(vecCol), ivf.centroids, nprobe))
-          .as("cluster"))
-      .withColumn("__qc", aggregate(
+          .as("cluster"): _*), ivf)
+    encoded.join(broadcast(q), Seq("cluster"))
+      .filter(col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), residualScore(model).as("cosine"))
+  }
+
+  /** The per-query residual-ADC inputs: the vector and its ADC table. */
+  private[operators] def residualQueryCols(model: PqModel,
+                                           vecCol: String): Seq[Column] =
+    Seq(col(vecCol).as("__qv"), adcTable(col(vecCol), model).as("__t"))
+
+  /** dot(q, centroid) per (query, probed `cluster`), replacing `__qv`. */
+  private[operators] def withCentroidDot(q: DataFrame,
+                                         ivf: Ivf.IvfModel): DataFrame =
+    q.withColumn("__qc", aggregate(
         zip_with(col("__qv"),
           element_at(centroidsLit(ivf), col("cluster") + 1),
           (a, b) => a * b),
         lit(0.0d), (acc, x) => acc + x))
       .drop("__qv")
-    encoded.join(broadcast(q), Seq("cluster"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        ((col("__qc") + adcScore(col("__t"), col("pq_code"), model.k)) /
-          when(col("pq_norm") =!= 0.0, col("pq_norm"))).as("cosine"))
-  }
+
+  /** (dot(q, centroid) + ADC(residual)) over the stored exact norm. */
+  private[operators] def residualScore(model: PqModel): Column =
+    (col("__qc") + adcScore(col("__t"), col("pq_code"), model.k)) /
+      when(col("pq_norm") =!= 0.0, col("pq_norm"))
 
   /** IVF-PQ with residual codes: same probe/shortlist/rescore shape as
     * [[topKClustered]], scored as (dot(q, centroid) + ADC(residual))
@@ -481,7 +499,7 @@ object Pq {
                             nprobe: Int = 2, rescoreK: Int = 0,
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
+    val shortK = shortlistLength(rescoreK, k)
     val c = withResidualCodes(corpus, ivf, model, vecCol)
       .select(col(idCol).as("n_id"), col("pq_code"), col("pq_norm"),
         col("cluster"))
@@ -500,7 +518,7 @@ object Pq {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
     import NativeExpressions.nearestCentroids
-    val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
+    val shortK = shortlistLength(rescoreK, k)
     val c = withCodes(Ivf.assign(corpus, ivf, vecCol), model, vecCol)
       .select(col(idCol).as("n_id"), col("pq_code"), col("pq_norm"),
         col("cluster"))
@@ -510,7 +528,7 @@ object Pq {
         .as("cluster"))
     val cands = c.join(broadcast(q), Seq("cluster"))
       .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"), approxScore(model))
+      .select(col("q_id"), col("n_id"), approxScore(model).as("cosine"))
     rescoreExact(cands, corpus, queries, k, shortK, idCol, vecCol)
   }
 }

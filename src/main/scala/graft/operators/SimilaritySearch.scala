@@ -53,8 +53,8 @@ object SimilaritySearch {
     * itself a valid lower-capacity embedding: shortlist by cosine
     * over the first `prefixDims` components (dim/prefixDims× fewer
     * FLOPs per candidate), then exact full-dimension rescore of the
-    * shortlist only — [[graft.operators.Ivf.searchIndexCompressed]]'s
-    * shape with the prefix playing the int8 column's role.
+    * shortlist only — [[graft.operators.Ivf.Shortlist.Sq8]]'s shape
+    * with the prefix playing the int8 column's role.
     *
     * `shortlistK >= corpus` makes the rescore exhaustive and the
     * result EXACTLY [[bruteForceTopK]] (the gate's oracle premise);
@@ -62,7 +62,7 @@ object SimilaritySearch {
     * in SimilaritySpec. This in-memory form slices at the scan,
     * saving FLOPs but reading full vectors; the at-rest form that
     * turns the saving into IO is [[graft.operators.Ivf.ensureIndexMrl]]
-    * / [[graft.operators.Ivf.searchIndexMrl]] (round-16), which
+    * / [[graft.operators.Ivf.Shortlist.Mrl]] (round-16), which
     * persists the prefix as its own column and whose shortlist scan
     * never reads the float vector.
     */

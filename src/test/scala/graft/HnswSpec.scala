@@ -366,8 +366,8 @@ class HnswSpec extends SparkSpec {
     "filtered slice (failing nodes stay routable)") {
     val idx = freshAttrIndex("hnsw-flt-ex")
     val q = emb.filter(col("vec_id") < 16)
-    val got = Hnsw.searchIndexWhere(spark, idx, q,
-        predicate = col("label") < 5, k = 5, nprobe = 4, ef = 0)
+    val got = Hnsw.searchIndex(spark, idx, q, k = 5, nprobe = 4, ef = 0,
+      predicate = Some(col("label") < 5))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     val want = SimilaritySearch.bruteForceTopK(
         emb.filter(col("label") < 5), q, k = 5)
@@ -377,8 +377,8 @@ class HnswSpec extends SparkSpec {
     // route to them goes through failing nodes, and exhaustive
     // traversal still finds them all (pre-filtering the graph would
     // strand them)
-    val rare = Hnsw.searchIndexWhere(spark, idx, q,
-        predicate = col("label") === 3, k = 5, nprobe = 4, ef = 0)
+    val rare = Hnsw.searchIndex(spark, idx, q, k = 5, nprobe = 4, ef = 0,
+      predicate = Some(col("label") === 3))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     val rareWant = SimilaritySearch.bruteForceTopK(
         emb.filter(col("label") === 3), q, k = 5)
@@ -393,8 +393,8 @@ class HnswSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 32)
     val exact = SimilaritySearch.bruteForceTopK(
       emb.filter(col("label") < 3), q, k = 5)
-    val filtered = Hnsw.searchIndexWhere(spark, idx, q,
-      predicate = col("label") < 3, k = 5, nprobe = 4, ef = 16)
+    val filtered = Hnsw.searchIndex(spark, idx, q, k = 5, nprobe = 4, ef = 16,
+      predicate = Some(col("label") < 3))
     val rF = SimilaritySearch.recallAtK(exact, filtered)
       .agg(sum(col("n_hit")), sum(col("n_exact"))).head
     val recallF = rF.getLong(0).toDouble / rF.getLong(1)
@@ -428,8 +428,8 @@ class HnswSpec extends SparkSpec {
       m = 8, efC = 32, attrCols = Seq("label"))
     Hnsw.appendToIndex(half1, idx)
     val q = emb.filter(col("vec_id") < 16)
-    val got = Hnsw.searchIndexWhere(spark, idx, q,
-        predicate = col("label") < 5, k = 5, nprobe = 4, ef = 0)
+    val got = Hnsw.searchIndex(spark, idx, q, k = 5, nprobe = 4, ef = 0,
+      predicate = Some(col("label") < 5))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     val want = SimilaritySearch.bruteForceTopK(
         emb.filter(col("label") < 5), q, k = 5)
@@ -439,8 +439,8 @@ class HnswSpec extends SparkSpec {
     val sizes = Hnsw.footerShardSizes(spark, idx)
     val hot = sizes.maxBy(_._2)._1
     Hnsw.splitShard(spark, idx, hot)
-    val got2 = Hnsw.searchIndexWhere(spark, idx, q,
-        predicate = col("label") < 5, k = 5, nprobe = 5, ef = 0)
+    val got2 = Hnsw.searchIndex(spark, idx, q, k = 5, nprobe = 5, ef = 0,
+      predicate = Some(col("label") < 5))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     assert(got2 == want, "filtered search over a split index diverged")
     // loud refusal: appending rows with no label column would make
@@ -494,8 +494,8 @@ class HnswSpec extends SparkSpec {
     assert(got == want,
       "post-delete search diverged from survivors' brute force")
     // attrs rode the rebuild: filtered search still sees them
-    val flt = Hnsw.searchIndexWhere(spark, idx, q,
-        predicate = col("label") < 3, k = 5, nprobe = 4, ef = 0)
+    val flt = Hnsw.searchIndex(spark, idx, q, k = 5, nprobe = 4, ef = 0,
+      predicate = Some(col("label") < 3))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     val fltWant = SimilaritySearch.bruteForceTopK(
         emb.filter(col("label") < 3), q, k = 5)

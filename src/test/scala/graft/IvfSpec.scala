@@ -202,11 +202,11 @@ class IvfSpec extends SparkSpec {
     val qAll = tmpDir("graft-ivf-app-q-all")
     Ivf.writeIndex(emb, m, qAll, quantize = true)
     val q = emb.filter(col("vec_id") < 8)
-    val compInc = Ivf.searchIndexCompressed(spark, qIdx, q, k = 5,
-      nprobe = 4, rescoreK = n)
+    val compInc = Ivf.searchIndex(spark, qIdx, q, k = 5,
+      nprobe = 4, shortlist = Ivf.Shortlist.Sq8(n))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
-    val compAll = Ivf.searchIndexCompressed(spark, qAll, q, k = 5,
-      nprobe = 4, rescoreK = n)
+    val compAll = Ivf.searchIndex(spark, qAll, q, k = 5,
+      nprobe = 4, shortlist = Ivf.Shortlist.Sq8(n))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     assert(compInc == compAll)
 
@@ -224,8 +224,8 @@ class IvfSpec extends SparkSpec {
     val before = pqBytes
     Ivf.appendToIndex(half1, pIdx)
     assert(pqBytes == before, "append must NOT rewrite the codebooks")
-    val viaPq = Ivf.searchIndexPq(spark, pIdx, q, k = 5, nprobe = 4,
-      rescoreK = n)
+    val viaPq = Ivf.searchIndex(spark, pIdx, q, k = 5, nprobe = 4,
+      shortlist = Ivf.Shortlist.Pq(n))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     val exact = Ivf.searchIndex(spark, pIdx, q, k = 5, nprobe = 4)
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
@@ -244,8 +244,8 @@ class IvfSpec extends SparkSpec {
     val fs = ready.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val builtAt = fs.getFileStatus(ready).getModificationTime
     val q = emb.filter(col("vec_id") < 8)
-    val got = Ivf.searchIndexPqResidual(spark, idx, q, k = 5,
-        nprobe = 4, rescoreK = n)
+    val got = Ivf.searchIndex(spark, idx, q, k = 5,
+        nprobe = 4, shortlist = Ivf.Shortlist.PqResidual(n))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     val exact = graft.operators.SimilaritySearch.bruteForceTopK(emb, q, k = 5)
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
@@ -257,8 +257,8 @@ class IvfSpec extends SparkSpec {
     assert(fs.getFileStatus(ready).getModificationTime == builtAt,
       "fresh index must not rebuild")
     // default shortlist from the cold artifact keeps useful recall
-    val approx = Ivf.searchIndexPqResidual(spark, idx, q, k = 5,
-        nprobe = 4, rescoreK = 64)
+    val approx = Ivf.searchIndex(spark, idx, q, k = 5,
+        nprobe = 4, shortlist = Ivf.Shortlist.PqResidual(64))
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val hits = exact.map(t => (t._1, t._3)).intersect(approx)
     assert(hits.size >= (exact.size * 6) / 10,
@@ -276,8 +276,8 @@ class IvfSpec extends SparkSpec {
       // rank, so the compressed path must reproduce the float path
       val float = Ivf.searchIndex(spark, path, q, k = 5, nprobe = nprobe)
         .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
-      val compressed = Ivf.searchIndexCompressed(spark, path, q, k = 5,
-        nprobe = nprobe, rescoreK = n)
+      val compressed = Ivf.searchIndex(spark, path, q, k = 5,
+        nprobe = nprobe, shortlist = Ivf.Shortlist.Sq8(n))
         .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
       assert(compressed == float, s"nprobe=$nprobe diverged")
     }
@@ -290,8 +290,8 @@ class IvfSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 20)
     val float = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 2)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val compressed = Ivf.searchIndexCompressed(spark, path, q, k = 5,
-      nprobe = 2) // default rescoreK = 4k
+    val compressed = Ivf.searchIndex(spark, path, q, k = 5,
+      nprobe = 2, shortlist = Ivf.Shortlist.Sq8()) // default rescoreK = 4k
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = float.intersect(compressed).size.toDouble / float.size
     assert(recall >= 0.9, s"int8 shortlist recall $recall vs the float path")
@@ -302,7 +302,8 @@ class IvfSpec extends SparkSpec {
     val path = tmpDir("graft-ivf-pq-plan")
     Ivf.writeIndex(emb, m, path, quantize = true)
     val q = emb.filter(col("vec_id") < 4)
-    val df = Ivf.searchIndexCompressed(spark, path, q, k = 5, nprobe = 2)
+    val df = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 2,
+      shortlist = Ivf.Shortlist.Sq8())
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val schemas = p.linesIterator.filter(_.contains("ReadSchema:")).toList
@@ -327,14 +328,15 @@ class IvfSpec extends SparkSpec {
     // full probe + exhaustive rescore: exactly the brute-force rows
     val exact = SimilaritySearch.bruteForceTopK(emb, q, k = 5)
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
-    val got = Ivf.searchIndexMrl(spark, path, q, k = 5, nprobe = 4,
-        rescoreK = n)
+    val got = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 4,
+      shortlist = Ivf.Shortlist.Mrl(n))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     assert(got == exact, "full-probe MRL index path diverged from brute")
     // plan: the shortlist phase reads the prefix column only — the IO
     // saving q_v_topk_mrl's in-memory slice can't deliver; the rescore
     // still reads float vectors (shortlisted rows only), pruned scans
-    val df = Ivf.searchIndexMrl(spark, path, q, k = 5, nprobe = 2)
+    val df = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 2,
+      shortlist = Ivf.Shortlist.Mrl())
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val schemas = p.linesIterator.filter(_.contains("ReadSchema:")).toList
@@ -352,8 +354,8 @@ class IvfSpec extends SparkSpec {
     Ivf.writeIndex(half0, Ivf.train(half0, k = 4, iters = 2), path2,
       mrlDims = 4)
     Ivf.appendToIndex(half1, path2)
-    val grown = Ivf.searchIndexMrl(spark, path2, q, k = 5, nprobe = 4,
-        rescoreK = n)
+    val grown = Ivf.searchIndex(spark, path2, q, k = 5, nprobe = 4,
+      shortlist = Ivf.Shortlist.Mrl(n))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     assert(grown == exact, "appended MRL index diverged from brute")
   }
@@ -366,15 +368,16 @@ class IvfSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 20)
     // full probe: pair space and tie-breaks shared with binTopK —
     // exact row equality (the gate's oracle premise)
-    val idx = Ivf.searchIndexBin(spark, path, q, k = 5, nprobe = 4,
-        shortlistK = 64)
+    val idx = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 4,
+      shortlist = Ivf.Shortlist.Binary(64))
       .collect().map(_.toSeq).toSet
     val direct = SimilaritySearch.binTopK(emb, q, k = 5, shortlistK = 64)
       .collect().map(_.toSeq).toSet
     assert(idx == direct, "full-probe index path diverged from binTopK")
     // plan: the shortlist phase reads b (one long per 64 dims), never
     // the float vectors; the rescore still reads them (shortlist only)
-    val df = Ivf.searchIndexBin(spark, path, q, k = 5, nprobe = 2)
+    val df = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 2,
+      shortlist = Ivf.Shortlist.Binary())
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val schemas = p.linesIterator.filter(_.contains("ReadSchema:")).toList
@@ -385,8 +388,8 @@ class IvfSpec extends SparkSpec {
       s"no full-precision rescore scan in:\n$p")
     assert(p.contains("PartitionFilters"), s"unpruned bin scan:\n$p")
     // partial probe: recall vs the full-probe truth stays useful
-    val part = Ivf.searchIndexBin(spark, path, q, k = 5, nprobe = 2,
-        shortlistK = 64)
+    val part = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 2,
+      shortlist = Ivf.Shortlist.Binary(64))
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val full = direct.map(r => (r.head.asInstanceOf[Long],
       r(2).asInstanceOf[Long]))
@@ -471,8 +474,8 @@ class IvfSpec extends SparkSpec {
     val path = tmpDir("graft-ivf-flt")
     Ivf.writeIndex(emb, m, path)
     val q = emb.filter(col("vec_id") < 8)
-    val res = Ivf.searchIndexWhere(spark, path, q,
-      predicate = col("label") < 5, k = 5, nprobe = 4)
+    val res = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 4,
+      predicate = Some(col("label") < 5))
     // full probe ⇒ exhaustive over exactly the label<5 slice
     val exact = SimilaritySearch.bruteForceTopK(
         emb.filter(col("label") < 5), q, k = 5)
@@ -511,8 +514,8 @@ class IvfSpec extends SparkSpec {
     val path = tmpDir("graft-ivf-bin-flt")
     Ivf.writeIndex(emb, m, path, binarize = true)
     val q = emb.filter(col("vec_id") < 16)
-    val res = Ivf.searchIndexBinWhere(spark, path, q,
-      predicate = col("label") < 5, k = 5, nprobe = 4, shortlistK = 64)
+    val res = Ivf.searchIndex(spark, path, q, k = 5, nprobe = 4,
+      predicate = Some(col("label") < 5), shortlist = Ivf.Shortlist.Binary(64))
     // full probe: whole-pipeline equality with the direct kernel over
     // the filtered corpus — shortlist SELECTION included, not just ids
     val want = SimilaritySearch.binTopK(emb.filter(col("label") < 5),
@@ -789,6 +792,30 @@ class IvfSpec extends SparkSpec {
     assert(!Ivf.indexIsResidual(spark, idxP))
   }
 
+  test("a residual-PQ index deleted to empty takes the next append: " +
+    "its build records _SCHEMA like every other build, and the " +
+    "regrown index searches exactly") {
+    val src = tmpDir("ivf-resempty-src")
+    emb.write.mode("overwrite").parquet(src)
+    val idx = tmpDir("ivf-resempty") + "/idx"
+    Ivf.ensureIndexPqResidual(spark.read.parquet(src), src, idx, k = 4,
+      iters = 2, pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
+    assert(Ivf.deleteFromIndex(spark, idx, lit(true)) == emb.count())
+    assert(Ivf.indexRowCount(spark, idx).contains(0L))
+    // no parquet footer is left: the append aligns to _SCHEMA
+    val delta = emb.filter(col("vec_id") < 100)
+    Ivf.appendToIndex(delta, idx)
+    val n = delta.count()
+    assert(Ivf.indexRowCount(spark, idx).contains(n))
+    val q = delta.filter(col("vec_id") < 8)
+    val got = Ivf.searchIndex(spark, idx, q, k = 5, nprobe = 4,
+        shortlist = Ivf.Shortlist.PqResidual(n.toInt))
+      .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
+    val want = SimilaritySearch.bruteForceTopK(delta, q, k = 5)
+      .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
+    assert(got == want, "regrown residual index diverged from brute force")
+  }
+
   test("deleteFromIndex: only touched posting lists rewrite, NULL " +
     "predicate rows are kept, emptied partitions disappear, and " +
     "search equals brute force over the survivors") {
@@ -889,21 +916,23 @@ class IvfSpec extends SparkSpec {
       sampleN = 1024)
     val path = tmpDir("graft-ivf-pq-flt")
     Ivf.writeIndex(emb, m, path, pq = Some(pq))
-    check(Ivf.searchIndexPqWhere(spark, path, q,
-      predicate = col("label") < 5, k = 5, nprobe = 4, rescoreK = n), "pq")
+    check(Ivf.searchIndex(spark, path, q, k = 5, nprobe = 4,
+      predicate = Some(col("label") < 5), shortlist = Ivf.Shortlist.Pq(n)),
+      "pq")
     val pathR = tmpDir("graft-ivf-pqr-flt") + "/idx"
     Ivf.ensureIndexPqResidual(emb,
       "/root/testdata/sf0.001/embeddings.parquet", pathR,
       k = 4, iters = 2, pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
-    check(Ivf.searchIndexPqResidualWhere(spark, pathR, q,
-      predicate = col("label") < 5, k = 5, nprobe = 4, rescoreK = n),
+    check(Ivf.searchIndex(spark, pathR, q, k = 5, nprobe = 4,
+      predicate = Some(col("label") < 5),
+      shortlist = Ivf.Shortlist.PqResidual(n)),
       "residual-pq")
     // the int8 arm completes the family: same contract over the
     // quantized column
     val pathC = tmpDir("graft-ivf-c-flt")
     Ivf.writeIndex(emb, m, pathC, quantize = true)
-    check(Ivf.searchIndexCompressedWhere(spark, pathC, q,
-      predicate = col("label") < 5, k = 5, nprobe = 4, rescoreK = n),
+    check(Ivf.searchIndex(spark, pathC, q, k = 5, nprobe = 4,
+      predicate = Some(col("label") < 5), shortlist = Ivf.Shortlist.Sq8(n)),
       "sq8", shortCol = "q8")
   }
 }

@@ -160,8 +160,8 @@ class PqSpec extends SparkSpec {
     val inSession = Pq.topKClustered(emb, q, reloadedIvf, reloadedPq, k = 5,
       nprobe = 4, rescoreK = n.get.toInt)
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
-    val fromIndex = Ivf.searchIndexPq(spark, s"$dir/idx", q, k = 5,
-      nprobe = 4, rescoreK = n.get.toInt)
+    val fromIndex = Ivf.searchIndex(spark, s"$dir/idx", q, k = 5,
+      nprobe = 4, shortlist = Ivf.Shortlist.Pq(n.get.toInt))
       .select("q_id", "rank", "n_id").as[(Long, Int, Long)].collect().toSet
     assert(fromIndex == inSession)
     // and with the exhaustive shortlist both equal brute force
@@ -176,7 +176,8 @@ class PqSpec extends SparkSpec {
     Ivf.ensureIndexPq(emb, src, s"$dir/idx", k = 4, iters = 2,
       pqM = 8, pqK = 16, pqIters = 4, pqSampleN = 1024)
     val q = emb.filter(col("vec_id") < 4)
-    val df = Ivf.searchIndexPq(spark, s"$dir/idx", q, k = 5, nprobe = 2)
+    val df = Ivf.searchIndex(spark, s"$dir/idx", q, k = 5, nprobe = 2,
+      shortlist = Ivf.Shortlist.Pq())
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val schemas = p.linesIterator.filter(_.contains("ReadSchema:")).toList

@@ -296,7 +296,8 @@ class RobustnessSpec extends SparkSpec {
     // IVF-PQ index: codebooks + coded corpus
     val pqDir = tmpDir("stage-pq") + "/idx"
     Ivf.ensureIndexPq(emb, src, pqDir, k = 4, iters = 1, pqM = 4)
-    assert(Ivf.searchIndexPq(spark, pqDir, queries, k = 3, nprobe = 4)
+    assert(Ivf.searchIndex(spark, pqDir, queries, k = 3, nprobe = 4,
+      shortlist = Ivf.Shortlist.Pq())
       .count() == 12)
 
     // Layout + skipping manifest built INSIDE an ensureAt staging dir

@@ -4,6 +4,8 @@
 Mimics the driver's DuckDB-oracle compare: for each query dir written by
 graft.Verify, run the oracle SQL in DuckDB over the same testdata
 parquet, sort columns by name, sort rows, and compare values exactly.
+Every query graft.Verify recorded in errors.json fails too, including
+the rows-only queries that have no oracle SQL to compare against.
 
 Usage: python3 tools/check_oracle.py /tmp/verify_out /root/testdata/sf0.01
 """
@@ -67,6 +69,16 @@ def main(outdir, sfdir):
         else:
             print(f"ok   {name} ({len(gr)} rows)")
             n_ok += 1
+    # a query that raised wrote a sentinel result: an oracle-checked one
+    # already failed above, but a rows-only one has no SQL to fail it
+    try:
+        errors = json.load(open(f"{outdir}/errors.json"))
+    except FileNotFoundError:
+        errors = {}
+    for name, msg in sorted(errors.items()):
+        print(f"FAIL {name}: query raised {msg}")
+        if name not in oracle:
+            n_bad += 1
     print(f"== {n_ok} ok, {n_bad} failed ==")
     if n_ok + n_bad == 0:
         # an empty oracle_sql.json (e.g. a Verify name filter that
