@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark: one JSON line with per-query wall seconds over
   * SparkEntry.queries at SPARK_GRAFT_SF_DIR.
   *
@@ -25,16 +23,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps > 0, s"SPARK_GRAFT_BENCH_REPS must be positive, got $reps")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same injection path as Verify: the bench measures the session
-      // shape a production deployment configures
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     // warm-up: a scan + shuffle + broadcast exercise, untimed
     spark.read.parquet(s"$sfDir/nation.parquet")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,17 +11,10 @@ object Verify {
       case Array(s, o, f) => (s, o, f.split(',').toSeq)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the deployment-config injection path: pure-SQL gates (planner
-      // skipping, bounded-Levenshtein rewrite, graft_* kernels) run
-      // exactly as a production session configured this way would
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the deployment-config injection path: pure-SQL gates (planner
+    // skipping, bounded-Levenshtein rewrite, graft_* kernels) run
+    // exactly as a production session configured this way would
+    val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries

@@ -19,8 +19,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   * data file in path order and nothing else). A small incremental epoch
   * opens about twenty tables, so that job is a fixed cost per table.
   * [[open]] reads the same footer on the driver and hands Spark the
-  * schema it would have inferred, the pattern of `Ivf.footerRowCount`
-  * and `Hnsw.footerShardSizes`. [[footerMax]] answers `max(col)` from
+  * schema it would have inferred, the pattern of the vector indexes'
+  * `ClusterStore.clusterRows`. [[footerMax]] answers `max(col)` from
   * row-group statistics without a scan.
   *
   * Both stay off any layout whose answer would need more than that: a

@@ -342,9 +342,8 @@ object Hnsw {
     * vec (array<float>), `__delta` (boolean), then `attrs`. With no
     * attrs the typed fast path is unchanged.
     */
-  private def buildShardsCarryingAttrs(input: org.apache.spark.sql.DataFrame,
-      attrs: Seq[String], m: Int, efC: Int)
-      : org.apache.spark.sql.DataFrame = {
+  private[operators] def buildShardsCarryingAttrs(input: DataFrame,
+      attrs: Seq[String], m: Int, efC: Int): DataFrame = {
     val spark = input.sparkSession
     import spark.implicits._
     if (attrs.isEmpty) {
@@ -404,12 +403,9 @@ object Hnsw {
 
   /** Shape `df`'s (cluster, id, vec, attrs) into
     * [[buildShardsCarryingAttrs]]'s input layout. */
-  private def shardInput(df: org.apache.spark.sql.DataFrame,
-      clusterCol: org.apache.spark.sql.Column,
-      idCol: org.apache.spark.sql.Column,
-      vecCol: org.apache.spark.sql.Column,
-      delta: Boolean, attrs: Seq[String])
-      : org.apache.spark.sql.DataFrame =
+  private[operators] def shardInput(df: DataFrame, clusterCol: Column,
+      idCol: Column, vecCol: Column, delta: Boolean,
+      attrs: Seq[String]): DataFrame =
     df.select(clusterCol.cast("int").as("cluster") +:
       idCol.cast("long").as("vec_id") +:
       vecCol.cast("array<float>").as("vec") +:
@@ -465,209 +461,131 @@ object Hnsw {
       scala.concurrent.Await.result(modelWrite,
         scala.concurrent.duration.Duration.Inf)
       // drift-meter base: build-time row count, the denominator of
-      // appendedFraction (the Ivf._ROWS_BASE protocol). Footer-only —
-      // the graph was just written, no data scan
-      val n = footerShardSizes(spark, dir).values.sum
-      Ivf.writeCountFile(spark, s"$dir/_ROWS_BASE", n)
-      Ivf.writeCountFile(spark, s"$dir/_ROWS", n)
+      // appendedFraction. Footer-only — the graph was just written, no
+      // data scan
+      ClusterStore.stampBuild(spark, dir, "graph")
     }
 
-  /** Build params (m, efC) recovered from the index's own
-    * `_INDEX_READY` fingerprint, so maintenance ops can never
-    * silently mix graph-shape regimes. Anchored to a field delimiter
-    * on BOTH sides and first-match: an unanchored "m=(\d+)" would
-    * bind inside the marker's embedded source path (e.g. `/dim=64/`
-    * matches `m=64`) and silently rebuild touched shards with the
-    * wrong m/efC, breaking the append-equals-fresh-build bit-identity
-    * the gate pins. The genuine fields are also serialized BEFORE the
-    * path (see ensureIndex's fingerprint), so first-match wins
-    * regardless.
+  /** Build params (m, efC) and the attribute columns stored on the
+    * graph rows, recovered from the index's own `_INDEX_READY`
+    * fingerprint in one read, so maintenance ops can never silently
+    * mix graph-shape regimes or drop attrs. Numeric fields are
+    * anchored to a field delimiter on BOTH sides and first-match: an
+    * unanchored "m=(\d+)" would bind inside the marker's embedded
+    * source path (e.g. `/dim=64/` matches `m=64`) and silently rebuild
+    * touched shards with the wrong m/efC, breaking the
+    * append-equals-fresh-build bit-identity the gate pins. The attrs
+    * parse is confined to the STRUCTURED PREFIX of the fingerprint
+    * (everything before the genuine `,idCol=` field): a PLAIN index
+    * has no attrs field at all, so a source path containing
+    * `,attrs=foo` would otherwise be read as a real attribute column.
     */
-  private def markerParams(spark: SparkSession,
-                           indexPath: String): (Int, Int) = {
-    val markerPath = new org.apache.hadoop.fs.Path(
-      s"$indexPath/_INDEX_READY")
-    val fs = markerPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(markerPath), s"no HNSW index at $indexPath")
-    val marker = {
-      val in = fs.open(markerPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
+  private[graft] final case class BuildParams(m: Int, efC: Int,
+                                              attrs: Seq[String])
+
+  private[graft] def buildParams(spark: SparkSession,
+                                 indexPath: String): BuildParams = {
+    val text = ClusterStore.readMarker(spark, indexPath).getOrElse(
+      throw new IllegalArgumentException(s"no HNSW index at $indexPath"))
     def param(k: String): Int =
       s"(?:^|,)${java.util.regex.Pattern.quote(k)}=(\\d+)(?=,|$$)".r
-        .findFirstMatchIn(marker)
+        .findFirstMatchIn(text)
         .map(_.group(1).toInt)
-        .getOrElse(sys.error(s"index marker lacks $k: $marker"))
-    (param("m"), param("efC"))
+        .getOrElse(sys.error(s"index marker lacks $k: $text"))
+    val structured = text.indexOf(",idCol=") match {
+      case -1 => text // legacy marker shape: no free-form tail
+      case i  => text.substring(0, i)
+    }
+    BuildParams(param("m"), param("efC"),
+      "(?:^|,)attrs=([^,]*)(?=,|$)".r.findFirstMatchIn(structured)
+        .map(_.group(1).split('+').filter(_.nonEmpty).toSeq)
+        .getOrElse(Nil))
   }
 
-  /** Attribute columns stored on this index's graph rows (empty for a
-    * plain index) — parsed from the same marker as [[markerParams]],
-    * so maintenance ops carry them through without the caller having
-    * to remember. The parse is confined to the STRUCTURED PREFIX of
-    * the fingerprint (everything before the genuine `,idCol=` field):
-    * first-match alone protects an attr-carrying index, but a PLAIN
-    * index has no attrs field at all, so a source path containing
-    * `,attrs=foo` would otherwise be read as a real attribute column
-    * and make append/split demand a column that doesn't exist.
+  /** The graph side of a [[ClusterStore.mutate]]: a touched shard
+    * rebuilds whole from its surviving rows and the delta rows routed
+    * to it ([[buildShardsCarryingAttrs]], attrs carried with the
+    * delta-wins precedence), so the delta's shards join the rebuild
+    * set. They come from `clustersHint` when the caller already
+    * assigned the delta on the driver (the streaming route probe —
+    * the same static kernel as the distributed assign, bit-identical,
+    * UpsertFusionSpec), else from one distinct-scan job.
     */
-  private[graft] def markerAttrs(spark: SparkSession,
-                                 indexPath: String): Seq[String] = {
-    val markerPath = new org.apache.hadoop.fs.Path(
-      s"$indexPath/_INDEX_READY")
-    val fs = markerPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(markerPath), s"no HNSW index at $indexPath")
-    val marker = {
-      val in = fs.open(markerPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+  private def graph(spark: SparkSession, indexPath: String,
+                    idCol: String = "vec_id", vecCol: String = "embedding",
+                    clustersHint: Option[Array[Int]] = None)
+      : ClusterStore.Engine = new ClusterStore.Engine {
+    private lazy val b = buildParams(spark, indexPath)
+    val dataDir = "graph"
+    override def survivors(stored: DataFrame): DataFrame =
+      shardInput(stored, col("cluster"), col("vec_id"), col("vec"),
+        delta = false, b.attrs)
+    override def rebuild(rows: DataFrame): DataFrame =
+      buildShardsCarryingAttrs(rows, b.attrs, b.m, b.efC)
+    def stage(delta: DataFrame, stored: Option[DataFrame]) = {
+      // an attribute-carrying index (filtered ANN) requires the delta
+      // to carry its attrs: a silent null-fill would make the new rows
+      // invisible to every predicate
+      val missing = b.attrs.filterNot(delta.columns.contains)
+      require(missing.isEmpty,
+        s"index at $indexPath stores attribute column(s) " +
+          s"${b.attrs.mkString(",")}; the delta lacks ${missing.mkString(",")}")
+      val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
+      val assigned = shardInput(
+        Ivf.assign(delta.filter(col(vecCol).isNotNull), model, vecCol),
+        col("cluster"), col(idCol), col(vecCol), delta = true, b.attrs)
+      ClusterStore.Staged(assigned, Some(clustersHint.getOrElse(
+        assigned.select(col("cluster")).distinct()
+          .collect().map(_.getInt(0)))))
     }
-    val structured = marker.indexOf(",idCol=") match {
-      case -1 => marker // legacy marker shape: no free-form tail
-      case i  => marker.substring(0, i)
-    }
-    "(?:^|,)attrs=([^,]*)(?=,|$)".r.findFirstMatchIn(structured)
-      .map(_.group(1).split('+').filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
   }
 
   /** Incremental index growth (the FAISS `add` shape, like
     * [[Ivf.appendToIndex]]): new vectors route through the EXISTING
     * centroids (no retrain), and only the TOUCHED shards rebuild —
-    * an untouched shard's files are not rewritten (dynamic partition
-    * overwrite). Because [[buildShard]] is a pure function of the
-    * shard's row SET (sorted insertion, hash levels, tie-broken
-    * heaps), append-then-search is BIT-IDENTICAL to a fresh build
-    * over the union — HnswSpec pins that equality — so appends never
-    * degrade the graph the way in-place insertion into a pruned
-    * graph can. Cost is O(touched shard), the price of canonical
-    * equality; build parameters (m, efC) come from the index's own
-    * `_INDEX_READY` fingerprint, so an append can never silently mix
-    * graph-shape regimes.
+    * an untouched shard's files are not rewritten. Because
+    * [[buildShard]] is a pure function of the shard's row SET (sorted
+    * insertion, hash levels, tie-broken heaps), append-then-search is
+    * BIT-IDENTICAL to a fresh build over the union — HnswSpec pins
+    * that equality — so appends never degrade the graph the way
+    * in-place insertion into a pruned graph can. Cost is O(touched
+    * shard), the price of canonical equality; build parameters (m,
+    * efC) come from the index's own `_INDEX_READY` fingerprint, so an
+    * append can never silently mix graph-shape regimes.
     */
   def appendToIndex(df: DataFrame, indexPath: String,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val (m, efC) = markerParams(spark, indexPath)
-    // an index built before the drift meters existed has no
-    // _ROWS_BASE; a caller that only ever appends (never re-running
-    // ensureIndex) would otherwise read appendedFraction = 0.0
-    // forever and the rebuild trigger's append axis would silently
-    // never fire (round-12 ADVICE). Stamp the base from the
-    // PRE-append footer sum — the best available "as-built" count —
-    // so drift meters start from this append instead of never.
-    if (Ivf.readCountFile(spark, s"$indexPath/_ROWS_BASE").isEmpty)
-      Ivf.writeCountFile(spark, s"$indexPath/_ROWS_BASE",
-        footerShardSizes(spark, indexPath).values.sum)
-    val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
-    // an attribute-carrying index (filtered ANN) must keep its attrs
-    // through a touched-shard rebuild: the delta is REQUIRED to carry
-    // them (a silent null-fill would make appended rows invisible to
-    // every predicate), and the rebuilt shards re-join attrs from
-    // existing ∪ delta — buildShard itself stays attr-free
-    val attrs = markerAttrs(spark, indexPath)
-    val missing = attrs.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"index at $indexPath stores attribute column(s) ${attrs.mkString(",")}; " +
-        s"the append delta lacks ${missing.mkString(",")}")
-    val assigned = shardInput(Ivf.assign(df, model, vecCol),
-      col("cluster"), col(idCol), col(vecCol), delta = true, attrs)
-    val touched = assigned.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    // a graph deleted to EMPTY (all-tombstone CDC epoch) has no
-    // parquet left to infer a schema from — the next append rebuilds
-    // its touched shards from the delta alone instead of crashing on
-    // schema inference (round-14 ADVICE)
-    val hasGraph = Ivf.hasParquetFiles(spark, s"$indexPath/graph")
-    val existing =
-      if (hasGraph)
-        shardInput(spark.read.parquet(s"$indexPath/graph")
-            .filter(col("cluster").isin(touched.toIndexedSeq: _*)),
-          col("cluster"), col("vec_id"), col("vec"),
-          delta = false, attrs)
-      else assigned.limit(0)
-    // attrs CARRY through the rebuild's own shuffle with the pinned
-    // per-(cluster, vec_id) delta-wins precedence (round-15 ADVICE,
-    // now resolved inside the shard group — round-16 removed the
-    // post-build join that re-shuffled every heavy graph row): the
-    // delta's attr row lands at its ASSIGNED cluster; existing attrs
-    // keep their stored cluster; where both claim the same
-    // (cluster, vec_id) the delta's row wins — the newest write, the
-    // upsert semantics the CDC path expects. The tolerated
-    // re-appended-id state still never fans out graph rows (HnswSpec).
-    val rebuilt = buildShardsCarryingAttrs(
-      existing.unionByName(assigned), attrs, m, efC)
-    // single-write partition swap (round-17: append was still on the
-    // dynamic-overwrite commit; rewriteSwap is the same non-atomicity
-    // contract with one write and per-shard fs renames, and it never
-    // lists the untouched shards)
-    Ivf.rewriteSwap(spark, s"$indexPath/graph", rebuilt, touched)
-    // maintain the live row count from footers (exact: untouched
-    // shards keep their files, touched shards were just rewritten) —
-    // _ROWS_BASE stays at build value, so appendedFraction meters
-    // drift since the last RETRAIN, not since the last append
-    Ivf.writeCountFile(spark, s"$indexPath/_ROWS",
-      footerShardSizes(spark, indexPath).values.sum)
-  }
+                    vecCol: String = "embedding"): Unit =
+    ClusterStore.mutate(df.sparkSession, indexPath,
+      graph(df.sparkSession, indexPath, idCol, vecCol),
+      doomed = None, delta = Some(df)): Unit
 
   // ── drift / imbalance meters (round-11 VERDICT #6) ─────────────────
 
-  /** Per-shard row counts read from parquet FOOTERS only — a driver
-    * metadata walk (list `graph/cluster=N/`, sum each footer's record
-    * count), never a data scan. This is the [[Ivf.indexRowCount]]
-    * idea widened to per-shard resolution, which HNSW needs because
-    * its memory contract is PER-SHARD ("one shard's vectors fit one
-    * executor"): a global row count can look healthy while routing
-    * drift funnels every append into one shard.
+  /** Per-shard row counts read from parquet FOOTERS only
+    * ([[ClusterStore.clusterRows]]) — a driver metadata walk, never a
+    * data scan. HNSW needs per-shard resolution because its memory
+    * contract is PER-SHARD ("one shard's vectors fit one executor"): a
+    * global row count can look healthy while routing drift funnels
+    * every append into one shard.
     */
   def footerShardSizes(spark: SparkSession,
-                       indexPath: String): Map[Int, Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val graph = new org.apache.hadoop.fs.Path(s"$indexPath/graph")
-    val fs = graph.getFileSystem(conf)
-    if (!fs.exists(graph)) return Map.empty
-    fs.listStatus(graph).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster="))
-      .map { shardDir =>
-        val cl = shardDir.getPath.getName.stripPrefix("cluster=").toInt
-        val rows = fs.listStatus(shardDir.getPath).iterator
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(f.getPath, conf))
-            try rdr.getRecordCount finally rdr.close()
-          }.sum
-        cl -> rows
-      }.toMap
-  }
+                       indexPath: String): Map[Int, Long] =
+    ClusterStore.clusterRows(spark, s"$indexPath/graph")
 
   /** The build-time row count (`_ROWS_BASE`) — the drift meter's
     * denominator, exposed for callers that want the raw integers
     * (e.g. a lifecycle gate computing an exact ppm).
     */
   def baseRowCount(spark: SparkSession, indexPath: String): Option[Long] =
-    Ivf.readCountFile(spark, s"$indexPath/_ROWS_BASE")
+    ClusterStore.readCountFile(spark, s"$indexPath/_ROWS_BASE")
 
-  /** Appended-since-build fraction — identical semantics to
-    * [[Ivf.appendedFraction]] (live − base) / base, with the live
-    * count from the maintained `_ROWS` (footer fallback for an index
-    * whose `_ROWS` predates this meter). 0.0 for a fresh build.
+  /** Appended-since-build fraction — the same meter as
+    * [[Ivf.appendedFraction]] ([[ClusterStore.appendedFraction]]):
+    * (live − base) / base, 0.0 for a fresh build.
     */
-  def appendedFraction(spark: SparkSession, indexPath: String): Double = {
-    val live = Ivf.readCountFile(spark, s"$indexPath/_ROWS")
-      .getOrElse(footerShardSizes(spark, indexPath).values.sum)
-    Ivf.readCountFile(spark, s"$indexPath/_ROWS_BASE") match {
-      case Some(base) if base > 0 =>
-        math.max(0.0, (live - base).toDouble / base)
-      case _ => 0.0
-    }
-  }
+  def appendedFraction(spark: SparkSession, indexPath: String): Double =
+    ClusterStore.appendedFraction(spark, indexPath, "graph")
 
   /** Largest-shard skew: max shard rows / mean shard rows (1.0 =
     * perfectly even, ∞-ish = one shard owns the corpus). Footer-only.
@@ -764,6 +682,78 @@ object Hnsw {
     else NoRebuild
   }
 
+  /** Delete vectors from an existing graph index — the maintenance
+    * complement of [[appendToIndex]], [[Ivf.deleteFromIndex]]'s graph
+    * twin: only shards that actually hold matching rows REBUILD
+    * (from their remaining row set — [[buildShard]] being a pure
+    * function of the set, the rebuilt shard is bit-identical to a
+    * fresh build over the survivors, so deletion never leaves the
+    * dangling-edge holes an in-place graph unlink does), untouched
+    * shards keep their files. Attribute columns ride the rebuild
+    * from the surviving rows. Rows whose predicate evaluates NULL
+    * are KEPT (delete means provably matching); a shard deleted to
+    * empty loses its directory. Cost O(touched shards). Returns rows
+    * deleted.
+    */
+  def deleteFromIndex(spark: SparkSession, indexPath: String,
+                      predicate: org.apache.spark.sql.Column): Long =
+    ClusterStore.mutate(spark, indexPath, graph(spark, indexPath),
+      Some(ClusterStore.Where(predicate)), delta = None)
+
+  /** [[deleteFromIndex]] against a DISTRIBUTED id relation — the
+    * graph twin of [[Ivf.deleteIdsFromIndex]] (round-15 VERDICT #4):
+    * semi-join selects the doomed rows, anti-join the survivors, so a
+    * bulk tombstone epoch never becomes a driver-side `isin` literal
+    * list. Same touched-shard canonical rebuild, same emptied-shard
+    * removal, same return contract.
+    */
+  def deleteIdsFromIndex(spark: SparkSession, indexPath: String,
+                         ids: org.apache.spark.sql.DataFrame,
+                         idCol: String = "vec_id"): Long =
+    ClusterStore.mutate(spark, indexPath, graph(spark, indexPath),
+      Some(storedIds(ids, idCol)), delta = None)
+
+  /** `ids` as a selection over the graph's own `vec_id` column. */
+  private def storedIds(ids: DataFrame, idCol: String): ClusterStore.Ids =
+    ClusterStore.Ids(ids.select(col(idCol).as("vec_id")), "vec_id")
+
+  /** Fused DELETE-THEN-APPEND — one CDC epoch against the graph index
+    * in a SINGLE touched-shard rebuild. [[deleteFromIndex]] followed
+    * by [[appendToIndex]] rebuilds every shard touched by both halves
+    * TWICE ([[buildShard]] is the dominant per-epoch cost); because
+    * buildShard's output is a pure function of the row SET,
+    * rebuilding once from (survivors ∪ assigned delta) produces the
+    * byte-identical final graph — same rows, same adjacency, same
+    * meters (UpsertFusionSpec pins the equivalence; the
+    * q_v_stream_hnsw* oracles check it end to end). Shards touched by
+    * neither half keep their files byte-identical. `deltaRowsHint`
+    * (the delta's non-null-vector row count) restamps `_ROWS` by
+    * arithmetic; `deltaClustersHint` (the delta's driver-assigned
+    * shards) saves the distinct-scan job. Returns the number of rows
+    * deleted.
+    */
+  def upsertToIndex(spark: SparkSession, indexPath: String,
+                    predicate: org.apache.spark.sql.Column,
+                    delta: org.apache.spark.sql.DataFrame,
+                    idCol: String = "vec_id",
+                    vecCol: String = "embedding",
+                    deltaRowsHint: Option[Long] = None,
+                    deltaClustersHint: Option[Array[Int]] = None): Long =
+    ClusterStore.mutate(spark, indexPath,
+      graph(spark, indexPath, idCol, vecCol, deltaClustersHint),
+      Some(ClusterStore.Where(predicate)), Some(delta), deltaRowsHint)
+
+  /** [[upsertToIndex]] with the touched ids as a DISTRIBUTED relation
+    * — the bulk-epoch form; see [[deleteIdsFromIndex]].
+    */
+  def upsertIdsToIndex(spark: SparkSession, indexPath: String,
+                       ids: org.apache.spark.sql.DataFrame,
+                       delta: org.apache.spark.sql.DataFrame,
+                       idCol: String = "vec_id",
+                       vecCol: String = "embedding"): Long =
+    ClusterStore.mutate(spark, indexPath, graph(spark, indexPath, idCol, vecCol),
+      Some(storedIds(ids, idCol)), Some(delta))
+
   /** Split ONE hot shard in place — the skew remedy (the append-side
     * dual of a compaction: cost is O(hot shard), no other shard is
     * read or written, and the row SET is untouched). 2-means inside
@@ -793,209 +783,9 @@ object Hnsw {
     * the extra centroid routes alongside its twin — harmless, and the
     * split is a no-op as it should be. Returns the new shard id.
     */
-  /** Delete vectors from an existing graph index — the maintenance
-    * complement of [[appendToIndex]], [[Ivf.deleteFromIndex]]'s graph
-    * twin: only shards that actually hold matching rows REBUILD
-    * (from their remaining row set — [[buildShard]] being a pure
-    * function of the set, the rebuilt shard is bit-identical to a
-    * fresh build over the survivors, so deletion never leaves the
-    * dangling-edge holes an in-place graph unlink does), untouched
-    * shards keep their files. Attribute columns ride the rebuild
-    * from the surviving rows. Rows whose predicate evaluates NULL
-    * are KEPT (delete means provably matching); a shard deleted to
-    * empty is removed explicitly (dynamic overwrite would keep its
-    * old files). Cost O(touched shards). Returns rows deleted.
-    */
-  def deleteFromIndex(spark: SparkSession, indexPath: String,
-                      predicate: org.apache.spark.sql.Column): Long =
-    deleteFromIndexImpl(spark, indexPath,
-      matchRows = _.filter(predicate),
-      keepRows = _.filter(!(predicate <=> lit(true))))
-
-  /** [[deleteFromIndex]] against a DISTRIBUTED id relation — the
-    * graph twin of [[Ivf.deleteIdsFromIndex]] (round-15 VERDICT #4):
-    * semi-join selects the doomed rows, anti-join the survivors, so a
-    * bulk tombstone epoch never becomes a driver-side `isin` literal
-    * list. Same touched-shard canonical rebuild, same emptied-shard
-    * removal, same return contract.
-    */
-  def deleteIdsFromIndex(spark: SparkSession, indexPath: String,
-                         ids: org.apache.spark.sql.DataFrame,
-                         idCol: String = "vec_id"): Long = {
-    val sel = ids.select(col(idCol).as("vec_id")).distinct()
-    deleteFromIndexImpl(spark, indexPath,
-      matchRows = _.join(sel, Seq("vec_id"), "left_semi"),
-      keepRows = _.join(sel, Seq("vec_id"), "left_anti"))
-  }
-
-  private def deleteFromIndexImpl(spark: SparkSession, indexPath: String,
-      matchRows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      keepRows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Long = {
-    import spark.implicits._
-    if (!Ivf.hasParquetFiles(spark, s"$indexPath/graph"))
-      return 0L                     // already emptied: nothing to do
-    val (m, efC) = markerParams(spark, indexPath)
-    val attrs = markerAttrs(spark, indexPath)
-    // see Ivf.deleteFromIndex: refresh the shared FileStatusCache on
-    // both sides of the mutation
-    spark.catalog.refreshByPath(s"$indexPath/graph")
-    val graph = spark.read.parquet(s"$indexPath/graph")
-    val perShard = matchRows(graph).groupBy(col("cluster"))
-      .agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (perShard.isEmpty) return 0L
-    val nDel = perShard.values.sum
-    val touched = perShard.keys.toArray.sorted
-    // survivors rebuild with their attrs CARRIED through the shard
-    // group (round-16; the old form re-joined them onto the built
-    // graph, re-shuffling every heavy row), written ONCE into a
-    // sibling rewrite dir and swapped in at the fs level
-    // (Ivf.rewriteSwap — the scratch + dynamic-overwrite pair wrote
-    // every surviving row twice and paid two extra jobs per delete);
-    // the emptied-shard case falls out of the swap (no output dir →
-    // the touched dir is just deleted)
-    val rebuilt = buildShardsCarryingAttrs(
-      shardInput(
-        keepRows(graph.filter(col("cluster").isin(touched.toIndexedSeq: _*))),
-        col("cluster"), col("vec_id"), col("vec"),
-        delta = false, attrs),
-      attrs, m, efC)
-    Ivf.rewriteSwap(spark, s"$indexPath/graph", rebuilt, touched)
-    Ivf.writeCountFile(spark, s"$indexPath/_ROWS",
-      footerShardSizes(spark, indexPath).values.sum)
-    nDel
-  }
-
-  /** Fused DELETE-THEN-APPEND — one CDC epoch against the graph index
-    * in a SINGLE touched-shard rebuild (round-16 optimization).
-    * [[deleteFromIndex]] followed by [[appendToIndex]] rebuilds every
-    * shard touched by both halves TWICE ([[buildShard]] is the
-    * dominant per-epoch cost); because buildShard's output is a pure
-    * function of the row SET, rebuilding once from
-    * (survivors ∪ assigned delta) produces the byte-identical final
-    * graph — same rows, same adjacency, same meters (UpsertFusionSpec
-    * pins the equivalence; the q_v_stream_hnsw* oracles check it end
-    * to end). Shards touched by neither half keep their files
-    * byte-identical. Returns the number of rows deleted.
-    */
-  def upsertToIndex(spark: SparkSession, indexPath: String,
-                    predicate: org.apache.spark.sql.Column,
-                    delta: org.apache.spark.sql.DataFrame,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding",
-                    deltaRowsHint: Option[Long] = None,
-                    deltaClustersHint: Option[Array[Int]] = None): Long =
-    upsertImpl(spark, indexPath,
-      matchRows = _.filter(predicate),
-      keepRows = _.filter(!(predicate <=> lit(true))),
-      delta, idCol, vecCol, deltaRowsHint, deltaClustersHint)
-
-  /** [[upsertToIndex]] with the touched ids as a DISTRIBUTED relation
-    * — the bulk-epoch form; see [[deleteIdsFromIndex]].
-    */
-  def upsertIdsToIndex(spark: SparkSession, indexPath: String,
-                       ids: org.apache.spark.sql.DataFrame,
-                       delta: org.apache.spark.sql.DataFrame,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Long = {
-    val sel = ids.select(col(idCol).as("vec_id")).distinct()
-    upsertImpl(spark, indexPath,
-      matchRows = _.join(sel, Seq("vec_id"), "left_semi"),
-      keepRows = _.join(sel, Seq("vec_id"), "left_anti"),
-      delta, idCol, vecCol)
-  }
-
-  private def upsertImpl(spark: SparkSession, indexPath: String,
-      matchRows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      keepRows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      delta: org.apache.spark.sql.DataFrame,
-      idCol: String, vecCol: String,
-      deltaRowsHint: Option[Long] = None,
-      deltaClustersHint: Option[Array[Int]] = None): Long = {
-    import spark.implicits._
-    val (m, efC) = markerParams(spark, indexPath)
-    val attrs = markerAttrs(spark, indexPath)
-    val missing = attrs.filterNot(delta.columns.contains)
-    require(missing.isEmpty,
-      s"index at $indexPath stores attribute column(s) ${attrs.mkString(",")}; " +
-        s"the upsert delta lacks ${missing.mkString(",")}")
-    val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
-    val hasGraph = Ivf.hasParquetFiles(spark, s"$indexPath/graph")
-    // the append half's legacy-index contract (round-12 ADVICE): a
-    // pre-meter index stamps its base from the as-mutated-by-the-
-    // delete-half count — exactly what the sequential appendToIndex
-    // would have read — so the drift meter starts from this epoch
-    val preRows =
-      if (Ivf.readCountFile(spark, s"$indexPath/_ROWS_BASE").isEmpty)
-        Some(footerShardSizes(spark, indexPath).values.sum)
-      else None
-    val assigned = shardInput(
-      Ivf.assign(delta.filter(col(vecCol).isNotNull), model, vecCol),
-      col("cluster"), col(idCol), col(vecCol), delta = true, attrs)
-    // which shards the delta lands in: a caller already holding the
-    // delta's vectors locally (the streaming route probe) hands in the
-    // driver-computed assignment — the SAME static kernel + norms the
-    // distributed assign runs (NativeExpressions.nearestCentroidDriver,
-    // bit-identical by construction, UpsertFusionSpec-pinned), saving
-    // one Spark job per epoch; everyone else pays the distinct scan
-    val touchedAppend = deltaClustersHint.getOrElse(
-      assigned.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0)))
-    var nDel = 0L
-    var touchedDel = Array.empty[Int]
-    if (hasGraph) {
-      spark.catalog.refreshByPath(s"$indexPath/graph")
-      val perShard = matchRows(spark.read.parquet(s"$indexPath/graph"))
-        .groupBy(col("cluster"))
-        .agg(count(lit(1)).as("__n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      nDel = perShard.values.sum
-      touchedDel = perShard.keys.toArray
-    }
-    val rebuildSet = (touchedDel ++ touchedAppend).distinct.sorted
-    if (rebuildSet.isEmpty) return 0L   // empty epoch: nothing touched
-    // survivors of every rebuilt shard: delete-touched shards lose
-    // their matching rows; append-only shards keep everything (the
-    // keepRows filter provably matches nothing there). Attrs CARRY
-    // through the shard group with the pinned delta-wins precedence
-    // (round-16; see buildShardsCarryingAttrs).
-    val keep =
-      if (hasGraph)
-        shardInput(
-          keepRows(spark.read.parquet(s"$indexPath/graph")
-            .filter(col("cluster").isin(rebuildSet.toIndexedSeq: _*))),
-          col("cluster"), col("vec_id"), col("vec"),
-          delta = false, attrs)
-      else assigned.limit(0)
-    val rebuilt = buildShardsCarryingAttrs(
-      keep.unionByName(assigned), attrs, m, efC)
-    // pre-mutation row count for the arithmetic restamp below — read
-    // BEFORE the swap so a fallback footer walk is still available
-    val preLive =
-      if (hasGraph) Ivf.readCountFile(spark, s"$indexPath/_ROWS")
-      else Some(0L)
-    Ivf.rewriteSwap(spark, s"$indexPath/graph", rebuilt, rebuildSet)
-    preRows.foreach(pre =>
-      Ivf.writeCountFile(spark, s"$indexPath/_ROWS_BASE", pre - nDel))
-    // arithmetic `_ROWS` restamp when the caller supplied the delta's
-    // non-null-vector row count (the streaming epoch's route probe):
-    // new = pre − deleted + assigned, exactly what the footer walk
-    // would re-measure (UpsertFusionSpec pins them equal); a legacy
-    // index without a `_ROWS` stamp still takes the walk
-    (deltaRowsHint, preLive) match {
-      case (Some(dr), Some(pre)) =>
-        Ivf.writeCountFile(spark, s"$indexPath/_ROWS", pre - nDel + dr)
-      case _ =>
-        Ivf.writeCountFile(spark, s"$indexPath/_ROWS",
-          footerShardSizes(spark, indexPath).values.sum)
-    }
-    nDel
-  }
-
   def splitShard(spark: SparkSession, indexPath: String, cluster: Int,
                  iters: Int = 4, seed: Long = 42L): Int = {
-    import spark.implicits._
-    val (m, efC) = markerParams(spark, indexPath)
+    val b = buildParams(spark, indexPath)
     val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
     require(cluster >= 0 && cluster < model.centroids.length,
       s"no shard $cluster in a ${model.centroids.length}-shard index")
@@ -1011,7 +801,6 @@ object Hnsw {
     // and could fan out duplicated rows in the tolerated
     // re-appended-id state — the same shape the round-15 ADVICE fixed
     // on the delete path)
-    val attrs = markerAttrs(spark, indexPath)
     val rebuilt = buildShardsCarryingAttrs(
       shardInput(
         shardAll.withColumn("__newcl",
@@ -1019,13 +808,13 @@ object Hnsw {
             nearestCentroids(col("vec"), sub.centroids, 1), 1) === 0,
             lit(cluster)).otherwise(lit(newId))),
         col("__newcl"), col("vec_id"), col("vec"),
-        delta = false, attrs),
-      attrs, m, efC)
+        delta = false, b.attrs),
+      b.attrs, b.m, b.efC)
     // single-write partition swap (round-17: the split was the last
     // maintenance op still on the dynamic-overwrite commit; rewriteSwap
     // is the same non-atomicity contract with one write and two fs
     // renames, and it never lists the untouched shards)
-    Ivf.rewriteSwap(spark, s"$indexPath/graph", rebuilt,
+    ClusterStore.rewriteSwap(spark, s"$indexPath/graph", rebuilt,
       Array(cluster, newId))
     // router update last (see the maintenance-window note above);
     // saveModel's overwrite bumps the centroid dir's stat, so
@@ -1089,28 +878,15 @@ object Hnsw {
     n
   }
 
-  /** Files per graph shard — [[Ivf.filesPerCluster]]'s graph twin,
-    * the fragmentation meter the append path needs: every maintenance
-    * rewrite of a touched shard can land multiple files (the
-    * attr-rejoin shuffles rows across tasks before the partitioned
-    * write), and at 100 TB a daily-ingest index degrades into
-    * KB-scale files whose open/footer overhead dominates the scan.
-    * Footer-free: one recursive listing, no Spark job.
+  /** Files per graph shard ([[ClusterStore.filesPerCluster]]) — the
+    * fragmentation meter: every maintenance rewrite of a touched shard
+    * can land more than one file, and at 100 TB a daily-ingest index
+    * degrades into KB-scale files whose open/footer overhead dominates
+    * the scan.
     */
   def filesPerShard(spark: SparkSession,
-                    indexPath: String): Map[Int, Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/graph")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val counts = scala.collection.mutable.Map.empty[Int, Int]
-    val it = fs.listFiles(p, true)
-    val re = ".*/cluster=(\\d+)/[^/]*\\.parquet$".r
-    while (it.hasNext) it.next().getPath.toString match {
-      case re(c) => counts(c.toInt) = counts.getOrElse(c.toInt, 0) + 1
-      case _ => ()
-    }
-    counts.toMap
-  }
+                    indexPath: String): Map[Int, Int] =
+    ClusterStore.filesPerCluster(spark, s"$indexPath/graph")
 
   /** The operable compaction trigger: true once any shard holds more
     * than `maxFilesPerShard` files — layout health, not content
@@ -1118,37 +894,17 @@ object Hnsw {
     */
   def needsCompaction(spark: SparkSession, indexPath: String,
                       maxFilesPerShard: Int = 16): Boolean =
-    filesPerShard(spark, indexPath).values.exists(_ > maxFilesPerShard)
+    ClusterStore.needsCompaction(spark, s"$indexPath/graph", maxFilesPerShard)
 
   /** Rewrite fragmented graph shards into one file each —
-    * [[Ivf.compactIndex]]'s graph twin, OPTIMIZE for the shard
-    * layout. Content-invisible by construction: the graph adjacency
-    * is stored PER ROW ([[GraphNode]] carries its neighbor lists), so
-    * compaction moves rows between files without rebuilding anything
-    * — same rows, same partition values, and the search path cannot
-    * tell (the gate's shared brute-force oracle checks exactly that).
-    * Only shards holding more than one file rewrite; every other
-    * shard's files stay byte-identical (dynamic partition overwrite).
-    * The rewrite repartitions by the partition column so each touched
-    * shard lands in exactly one task → one file. Returns the number
-    * of compacted shards.
+    * [[Ivf.compactIndex]]'s graph twin ([[ClusterStore.compact]]).
+    * Content-invisible by construction: the graph adjacency is stored
+    * PER ROW ([[GraphNode]] carries its neighbor lists), so compaction
+    * moves rows between files without rebuilding anything. Returns the
+    * number of compacted shards.
     */
-  def compactShards(spark: SparkSession, indexPath: String): Int = {
-    val frag = filesPerShard(spark, indexPath).filter(_._2 > 1)
-    if (frag.isEmpty) return 0
-    val touched = frag.keys.toArray.sorted
-    spark.catalog.refreshByPath(s"$indexPath/graph")
-    val graph = spark.read.parquet(s"$indexPath/graph")
-    // one write, fs-level swap (round-16; see Ivf.rewriteSwap): the
-    // old scratch + dynamic-overwrite pair wrote every compacted row
-    // twice
-    Ivf.rewriteSwap(spark, s"$indexPath/graph",
-      graph.filter(col("cluster").isin(touched.toIndexedSeq: _*))
-        .repartition(touched.length, col("cluster")),
-      touched)
-    touched.length
-  }
-
+  def compactShards(spark: SparkSession, indexPath: String): Int =
+    ClusterStore.compact(spark, s"$indexPath/graph")
   /** What [[maintain]] did and what it could not do itself —
     * [[Ivf.MaintenanceReport]]'s graph sibling, with the extra axes
     * HNSW has: splits performed (the skew remedy the autopilot CAN

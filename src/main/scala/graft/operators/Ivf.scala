@@ -286,70 +286,65 @@ object Ivf {
     // and an index whose every row has been deleted (a legal CDC
     // state — an all-tombstone epoch) has no parquet footer left to
     // infer it from (round-14 ADVICE)
-    writeSchemaFile(spark, s"$path/_SCHEMA", out.schema)
+    ClusterStore.writeSchemaFile(spark, s"$path/_SCHEMA", out.schema)
     // the prefix width persists beside the schema: appendToIndex must
     // slice its delta identically, and search must slice the QUERY
     // side to the stored width — neither can infer it from a column
     // whose corpus may be empty (all-tombstone CDC state)
     if (mrlDims > 0)
-      writeCountFile(spark, s"$path/_MRL_DIMS", mrlDims.toLong)
-    val n = writeRowCount(spark, path)
-    // the BUILD-time count, stamped only here (never by append): the
-    // denominator of the drift meter appendedFraction reads
-    writeCountFile(spark, s"$path/_ROWS_BASE", n)
+      ClusterStore.writeCountFile(spark, s"$path/_MRL_DIMS", mrlDims.toLong)
+    ClusterStore.stampBuild(spark, path, "corpus")
   }
 
   /** Incrementally ADD vectors to an existing on-disk index without
-    * retraining or rewriting it — FAISS's `add` made distributed: new
-    * vectors assign to the EXISTING centroids (and, for a PQ index,
-    * encode with the EXISTING codebooks — retraining either would
-    * silently invalidate every previously stored code) and append as
-    * new files inside their cluster's partition directory, so search
-    * partition pruning keeps working unchanged and nothing already
-    * stored is touched. `_ROWS` re-counts from parquet footers.
+    * retraining it — FAISS's `add` made distributed: new vectors
+    * assign to the EXISTING centroids (and, for a PQ index, encode
+    * with the EXISTING codebooks — retraining either would silently
+    * invalidate every previously stored code) and move in as new files
+    * inside their cluster's partition directory, so search partition
+    * pruning keeps working unchanged and nothing already stored is
+    * touched. `_ROWS` re-counts from parquet footers.
     *
     * The daily-ingest contract, mirrored from
     * [[Dedup.incrementalNearDups]]: the delta pays one assignment
     * pass over ITSELF only. Two caveats, by design:
-    *  - centroids drift as the distribution shifts — monitor the
-    *    appended fraction (`indexRowCount` vs the build-time count)
-    *    and rebuild via [[ensureIndex]] with a bumped fingerprint
-    *    once it outgrows the recall budget (the same retrain contract
-    *    FAISS documents for IVF add);
-    *  - a parquet append is not atomic: wrap concurrent/replayed
-    *    ingest in the caller's dedup (e.g. commit the delta's ids
-    *    through a [[graft.engine.VersionedTable]] ledger first), or
-    *    tolerate re-appended ids being deduplicated at read time.
+    *  - centroids drift as the distribution shifts — monitor
+    *    [[appendedFraction]] and rebuild via [[ensureIndex]] with a
+    *    bumped fingerprint once it outgrows the recall budget (the
+    *    same retrain contract FAISS documents for IVF add);
+    *  - an append is not atomic: wrap concurrent/replayed ingest in
+    *    the caller's dedup (e.g. commit the delta's ids through a
+    *    [[graft.engine.VersionedTable]] ledger first), or tolerate
+    *    re-appended ids being deduplicated at read time.
     * Appends are deltas BEYOND the ensureIndex source snapshot: if
     * the source itself regenerates, ensureIndex rebuilds and the
     * appended deltas are expected to replay from their own feed.
     */
   def appendToIndex(df: DataFrame, indexPath: String,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    val spark = df.sparkSession
-    val corpusSchema = storedCorpusSchema(spark, indexPath)
-    encodeForCorpus(df, indexPath, corpusSchema, vecCol)
-      .write.mode("append").partitionBy("cluster")
-      .parquet(s"$indexPath/corpus")
-    writeRowCount(spark, indexPath): Unit
-  }
+                    vecCol: String = "embedding"): Unit =
+    ClusterStore.mutate(df.sparkSession, indexPath, corpus(indexPath, vecCol),
+      doomed = None, delta = Some(df)): Unit
 
-  /** The stored corpus column set: inferred from the live parquet, or
-    * — for an index deleted to EMPTY (all-tombstone CDC epoch), which
-    * has no parquet left — the build-time _SCHEMA record, so the next
-    * append resurrects the corpus instead of crashing on schema
-    * inference (round-14 ADVICE); a pre-_SCHEMA artifact in that
-    * state gets a loud, actionable error instead of Spark's "unable
-    * to infer schema".
+  /** The IVF side of a [[ClusterStore.mutate]]: stored rows are
+    * independent, so nothing rebuilds — a delta lands as encoded rows
+    * beside them, aligned to the stored column set: the live corpus's
+    * schema or, for an index deleted to EMPTY (all-tombstone CDC
+    * epoch), the build-time `_SCHEMA` record (round-14 ADVICE).
     */
-  private def storedCorpusSchema(spark: SparkSession, indexPath: String)
-      : org.apache.spark.sql.types.StructType =
-    if (hasParquetFiles(spark, s"$indexPath/corpus"))
-      spark.read.parquet(s"$indexPath/corpus").schema
-    else readSchemaFile(spark, s"$indexPath/_SCHEMA").getOrElse(
-      sys.error(s"index corpus at $indexPath is empty and predates " +
-        "the _SCHEMA record; rebuild via ensureIndex"))
+  private def corpus(indexPath: String,
+                     vecCol: String = "embedding"): ClusterStore.Engine =
+    new ClusterStore.Engine {
+      val dataDir = "corpus"
+      def stage(delta: DataFrame, stored: Option[DataFrame]) = {
+        val schema = stored.fold(ClusterStore.readSchemaFile(
+          delta.sparkSession, s"$indexPath/_SCHEMA").getOrElse(
+          sys.error(s"index corpus at $indexPath is empty and predates " +
+            "the _SCHEMA record; rebuild via ensureIndex")))(_.schema)
+        ClusterStore.Staged(encodeForCorpus(delta, indexPath, schema, vecCol),
+          clusters = None)
+      }
+    }
 
   /** Encode an append delta to the stored corpus layout: assign to
     * the EXISTING centroids and derive exactly the auxiliary columns
@@ -357,7 +352,7 @@ object Ivf {
     * / PQ codes, residual or plain) — retraining any of them would
     * silently invalidate every previously stored row.
     */
-  private def encodeForCorpus(df: DataFrame, indexPath: String,
+  private[operators] def encodeForCorpus(df: DataFrame, indexPath: String,
       corpusSchema: org.apache.spark.sql.types.StructType,
       vecCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -376,9 +371,9 @@ object Ivf {
     // delta sliced to a different width would silently misscore the
     // shortlist for every appended row
     val q8 = if (corpusSchema.fieldNames.contains("mrl")) {
-      val dims = readCountFile(spark, s"$indexPath/_MRL_DIMS").getOrElse(
+      val dims = ClusterStore.mrlDims(spark, indexPath).getOrElse(
         sys.error(s"index at $indexPath stores an mrl column but no " +
-          "_MRL_DIMS record; rebuild via ensureIndexMrl")).toInt
+          "_MRL_DIMS record; rebuild via ensureIndexMrl"))
       q8b.withColumn("mrl", slice(col(vecCol), 1, dims))
     } else q8b
     val fsPath = new org.apache.hadoop.fs.Path(s"$indexPath/pq")
@@ -404,14 +399,17 @@ object Ivf {
   }
 
   /** Fused DELETE-THEN-APPEND — one epoch of the vector-DB write path
-    * in a single maintenance pass (round-16 optimization). Produces
-    * the index state [[deleteFromIndex]] followed by [[appendToIndex]]
-    * would (same survivors, same encoded delta rows, same meters) but
-    * shares one corpus scan, one schema probe, one footer restamp and
-    * one listing refresh between the two halves, instead of paying
-    * each twice. The streaming CDC path is the caller; both delete
-    * forms exist exactly as on the standalone path (`isin` literal
-    * predicate under the driver cap, distributed id relation past it).
+    * in a single maintenance pass. Produces the index state
+    * [[deleteFromIndex]] followed by [[appendToIndex]] would (same
+    * survivors, same encoded delta rows, same meters) in ONE write:
+    * the touched clusters' survivors and the encoded delta ride the
+    * same job, and delta files for untouched clusters move in beside
+    * the stored ones. The streaming CDC path is the caller; both
+    * delete forms exist exactly as on the standalone path (`isin`
+    * literal predicate under the driver cap, distributed id relation
+    * past it). A caller that knows the delta's non-null-vector row
+    * count passes it as `deltaRowsHint`, and `_ROWS` is restamped by
+    * arithmetic instead of a footer walk over every corpus file.
     * Returns the number of rows deleted.
     */
   def upsertToIndex(spark: SparkSession, indexPath: String,
@@ -420,10 +418,8 @@ object Ivf {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     deltaRowsHint: Option[Long] = None): Long =
-    upsertImpl(spark, indexPath,
-      matchRows = _.filter(predicate),
-      keepRows = _.filter(!(predicate <=> lit(true))),
-      delta, vecCol, deltaRowsHint)
+    ClusterStore.mutate(spark, indexPath, corpus(indexPath, vecCol),
+      Some(ClusterStore.Where(predicate)), Some(delta), deltaRowsHint)
 
   /** [[upsertToIndex]] with the touched ids as a DISTRIBUTED relation
     * — the bulk-epoch form; see [[deleteIdsFromIndex]].
@@ -431,103 +427,27 @@ object Ivf {
   def upsertIdsToIndex(spark: SparkSession, indexPath: String,
                        ids: DataFrame, delta: DataFrame,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Long = {
-    val sel = ids.select(col(idCol)).distinct()
-    upsertImpl(spark, indexPath,
-      matchRows = _.join(sel, Seq(idCol), "left_semi"),
-      keepRows = _.join(sel, Seq(idCol), "left_anti"),
-      delta, vecCol)
-  }
-
-  private def upsertImpl(spark: SparkSession, indexPath: String,
-                         matchRows: DataFrame => DataFrame,
-                         keepRows: DataFrame => DataFrame,
-                         delta: DataFrame, vecCol: String,
-                         deltaRowsHint: Option[Long] = None): Long = {
-    val corpusExists = hasParquetFiles(spark, s"$indexPath/corpus")
-    if (corpusExists) spark.catalog.refreshByPath(s"$indexPath/corpus")
-    // schema BEFORE the delete half: the rewrite preserves the column
-    // set, so this equals what a post-delete probe would read
-    val corpusSchema = storedCorpusSchema(spark, indexPath)
-    // pre-mutation row count, for the arithmetic restamp below
-    val preRows = if (corpusExists)
-      readCountFile(spark, s"$indexPath/_ROWS") else Some(0L)
-    var nDel = 0L
-    val encoded = encodeForCorpus(delta, indexPath, corpusSchema, vecCol)
-    var fused = false
-    if (corpusExists) {
-      val corpus = spark.read.parquet(s"$indexPath/corpus")
-      val perCluster = matchRows(corpus).groupBy(col("cluster"))
-        .agg(count(lit(1)).as("__n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      if (perCluster.nonEmpty) {
-        nDel = perCluster.values.sum
-        val touched = perCluster.keys.toArray.sorted
-        // ONE write commits both halves of the epoch (round-17): the
-        // touched clusters' survivors and the encoded delta ride the
-        // same job — touched dirs swap, delta files for untouched
-        // clusters move in (appendExtras). The previous shape paid a
-        // second full write job for the append half; the index state
-        // is row-for-row identical (UpsertFusionSpec).
-        rewriteSwap(spark, s"$indexPath/corpus",
-          keepRows(corpus.filter(
-            col("cluster").isin(touched.toIndexedSeq: _*)))
-            .unionByName(encoded),
-          touched, appendExtras = true)
-        fused = true
-      }
-    }
-    if (!fused)
-      encoded.write.mode("append").partitionBy("cluster")
-        .parquet(s"$indexPath/corpus")
-    // arithmetic restamp (round-17): a caller that KNOWS the delta's
-    // non-null-vector row count (the streaming epoch collects it in
-    // its route probe) hands it in, and the new `_ROWS` is exactly
-    // pre − deleted + written — the footer walk this replaces opens
-    // EVERY corpus file per epoch, a per-mutation metadata scan that
-    // grows with the file count (UpsertFusionSpec pins the arithmetic
-    // equal to the walk). A legacy index without a `_ROWS` stamp — no
-    // trustworthy `pre` — still takes the walk.
-    (deltaRowsHint, preRows) match {
-      case (Some(dr), Some(pre)) =>
-        writeCountFile(spark, s"$indexPath/_ROWS", pre - nDel + dr)
-      case _ =>
-        if (hasParquetFiles(spark, s"$indexPath/corpus"))
-          writeRowCount(spark, indexPath)
-        else writeCountFile(spark, s"$indexPath/_ROWS", 0L)
-    }
-    nDel
-  }
+                       vecCol: String = "embedding"): Long =
+    ClusterStore.mutate(spark, indexPath, corpus(indexPath, vecCol),
+      Some(ClusterStore.Ids(ids, idCol)), Some(delta))
 
   /** Does the index's `_INDEX_READY` fingerprint mark a
     * residual-encoded corpus? [[ensureIndexPqResidual]] serializes
     * `residual=1` as the LAST fingerprint field (after the free-form
     * source path), so the suffix anchor is exact — a source path
-    * fragment can never shadow it (the Hnsw markerAttrs lesson).
+    * fragment can never shadow it (the Hnsw buildParams lesson).
     */
   private[graft] def indexIsResidual(spark: SparkSession,
-                                     indexPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_INDEX_READY")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val marker = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    marker.endsWith(",residual=1")
-  }
+                                     indexPath: String): Boolean =
+    ClusterStore.readMarker(spark, indexPath).exists(_.endsWith(",residual=1"))
 
   /** Delete vectors from an existing on-disk index without
     * retraining or rewriting untouched posting lists — FAISS's
     * `remove_ids` made distributed, the maintenance complement of
     * [[appendToIndex]]: only partitions that actually hold matching
-    * rows are rewritten (dynamic partition overwrite keeps every
-    * other cluster's files byte-identical), so the cost is O(touched
-    * posting lists), never O(index). A partition deleted to EMPTY is
-    * removed explicitly — dynamic overwrite only replaces partitions
-    * present in the output, so an emptied posting list would
-    * otherwise silently keep its old files (and its deleted rows).
+    * rows are rewritten (every other cluster's files stay
+    * byte-identical), so the cost is O(touched posting lists), never
+    * O(index). A posting list deleted to EMPTY loses its directory.
     *
     * Rows whose predicate evaluates NULL are KEPT — delete means
     * provably matching, the blocklist discipline. `_ROWS` re-counts
@@ -540,293 +460,35 @@ object Ivf {
     */
   def deleteFromIndex(spark: SparkSession, indexPath: String,
                       predicate: org.apache.spark.sql.Column): Long =
-    deleteFromIndexImpl(spark, indexPath,
-      matchRows = _.filter(predicate),
-      keepRows = _.filter(!(predicate <=> lit(true))))
+    ClusterStore.mutate(spark, indexPath, corpus(indexPath),
+      Some(ClusterStore.Where(predicate)), delta = None)
 
   /** [[deleteFromIndex]] against a DISTRIBUTED id relation — the
-    * bulk-delete form (round-15 VERDICT #4): the ids to remove stay a
-    * DataFrame end to end (semi-join selects the doomed rows,
-    * anti-join keeps the survivors), so a tombstone epoch of any size
-    * never round-trips through the driver as an `isin` literal list.
-    * `ids` needs one column named `idCol`; duplicates are fine
-    * (distinct applied). Same touched-partition-only rewrite, same
-    * emptied-partition removal, same return contract.
+    * bulk-delete form (round-15 VERDICT #4): a tombstone epoch of any
+    * size never round-trips through the driver as an `isin` literal
+    * list. `ids` needs one column named `idCol`; duplicates are fine.
+    * Same touched-partition-only rewrite, same emptied-partition
+    * removal, same return contract.
     */
   def deleteIdsFromIndex(spark: SparkSession, indexPath: String,
                          ids: DataFrame,
-                         idCol: String = "vec_id"): Long = {
-    val sel = ids.select(col(idCol)).distinct()
-    deleteFromIndexImpl(spark, indexPath,
-      matchRows = _.join(sel, Seq(idCol), "left_semi"),
-      keepRows = _.join(sel, Seq(idCol), "left_anti"))
-  }
-
-  private def deleteFromIndexImpl(spark: SparkSession, indexPath: String,
-                      matchRows: DataFrame => DataFrame,
-                      keepRows: DataFrame => DataFrame): Long = {
-    if (!hasParquetFiles(spark, s"$indexPath/corpus"))
-      return 0L                     // already emptied: nothing to do
-    // a prior maintenance op in this session may have left a stale
-    // file listing in the shared FileStatusCache — refresh before
-    // reading what we are about to rewrite
-    spark.catalog.refreshByPath(s"$indexPath/corpus")
-    val corpus = spark.read.parquet(s"$indexPath/corpus")
-    val matching = matchRows(corpus)
-    val perCluster = matching.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (perCluster.isEmpty) return 0L
-    val nDel = perCluster.values.sum
-    val touched = perCluster.keys.toArray.sorted
-    // keep = touched-cluster rows the predicate does NOT provably
-    // match, written ONCE into a sibling rewrite dir and swapped in
-    // at the fs level (round-16: the scratch-materialize +
-    // dynamic-overwrite pair wrote every surviving row twice and
-    // spent two extra jobs — the distinct-cluster collect and the
-    // second write — per delete)
-    rewriteSwap(spark, s"$indexPath/corpus",
-      keepRows(corpus.filter(col("cluster").isin(touched.toIndexedSeq: _*))),
-      touched)
-    // an index deleted to empty has no parquet left to infer a
-    // schema from — record the zero directly
-    if (hasParquetFiles(spark, s"$indexPath/corpus"))
-      writeRowCount(spark, indexPath)
-    else writeCountFile(spark, s"$indexPath/_ROWS", 0L)
-    nDel
-  }
-
-  /** Replace the `touched` `cluster=N` partition dirs under `dataDir`
-    * with `rows`' content in ONE write: `rows` lands cluster-
-    * partitioned in a dot-prefixed sibling dir on the same filesystem
-    * (invisible to Spark reads), then each touched dir is swapped in
-    * with fs-level delete + rename. A touched cluster with no output
-    * rows is simply deleted — the emptied-partition case. Untouched
-    * partitions' files stay byte-identical (their dirs are never
-    * listed, let alone rewritten). Crash mid-swap leaves the same
-    * non-atomic window the dynamic-overwrite commit had; callers that
-    * need atomicity wrap in their own ledger, unchanged.
-    *
-    * With `appendExtras = true`, `rows` may ALSO carry clusters
-    * outside `touched`: their files are MOVED into the live partition
-    * dirs (fs renames — append semantics, nothing existing is
-    * replaced). This is how the fused upsert commits its rewrite AND
-    * its append in one write job (round-17): the delta's rows for
-    * untouched clusters ride the same job and land by rename, where
-    * the previous shape paid a second full write job (scan, encode,
-    * commit) for the append half. With the default `false`, extra
-    * clusters in `rows` are dropped with the tmp dir — the pre-fusion
-    * contract every rebuild-shaped caller relies on.
-    *
-    * This is the round-16 write-path optimization shared by the
-    * delete/upsert/compaction rewrites of BOTH index engines: the
-    * previous shape (materialize keep rows through scratch, then
-    * dynamic-partition-overwrite from the scratch) wrote every
-    * surviving row twice and paid two extra Spark jobs per mutation.
-    */
-  private[operators] def rewriteSwap(spark: SparkSession, dataDir: String,
-                                     rows: DataFrame,
-                                     touched: Array[Int],
-                                     appendExtras: Boolean = false): Unit = {
-    val dataPath = new org.apache.hadoop.fs.Path(dataDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dataPath.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(dataPath.getParent,
-      s".rewrite-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      rows.write.partitionBy("cluster").mode("overwrite")
-        .parquet(tmp.toString)
-      val present: Set[String] =
-        if (fs.exists(tmp))
-          fs.listStatus(tmp).iterator
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("cluster="))
-            .map(_.getPath.getName).toSet
-        else Set.empty
-      // a rebuild-shaped caller (appendExtras = false) must cover every
-      // cluster its rows produce: an output cluster outside `touched`
-      // would be dropped with the tmp dir — silent row loss. Loud
-      // invariant instead (guards the driver-computed assignment hints)
-      if (!appendExtras) {
-        val covered = touched.map(c => s"cluster=$c").toSet
-        val stray = present.filterNot(covered)
-        require(stray.isEmpty,
-          s"rewrite produced rows for unswapped partition(s) " +
-            s"${stray.mkString(",")} under $dataDir")
-      }
-      fs.mkdirs(dataPath)
-      touched.foreach { c =>
-        val name = s"cluster=$c"
-        val live = new org.apache.hadoop.fs.Path(dataPath, name)
-        fs.delete(live, true)
-        if (present(name))
-          require(fs.rename(new org.apache.hadoop.fs.Path(tmp, name), live),
-            s"partition swap failed for $name under $dataDir")
-      }
-      if (appendExtras) {
-        val touchedNames = touched.map(c => s"cluster=$c").toSet
-        present.filterNot(touchedNames).foreach { name =>
-          val live = new org.apache.hadoop.fs.Path(dataPath, name)
-          fs.mkdirs(live)
-          // move every file (part files AND their checksum siblings —
-          // a .crc left behind would be deleted with the tmp dir and
-          // the moved part would lose its checksum record)
-          fs.listStatus(new org.apache.hadoop.fs.Path(tmp, name))
-            .foreach { st =>
-              if (st.isFile)
-                require(fs.rename(st.getPath,
-                  new org.apache.hadoop.fs.Path(live, st.getPath.getName)),
-                  s"partition append-move failed for $name under $dataDir")
-            }
-        }
-      }
-    } finally fs.delete(tmp, true)
-    // the fs-level moves bypass Spark's write-path cache invalidation
-    // — refresh so later reads see the new listing
-    spark.catalog.refreshByPath(dataDir)
-  }
-
-  /** Any parquet part file under `dir` (recursive)? Footer-free probe
-    * for the emptied-index edge both delete paths share.
-    */
-  private[operators] def hasParquetFiles(spark: SparkSession,
-                                         dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext)
-      if (it.next().getPath.getName.endsWith(".parquet")) return true
-    false
-  }
-
-  /** Record the corpus row count in `<path>/_ROWS` at BUILD time — a
-    * parquet-footer count over the just-written corpus, paid once per
-    * build. Searchers that need the corpus size (e.g. an exhaustive
-    * rescore shortlist) read this tiny file driver-side instead of
-    * running a count job per query (round-6 VERDICT: `emb.count()`
-    * inside a timed search gate was one whole extra Spark job per
-    * execution).
-    */
-  private[graft] def writeRowCount(spark: SparkSession, path: String): Long = {
-    // footer metadata walk, not a Spark count job (round-16): the
-    // record counts are already in every file's footer, so the
-    // restamp after a mutation is a driver-side listing — the same
-    // discipline as Hnsw.footerShardSizes — instead of a cluster-wide
-    // scan job per append/delete
-    val n = footerRowCount(spark, s"$path/corpus")
-    writeCountFile(spark, s"$path/_ROWS", n)
-    n
-  }
-
-  /** Total record count under `dir` from parquet FOOTERS only — a
-    * recursive driver-side listing, no Spark job.
-    */
-  private[graft] def footerRowCount(spark: SparkSession,
-                                    dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0L
-    var n = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf))
-        try n += rdr.getRecordCount finally rdr.close()
-      }
-    }
-    n
-  }
-
-  private[operators] def writeSchemaFile(spark: SparkSession,
-      pathStr: String, schema: org.apache.spark.sql.types.StructType): Unit = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(p, true)
-    o.write(schema.json.getBytes("UTF-8")); o.close()
-  }
-
-  private[operators] def readSchemaFile(spark: SparkSession,
-      pathStr: String): Option[org.apache.spark.sql.types.StructType] = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val json = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        Some(org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      } finally in.close()
-    }
-  }
-
-  private[graft] def writeCountFile(spark: SparkSession, pathStr: String,
-                             n: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(p, true)
-    o.write(n.toString.getBytes("UTF-8")); o.close()
-  }
-
-  private[graft] def readCountFile(spark: SparkSession,
-                            pathStr: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(out.toString("UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
+                         idCol: String = "vec_id"): Long =
+    ClusterStore.mutate(spark, indexPath, corpus(indexPath),
+      Some(ClusterStore.Ids(ids, idCol)), delta = None)
 
   /** The corpus row count recorded at build time (None for a pre-
     * `_ROWS` index — callers fall back to counting).
     */
   def indexRowCount(spark: SparkSession, indexPath: String): Option[Long] =
-    readCountFile(spark, s"$indexPath/_ROWS")
+    ClusterStore.readCountFile(spark, s"$indexPath/_ROWS")
 
-  /** Appended-since-build fraction: (live − base) / base, where base
-    * is the build-time count (`_ROWS_BASE`, stamped by [[writeIndex]]
-    * only) and live is the maintained `_ROWS`. 0.0 for a
-    * never-appended index, and 0.0 for a pre-`_ROWS_BASE` artifact
-    * (no base recorded — treated as fresh; the next rebuild stamps
-    * one). This is the drift meter behind [[needsRebuild]]: appended
-    * vectors are assigned to FROZEN centroids (and encoded with
-    * frozen PQ codebooks), so as the appended mass grows the
-    * partition of space fits the corpus less and recall decays.
-    */
-  /** Files per posting list — the FRAGMENTATION meter the append path
-    * needs: every [[appendToIndex]] adds at least one file per touched
-    * cluster, and at 100 TB a daily-ingest index degrades into
-    * thousands of KB-scale files per partition (open/footer overhead
-    * starts to dominate the scan — the classic small-files problem).
-    * Footer-free: one recursive listing, no Spark job.
+  /** Files per posting list — the fragmentation meter
+    * ([[ClusterStore.filesPerCluster]]): every [[appendToIndex]] adds
+    * at least one file per touched cluster.
     */
   def filesPerCluster(spark: SparkSession,
-                      indexPath: String): Map[Int, Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val counts = scala.collection.mutable.Map.empty[Int, Int]
-    val it = fs.listFiles(p, true)
-    val re = ".*/cluster=(\\d+)/[^/]*\\.parquet$".r
-    while (it.hasNext) it.next().getPath.toString match {
-      case re(c) => counts(c.toInt) = counts.getOrElse(c.toInt, 0) + 1
-      case _ => ()
-    }
-    counts.toMap
-  }
+                      indexPath: String): Map[Int, Int] =
+    ClusterStore.filesPerCluster(spark, s"$indexPath/corpus")
 
   /** The operable compaction trigger: true once any posting list
     * holds more than `maxFilesPerCluster` files ([[filesPerCluster]]
@@ -835,33 +497,17 @@ object Ivf {
     */
   def needsCompaction(spark: SparkSession, indexPath: String,
                       maxFilesPerCluster: Int = 16): Boolean =
-    filesPerCluster(spark, indexPath).values
-      .exists(_ > maxFilesPerCluster)
+    ClusterStore.needsCompaction(spark, s"$indexPath/corpus",
+      maxFilesPerCluster)
 
   /** Rewrite fragmented posting lists into one file each — OPTIMIZE
     * for the index corpus, the third maintenance primitive beside
-    * append and delete. Content-invisible by construction (same rows,
-    * same partition values — the search path cannot tell, which is
-    * what the gate's shared oracle checks); only clusters holding
-    * more than one file rewrite, every other partition's files stay
-    * byte-identical. The rewrite repartitions by the partition column
-    * so each touched posting list lands in exactly one task → one
-    * file. Returns the number of compacted clusters.
+    * append and delete ([[ClusterStore.compact]]): content-invisible,
+    * and only clusters holding more than one file rewrite. Returns the
+    * number of compacted clusters.
     */
-  def compactIndex(spark: SparkSession, indexPath: String): Int = {
-    val frag = filesPerCluster(spark, indexPath).filter(_._2 > 1)
-    if (frag.isEmpty) return 0
-    val touched = frag.keys.toArray.sorted
-    spark.catalog.refreshByPath(s"$indexPath/corpus")
-    val corpus = spark.read.parquet(s"$indexPath/corpus")
-    // one write, fs-level swap (round-16; see rewriteSwap): the old
-    // scratch + dynamic-overwrite pair wrote every compacted row twice
-    rewriteSwap(spark, s"$indexPath/corpus",
-      corpus.filter(col("cluster").isin(touched.toIndexedSeq: _*))
-        .repartition(touched.length, col("cluster")),
-      touched)
-    touched.length
-  }
+  def compactIndex(spark: SparkSession, indexPath: String): Int =
+    ClusterStore.compact(spark, s"$indexPath/corpus")
 
   /** What [[maintain]] did and what it could not do itself. */
   final case class MaintenanceReport(compactedClusters: Int,
@@ -890,15 +536,13 @@ object Ivf {
     MaintenanceReport(compacted, frac, frac > maxAppendedFraction)
   }
 
-  def appendedFraction(spark: SparkSession, indexPath: String): Double = {
-    val live = indexRowCount(spark, indexPath)
-      .getOrElse(spark.read.parquet(s"$indexPath/corpus").count())
-    readCountFile(spark, s"$indexPath/_ROWS_BASE") match {
-      case Some(base) if base > 0 =>
-        math.max(0.0, (live - base).toDouble / base)
-      case _ => 0.0
-    }
-  }
+  /** Appended-since-build fraction ([[ClusterStore.appendedFraction]]):
+    * (live − base) / base over `_ROWS` and `_ROWS_BASE` (stamped by
+    * [[writeIndex]], or by the first mutation of an index built
+    * without one). This is the drift meter behind [[needsRebuild]].
+    */
+  def appendedFraction(spark: SparkSession, indexPath: String): Double =
+    ClusterStore.appendedFraction(spark, indexPath, "corpus")
 
   /** The operable rebuild trigger for [[appendToIndex]]'s documented
     * frozen-centroid drift: true once the appended-since-build
@@ -1163,9 +807,9 @@ object Ivf {
                                   val vecCol: String) {
     val model: IvfModel = loadModelCached(spark, s"$path/centroids")
     lazy val pq: Pq.PqModel = Pq.loadModelCached(spark, s"$path/pq")
-    lazy val mrlDims: Int = readCountFile(spark, s"$path/_MRL_DIMS")
+    lazy val mrlDims: Int = ClusterStore.mrlDims(spark, path)
       .getOrElse(sys.error(s"no _MRL_DIMS at $path — not an " +
-        "ensureIndexMrl artifact")).toInt
+        "ensureIndexMrl artifact"))
   }
 
   /** ANN top-k against a reloaded on-disk index, over any stored
@@ -1203,8 +847,9 @@ object Ivf {
     * pushdown happens in two stages:
     *
     *  1. scan-side: the DISTINCT query match-values (bounded — queries
-    *     are small by the same contract that bounds the probe list)
-    *     become an `isin` filter the parquet reader pushes down, so
+    *     are small by the same contract that bounds the probe list,
+    *     and collected in the same probe job as it) become an `isin`
+    *     filter the parquet reader pushes down, so
     *     the scan materializes only rows whose attribute appears among
     *     the queries at all;
     *  2. join-side: the exact per-pair equality applies BEFORE scoring
@@ -1220,18 +865,9 @@ object Ivf {
                        queries: DataFrame, matchCol: String,
                        k: Int, nprobe: Int = 2,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val qVals = queries.select(col(matchCol)).distinct().collect()
-      .map(_.get(0)).toIndexedSeq
-    val (nonNull, hasNull) = (qVals.filter(_ != null), qVals.contains(null))
-    // isin(null) never matches; null query attributes need an explicit
-    // isNull arm to reach the null-safe join equality below
-    val attrFilter =
-      if (hasNull) col(matchCol).isin(nonNull: _*) || col(matchCol).isNull
-      else col(matchCol).isin(nonNull: _*)
+                       vecCol: String = "embedding"): DataFrame =
     search(spark, indexPath, queries, k, nprobe, idCol, vecCol,
-      Some(attrFilter), Shortlist.Exact, Some(matchCol))
-  }
+      predicate = None, Shortlist.Exact, Some(matchCol))
 
   /** The one search pipeline: probe → pruned scan → predicate →
     * shortlist → exact rescore (skipped when the shortlist score is
@@ -1250,10 +886,23 @@ object Ivf {
       matchCol.map(m => col(m).as("n_match")) :+ col("cluster")
     val qCols = (col(idCol).as("q_id") +: shortlist.query(ix) :+ probe) ++
       matchCol.map(m => col(m).as("q_match"))
-    val probed = queries.select(probe).distinct().collect().map(_.getInt(0))
+    // one probe job: the distinct (cluster, match value) pairs give
+    // both the probe set and a match search's scan-side attribute
+    // filter
+    val probeRows = queries.select(probe +: matchCol.map(col).toSeq: _*)
+      .distinct().collect()
+    val probed = probeRows.map(_.getInt(0)).distinct
+    val matchFilter = matchCol.map { m =>
+      val vals = probeRows.map(_.get(1)).distinct.toIndexedSeq
+      // isin(null) never matches; null query attributes need an
+      // explicit isNull arm to reach the null-safe join equality
+      if (vals.contains(null)) col(m).isin(vals.filter(_ != null): _*) ||
+        col(m).isNull
+      else col(m).isin(vals: _*)
+    }
     val pruned = spark.read.parquet(s"$indexPath/corpus")
       .filter(col("cluster").isin(probed.toIndexedSeq: _*))
-    val corpus = predicate.fold(pruned)(p => pruned.filter(p))
+    val corpus = (predicate ++ matchFilter).foldLeft(pruned)(_ filter _)
     val scored = pairs(corpus.select(nCols: _*),
       shortlist.staged(queries.select(qCols: _*), ix),
       shortlist.approx(ix), matched = matchCol.isDefined)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 
-import graft.operators.{Ivf, Preference}
+import graft.operators.{ClusterStore, Preference}
 
 /** Preference resolution as a structured stream — continuous
   * annotation ingest for the pipeline [[Preference.resolveAnnotations]]
@@ -142,11 +142,11 @@ object StreamingPreference {
       Preference.bradleyTerry(latest(spark.read.parquet(changelogDir)),
         "prompt_id", rounds),
       "prompt_id", minMarginMicros, maxPairsPerPrompt)
-    val gen = Ivf.readCountFile(spark, s"$mintDir/_GEN")
+    val gen = ClusterStore.readCountFile(spark, s"$mintDir/_GEN")
       .getOrElse(0L) + 1L
     pairs.withColumn("_gen", lit(gen)).write.mode("append")
       .parquet(mintDir)
-    Ivf.writeCountFile(spark, s"$mintDir/_GEN", gen)
+    ClusterStore.writeCountFile(spark, s"$mintDir/_GEN", gen)
     spark.catalog.refreshByPath(mintDir)
     spark.read.parquet(mintDir).filter(col("_gen") === gen).drop("_gen")
   }
@@ -157,7 +157,7 @@ object StreamingPreference {
     * read discipline; see [[mintDpoStream]].
     */
   def currentMint(spark: SparkSession, mintDir: String): DataFrame = {
-    val gen = Ivf.readCountFile(spark, s"$mintDir/_GEN").getOrElse(
+    val gen = ClusterStore.readCountFile(spark, s"$mintDir/_GEN").getOrElse(
       sys.error(s"no _GEN counter at $mintDir — not a mintDpoStream " +
         "artifact"))
     spark.read.parquet(mintDir).filter(col("_gen") === gen).drop("_gen")

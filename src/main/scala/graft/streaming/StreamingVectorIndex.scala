@@ -32,9 +32,11 @@ import graft.operators.Ivf
   * carries one row per id per epoch, and replaying an epoch is then
   * idempotent: the delete removes what the replayed append wrote.
   *
-  * Drift contract unchanged: appends move the `_ROWS`/`_ROWS_BASE`
-  * meters exactly like batch maintenance, so `needsRebuild` still
-  * decides when the centroids have outlived the distribution.
+  * Drift contract unchanged: every epoch is one
+  * [[graft.operators.ClusterStore.mutate]], the path batch maintenance
+  * takes too, so it moves the `_ROWS`/`_ROWS_BASE` meters exactly like
+  * batch maintenance and `needsRebuild` still decides when the
+  * centroids have outlived the distribution.
   */
 object StreamingVectorIndex {
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off margin probe for the q_d_incremental gate (builder tooling,
@@ -12,13 +11,10 @@ import org.apache.spark.sql.functions._
 object MarginProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // this probe never pinned the session time zone: keep the JVM's
+    val spark = graft.Session.local("32",
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.session.timeZone" -> java.util.TimeZone.getDefault.getID)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val all = graft.operators.Dedup

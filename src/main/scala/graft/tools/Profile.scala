@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway profiling harness (not part of the library surface):
   * times a named subset of SparkEntry.queries, N reps each, so a
   * single operator's constant can be chased without a full Bench run.
@@ -16,14 +14,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus)
     // executor-cpu channel (Bench's load-immune measure, here per rep)
     val cpuNanos = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
@@ -89,14 +80,7 @@ object Profile {
     import graft.operators.{Ivf, SimilaritySearch}
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val half = emb.count() / 2
@@ -157,13 +141,7 @@ object Profile {
     import org.apache.spark.sql.functions._
     import graft.operators.{Hnsw, Ivf, Pq, SimilaritySearch}
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus, "spark.sql.extensions" -> "")
     import spark.implicits._
     val dim = 64
     val clusters = 40
@@ -232,13 +210,7 @@ object Profile {
     import org.apache.spark.sql.functions._
     import graft.operators.{Hnsw, Ivf, SimilaritySearch}
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus, "spark.sql.extensions" -> "")
     import spark.implicits._
     val dim = 16
     val clusters = 8

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Re-runnable scale-regression gate: one command reproduces the NOTES
   * sf1 table and FAILS (exit 1) if any heavy-family query's
   * 10×-data/1×-data time ratio leaves its stored envelope — so the two
@@ -457,14 +455,8 @@ object ScaleGate {
     val big = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1_gate")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.sql.shuffle.partitions" -> "32")
 
     // build-once: the 10× corpus regenerates only when the source does
     // (or when the perturbation scheme changes — bump the fingerprint;

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 100×-scale spill-path evidence (round-10 VERDICT #10): runs the
@@ -54,18 +54,12 @@ object SpillProbe {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SPILL_COPIES", "100").toInt
     val big = sys.env.getOrElse("SPARK_GRAFT_SPILL_DIR",
       "/tmp/graft_spill_corpus")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.sql.shuffle.partitions" -> "32",
       // the experiment's point: a small execution pool forces the
       // sort/aggregate buffers to the spill path a memory-tight
       // production executor would take
-      .config("spark.memory.fraction", "0.1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.memory.fraction" -> "0.1")
 
     // 100× corpus, documents + embeddings only (same perturbation
     // scheme as ScaleUp so duplicate structure stays linear)

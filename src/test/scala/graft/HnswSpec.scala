@@ -511,7 +511,7 @@ class HnswSpec extends SparkSpec {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(dir, "_INDEX_READY"),
         text.getBytes("UTF-8"))
-      Hnsw.markerAttrs(spark, dir)
+      Hnsw.buildParams(spark, dir).attrs
     }
     // plain index (no attrs field) whose PATH embeds ',attrs=foo,'
     assert(withMarker("hnsw,shards=4,m=8,efC=32,iters=3,seed=42," +

@@ -468,6 +468,52 @@ class IvfSpec extends SparkSpec {
     assert(Ivf.appendedFraction(spark, idx2) == 0.0, "rebuild must reset the meter")
   }
 
+  test("appendToIndex against a pre-meter index (no _ROWS_BASE) stamps " +
+    "the base from the pre-append footer sum, so the drift meter " +
+    "starts from that append instead of reading 0.0 forever") {
+    val half0 = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+    val half1 = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
+    val idx = tmpDir("ivf-legacy-base") + "/idx"
+    Ivf.writeIndex(half0, Ivf.train(half0, k = 4, iters = 2), idx)
+    val n0 = Ivf.indexRowCount(spark, idx).get
+    // simulate an index built before the meters existed
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_ROWS_BASE"), true)
+    assert(Ivf.appendedFraction(spark, idx) == 0.0,
+      "no base -> meter reads 0.0 (the legacy blind spot)")
+    Ivf.appendToIndex(half1, idx)
+    assert(graft.operators.ClusterStore.readCountFile(
+      spark, s"$idx/_ROWS_BASE").contains(n0),
+      "append must stamp _ROWS_BASE from the PRE-append footer sum")
+    val frac = Ivf.appendedFraction(spark, idx)
+    assert(frac > 0.9 && frac < 1.1,
+      s"meter must see the appended half against the stamped base: $frac")
+    assert(Ivf.needsRebuild(spark, idx),
+      "the append axis must be able to fire on a legacy index")
+  }
+
+  test("appendedFraction on an index without _ROWS reads the live count " +
+    "from the parquet footers: the counted value, no Spark job") {
+    val half0 = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+    val idx = tmpDir("ivf-no-rows") + "/idx"
+    Ivf.writeIndex(half0, Ivf.train(half0, k = 4, iters = 2), idx)
+    Ivf.appendToIndex(emb.filter(col("vec_id") % 4 === 1), idx)
+    val stamped = Ivf.appendedFraction(spark, idx)
+    assert(stamped > 0.0, "construction: the append must move the meter")
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_ROWS"), true)
+    assert(Ivf.indexRowCount(spark, idx).isEmpty)
+    val live = spark.read.parquet(s"$idx/corpus").count()
+    val base = graft.operators.ClusterStore.readCountFile(
+      spark, s"$idx/_ROWS_BASE").get
+    val (frac, jobs) = jobsOf(Ivf.appendedFraction(spark, idx))
+    assert(frac == (live - base).toDouble / base && frac == stamped,
+      s"footer-sum meter $frac vs counted ${(live - base).toDouble / base}")
+    assert(jobs == 0, s"the meter must not run a Spark job: $jobs")
+  }
+
   test("searchIndexWhere: predicate pushed into the scan; full probe ≡ " +
     "brute force over the filtered slice; beats post-filtering") {
     val m = Ivf.train(emb, k = 4, iters = 2)

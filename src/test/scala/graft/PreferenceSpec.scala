@@ -157,7 +157,7 @@ class PreferenceSpec extends SparkSpec {
     val g3 = StreamingPreference.mintDpoStream(spark, out, mint,
       rounds = 3, minMarginMicros = 200000L)
     assert(g3.count() == 0 &&
-      graft.operators.Ivf.readCountFile(spark, s"$mint/_GEN")
+      graft.operators.ClusterStore.readCountFile(spark, s"$mint/_GEN")
         .contains(3L),
       "generation numbering must stay monotone past an empty one")
     // rollouts: drain, then REPLAY the same feed through a fresh

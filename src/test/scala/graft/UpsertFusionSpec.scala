@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Hnsw, Ivf}
+import graft.operators.{ClusterStore, Hnsw, Ivf}
 
 /** Round-16 optimization pin: the fused upsert (one maintenance pass)
   * must produce the IDENTICAL index state as the sequential
@@ -97,8 +97,8 @@ class UpsertFusionSpec extends SparkSpec {
     assert(nA == nSeq && nB == nSeq, "deleted-row counts diverged")
     assert(hnswState(pFusedA) == hnswState(pSeq), "isin-form diverged")
     assert(hnswState(pFusedB) == hnswState(pSeq), "ids-form diverged")
-    assert(Ivf.readCountFile(spark, s"$pFusedA/_ROWS") ==
-      Ivf.readCountFile(spark, s"$pSeq/_ROWS"))
+    assert(ClusterStore.readCountFile(spark, s"$pFusedA/_ROWS") ==
+      ClusterStore.readCountFile(spark, s"$pSeq/_ROWS"))
   }
 
   test("arithmetic _ROWS restamp (deltaRowsHint) == footer walk on " +
@@ -112,8 +112,8 @@ class UpsertFusionSpec extends SparkSpec {
     val hint = delta.filter(col("embedding").isNotNull).count()
     Ivf.upsertToIndex(spark, pI, col("vec_id").isin(touchedSeq: _*),
       delta, deltaRowsHint = Some(hint))
-    assert(Ivf.readCountFile(spark, s"$pI/_ROWS") ==
-      Some(Ivf.footerRowCount(spark, s"$pI/corpus")),
+    assert(ClusterStore.readCountFile(spark, s"$pI/_ROWS") ==
+      Some(ClusterStore.rowCount(spark, s"$pI/corpus")),
       "IVF arithmetic _ROWS diverged from the footer truth")
     // second epoch stacked on the arithmetic stamp (induction step)
     val delta2 = inserts.select((col("vec_id") + 9000L).as("vec_id"),
@@ -121,8 +121,8 @@ class UpsertFusionSpec extends SparkSpec {
     Ivf.upsertToIndex(spark, pI,
       col("vec_id").isin(touchedSeq.take(5): _*), delta2,
       deltaRowsHint = Some(delta2.count()))
-    assert(Ivf.readCountFile(spark, s"$pI/_ROWS") ==
-      Some(Ivf.footerRowCount(spark, s"$pI/corpus")),
+    assert(ClusterStore.readCountFile(spark, s"$pI/_ROWS") ==
+      Some(ClusterStore.rowCount(spark, s"$pI/corpus")),
       "IVF second-epoch arithmetic _ROWS diverged")
     val src = "/root/testdata/sf0.001/embeddings.parquet"
     val pH = tmpDir("uf-h-hint")
@@ -130,7 +130,7 @@ class UpsertFusionSpec extends SparkSpec {
       attrCols = Seq("label"))
     Hnsw.upsertToIndex(spark, pH, col("vec_id").isin(touchedSeq: _*),
       delta, deltaRowsHint = Some(hint))
-    assert(Ivf.readCountFile(spark, s"$pH/_ROWS") ==
+    assert(ClusterStore.readCountFile(spark, s"$pH/_ROWS") ==
       Some(Hnsw.footerShardSizes(spark, pH).values.sum),
       "HNSW arithmetic _ROWS diverged from the footer truth")
   }
@@ -189,6 +189,48 @@ class UpsertFusionSpec extends SparkSpec {
       "untouched shard files changed (path/len/mtime)")
     assert(!after.keys.exists(_.contains("cluster=0")),
       "an all-deleted shard must drop its dir entirely")
+  }
+
+  /** Spark jobs of one streamed CDC epoch on these fixtures — the
+    * delta upserted and the tombstones deleted, under the inline-delete
+    * cap — per engine in the test session (`local[4]`, 4 shuffle
+    * partitions), as measured before both engines shared one mutation
+    * path. Job count does not depend on box load, so a rise above it
+    * is a deterministic regression signal; a change that cuts jobs
+    * lowers it.
+    */
+  private val ivfEpochJobCeiling = 12
+  private val hnswEpochJobCeiling = 13
+
+  test("one streamed CDC epoch stays within its Spark job ceiling on " +
+    "both engines") {
+    val feed = tmpDir("uf-epoch-feed")
+    delta.withColumn("op", lit("U"))
+      .unionByName(tombstoneIds.select(col("vec_id"),
+        lit(null).cast(emb.schema("embedding").dataType).as("embedding"),
+        lit(null).cast(emb.schema("label").dataType).as("label"),
+        lit("D").as("op")))
+      .coalesce(1).write.mode("overwrite").parquet(feed)
+    val pI = tmpDir("uf-ivf-epoch")
+    Ivf.writeIndex(emb, Ivf.train(emb, k = 4, iters = 2), pI)
+    val pH = tmpDir("uf-h-epoch")
+    Hnsw.ensureIndex(emb, feed, pH, shards = 4, m = 8, efC = 32,
+      attrCols = Seq("label"))
+    val (_, ivfJobs) = jobsOf(graft.streaming.StreamingVectorIndex
+      .upsertStream(spark, feed, pI, tmpDir("uf-ivf-ck"),
+        opCol = Some("op")))
+    val (_, hnswJobs) = jobsOf(graft.streaming.StreamingVectorIndex
+      .upsertStreamHnsw(spark, feed, pH, tmpDir("uf-h-ck"),
+        opCol = Some("op")))
+    val live = emb.join(touched, Seq("vec_id"), "left_anti").count() +
+      delta.filter(col("embedding").isNotNull).count()
+    assert(ClusterStore.readCountFile(spark, s"$pI/_ROWS").contains(live) &&
+      ClusterStore.readCountFile(spark, s"$pH/_ROWS").contains(live),
+      "construction: the epoch must land on both indexes")
+    assert(ivfJobs <= ivfEpochJobCeiling,
+      s"IVF epoch took $ivfJobs Spark jobs (ceiling $ivfEpochJobCeiling)")
+    assert(hnswJobs <= hnswEpochJobCeiling,
+      s"HNSW epoch took $hnswJobs Spark jobs (ceiling $hnswEpochJobCeiling)")
   }
 
   private def fileStamps(dir: String): Map[String, (Long, Long)] = {

@@ -147,7 +147,7 @@ object VectorSearchReference {
                      vecCol: String = "embedding"): DataFrame = {
     val shortK = if (rescoreK > 0) math.max(rescoreK, k) else 4 * k
     val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
-    val dims = Ivf.readCountFile(spark, s"$indexPath/_MRL_DIMS").getOrElse(
+    val dims = ClusterStore.readCountFile(spark, s"$indexPath/_MRL_DIMS").getOrElse(
       sys.error(s"no _MRL_DIMS at $indexPath — not an ensureIndexMrl " +
         "artifact")).toInt
     val probed = queries
