@@ -87,41 +87,6 @@ object Bench {
     var retryBudget =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_BUDGET", "300").toInt
 
-    // LOAD-IMMUNE evidence channel (round-10): wall time degrades under
-    // ambient load, but executor CPU time and bytes read/shuffled per
-    // attempt do not — a future "query X regressed" claim is settled by
-    // comparing cpu_sec maps without re-running anything. Task metrics
-    // accumulate through a public SparkListener; events are posted
-    // async, so the per-query snapshot polls until the counters
-    // stabilize (two reads 20 ms apart equal, 200 ms cap) rather than
-    // touching the private listener bus.
-    val mInput = new java.util.concurrent.atomic.AtomicLong
-    val mShuffle = new java.util.concurrent.atomic.AtomicLong
-    val mCpu = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            mInput.addAndGet(m.inputMetrics.bytesRead)
-            mShuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            mCpu.addAndGet(m.executorCpuTime)
-          }
-        }
-      })
-    def metricsSnapshot(): (Long, Long, Long) = {
-      var prev = (mInput.get, mShuffle.get, mCpu.get)
-      var waited = 0
-      while (waited < 200) {
-        Thread.sleep(20); waited += 20
-        val cur = (mInput.get, mShuffle.get, mCpu.get)
-        if (cur == prev) return cur
-        prev = cur
-      }
-      prev
-    }
-
     // a failing query is recorded in "errors" and contributes NO wall
     // time — a broken query must never quietly look fast
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -158,19 +123,25 @@ object Bench {
         // to the before-sample (loadavg is a sluggish 1-min EMA)
         ((System.nanoTime() - t0) / 1e9, err, math.max(loadBefore, loadAvg))
       }
-      val m0 = metricsSnapshot()
-      var runs = (1 to reps).map(_ => attempt()).toVector
-      def clean = runs.collect { case (t, None, _) => t }.sorted
-      def unstable: Boolean = {
-        val ts = clean
+      def clean(runs: Vector[(Double, Option[String], Double)]) =
+        runs.collect { case (t, None, _) => t }.sorted
+      def unstable(ts: Vector[Double]): Boolean = {
         val k = math.min(reps, ts.size)
         ts.nonEmpty && k > 0 && ts(k - 1) > ts.head * 1.3
       }
+      // LOAD-IMMUNE evidence channel (round-10): wall time degrades
+      // under ambient load, but executor CPU time, bytes read/shuffled
+      // and the Spark jobs per attempt do not — a future "query X
+      // regressed" claim is settled by comparing those maps without
+      // re-running anything. One measurement spans all attempts.
       var extra = 0
-      while (clean.nonEmpty && unstable && extra < extraReps &&
-        retryBudget > 0) {
-        retryBudget -= 1; extra += 1
-        runs = runs :+ attempt()
+      val (runs, m) = graft.obs.QueryMetrics.measure(spark) {
+        var rs = (1 to reps).map(_ => attempt()).toVector
+        while (unstable(clean(rs)) && extra < extraReps && retryBudget > 0) {
+          retryBudget -= 1; extra += 1
+          rs = rs :+ attempt()
+        }
+        rs
       }
       // error status comes from the BASE reps only: a transient
       // failure during a dispersion TOP-UP (which only runs because
@@ -178,7 +149,7 @@ object Bench {
       // clean timings — the top-ups exist to improve the estimate,
       // never to invalidate it
       val err = runs.take(reps).flatMap(_._2).headOption
-      val times = clean
+      val times = clean(runs)
       val qLoad = runs.map(_._3).max
       // median over the `reps` fastest clean attempts (≡ plain median
       // when nothing was retried); true median: average the middle
@@ -190,12 +161,11 @@ object Bench {
         else if (base.size % 2 == 1) base(base.size / 2)
         else (base(base.size / 2 - 1) + base(base.size / 2)) / 2
       val min = if (times.isEmpty) 0.0 else times.head
-      // per-ATTEMPT metrics: bytes are identical across attempts of
-      // one query, so the per-query delta divides by the attempt count
-      val m1 = metricsSnapshot()
+      // per-ATTEMPT metrics: bytes and jobs are identical across
+      // attempts of one query, so the totals divide by the attempt count
       val nAtt = math.max(1, runs.size)
-      val perAtt = ((m1._1 - m0._1) / nAtt, (m1._2 - m0._2) / nAtt,
-        (m1._3 - m0._3).toDouble / nAtt / 1e9)
+      val perAtt = (m.inputBytes / nAtt, m.shuffleWriteBytes / nAtt,
+        m.cpuSec / nAtt, m.jobs.toDouble / nAtt)
       (name, median, min, err, qLoad, extra, perAtt)
     }
     def jstr(s: String): String =
@@ -243,15 +213,19 @@ object Bench {
     val fbMedians = ok.collect { case (k, med, _, _, _, _, _)
       if fallback(k) => jstr(k) + ":" + f3(med)
     }.mkString("{", ",", "}")
-    // the load-immune channel: per-attempt executor CPU seconds and
-    // bytes (identical on a quiet or thrashed box — the map that
-    // settles future phantom-regression claims without a re-run)
+    // the load-immune channel: per-attempt executor CPU seconds, bytes
+    // and Spark jobs (identical on a quiet or thrashed box — the maps
+    // that settle future phantom-regression claims without a re-run;
+    // a fractional job count means the attempts issued different jobs)
     val cpus_ = ok.map { case (k, _, _, _, _, _, m) =>
       jstr(k) + ":" + f3(m._3) }.mkString("{", ",", "}")
     val bytesIn = ok.map { case (k, _, _, _, _, _, m) =>
       jstr(k) + ":" + m._1 }.mkString("{", ",", "}")
     val shufW = ok.map { case (k, _, _, _, _, _, m) =>
       jstr(k) + ":" + m._2 }.mkString("{", ",", "}")
+    val jobs = ok.map { case (k, _, _, _, _, _, m) =>
+      jstr(k) + ":" + (if (m._4.isWhole) m._4.toLong.toString else f3(m._4))
+    }.mkString("{", ",", "}")
     val errs = results.collect { case (k, _, _, Some(e), _, _, _) => jstr(k) + ":" + jstr(e) }
       .mkString("{", ",", "}")
     val total = ok.map { case (k, med, mn, _, _, _, _) =>
@@ -263,7 +237,7 @@ object Bench {
     // holds everything
     val env = s""""cpus":$cpus,"ts_start":$tsStart,"ts_end":$tsEnd,""" +
       s""""load_start":${f3(loadStart)},"load_end":${f3(loadEnd)}"""
-    val line = s"""{"metric":"total","unit":"sec",$env,"load_max":$loads,"cpu_sec":$cpus_,"bytes_read":$bytesIn,"shuffle_write":$shufW,"retries":$retries,"fallback_min":$fbList,"fallback_median":$fbMedians,"retry_budget_left":$retryBudget,"queries":$qs,"queries_min":$mins,"reps":$reps,"errors":$errs,"sf":"$sfDir","failed":${results.count(_._4.nonEmpty)},"value":${f3(total)}}"""
+    val line = s"""{"metric":"total","unit":"sec",$env,"load_max":$loads,"cpu_sec":$cpus_,"bytes_read":$bytesIn,"shuffle_write":$shufW,"jobs":$jobs,"retries":$retries,"fallback_min":$fbList,"fallback_median":$fbMedians,"retry_budget_left":$retryBudget,"queries":$qs,"queries_min":$mins,"reps":$reps,"errors":$errs,"sf":"$sfDir","failed":${results.count(_._4.nonEmpty)},"value":${f3(total)}}"""
     println(line)
     // sidecar with the SAME line: the driver tail-captures stdout, and
     // with 100+ queries the line's head (alphabetically early queries)

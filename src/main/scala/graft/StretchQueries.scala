@@ -1340,9 +1340,12 @@ object StretchQueries {
     // pairs, whose candidacy is DETERMINISTIC (identical shingle sets
     // ⇒ identical signatures ⇒ every band matches), so the DuckDB twin
     // — equal sorted shingle sets with ≥1 new member — is a full
-    // oracle; old×old planted copies must NOT surface. (Natural
-    // set-identical pairs are handled identically on both sides: the
-    // sf0.1 corpus has some, sf0.01 has none — margin-probed.)
+    // oracle; old×old planted copies must NOT surface. Natural
+    // set-identical pairs need no margin: at threshold 1.0 only equal
+    // shingle sets pass, they are candidates (equal sets share all
+    // eight band buckets, so only a cap overflow in every one of them
+    // drops a pair), and the oracle lists every equal-set pair with a
+    // new member, natural or planted.
     "q_d_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val existing = docs.filter(col("doc_id") % 2 === 0)

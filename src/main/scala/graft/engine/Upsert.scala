@@ -75,14 +75,13 @@ object Upsert {
     * inserted; unmatched target rows are kept.
     * Column alignment is BY NAME, case-insensitive (the pipeline mixes
     * `Rev_Per_unit`/`Rev_Per_Unit` — `4_Fact:50` vs `2_Silver:49`).
-    */
-  /** @param uniqueKeyTarget caller-declared invariant: the merge keys
+    *
+    * @param uniqueKeyTarget caller-declared invariant: the merge keys
     *        are unique in the target (e.g. SCD surrogate keys). Skips
     *        the multiplicity-preserving update join — the result is
     *        identical under the invariant, with one join instead of
     *        three.
-    */
-  /** @param mergeSchema Delta's automatic schema evolution
+    * @param mergeSchema Delta's automatic schema evolution
     *        (`spark.databricks.delta.schema.autoMerge`): source-only
     *        columns are APPENDED to the target schema; pre-existing
     *        target rows read null there. Without it (default), new
@@ -212,12 +211,6 @@ object Upsert {
     }
   }
 
-  /** Resolve `source` columns to `target`'s column order, names, and
-    * case (case-insensitive by name; target columns missing from the
-    * source are null-filled with the target's type). Both merge paths
-    * share this because the pipeline mixes `Rev_Per_unit`/
-    * `Rev_Per_Unit` (`4_Fact:50` vs `2_Silver:49`).
-    */
   /** Change data feed: diff two keyed snapshots into the op-tagged
     * changefeed that replays one into the other — the inverse of
     * [[applyChanges]], and the contract is exactly that round trip:
@@ -313,6 +306,12 @@ object Upsert {
         col(s"__r.$weightCol").as(weightCol): _*)
   }
 
+  /** Resolve `source` columns to `target`'s column order, names, and
+    * case (case-insensitive by name; target columns missing from the
+    * source are null-filled with the target's type). Both merge paths
+    * share this because the pipeline mixes `Rev_Per_unit`/
+    * `Rev_Per_Unit` (`4_Fact:50` vs `2_Silver:49`).
+    */
   private[graft] def alignByName(source: DataFrame, target: DataFrame): DataFrame = {
     val lower = source.columns.map(c => c.toLowerCase -> c).toMap
     val aligned = target.columns.map { tc =>
@@ -458,6 +457,19 @@ object Upsert {
     }
   }
 
+  /** Heal a [[atomicReplace]] that crashed between its two renames:
+    * the table then lives ONLY at `<path>__old` — restore it. A stale
+    * `__old` next to a live table (crash after commit, before cleanup)
+    * is just dropped.
+    */
+  private def recoverReplace(fs: org.apache.hadoop.fs.FileSystem,
+                             dst: Path): Unit = {
+    val old = new Path(dst.toString + "__old")
+    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
+      throw new java.io.IOException(
+        s"upsert: cannot recover $old -> $dst")
+  }
+
   /** Write `df` to `path` atomically even though `df`'s plan reads from
     * `path`: materialize to `<path>__tmp`, swap via rename, drop the old
     * generation. Rename is atomic on HDFS-like filesystems; on object
@@ -473,19 +485,6 @@ object Upsert {
     * a generation pointer (a small file naming the current directory)
     * updated by one rename.
     */
-  /** Heal a [[atomicReplace]] that crashed between its two renames:
-    * the table then lives ONLY at `<path>__old` — restore it. A stale
-    * `__old` next to a live table (crash after commit, before cleanup)
-    * is just dropped.
-    */
-  private def recoverReplace(fs: org.apache.hadoop.fs.FileSystem,
-                             dst: Path): Unit = {
-    val old = new Path(dst.toString + "__old")
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-      throw new java.io.IOException(
-        s"upsert: cannot recover $old -> $dst")
-  }
-
   def atomicReplace(spark: SparkSession, path: String, df: DataFrame): Unit = {
     val dst = new Path(path)
     val tmp = new Path(path + "__tmp")

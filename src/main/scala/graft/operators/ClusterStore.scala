@@ -94,11 +94,10 @@ object ClusterStore {
     *     pre-mutation count less the deleted rows as the base, so its
     *     meter starts here instead of reading 0.0 forever.
     *
-    * A delta mutation opens the data directory for its own side and
-    * the survivors; the doomed count opens it again (a schema-inference
-    * job each, as in the per-engine bodies this path replaced). The
-    * stored row set alone decides the result, so an upsert equals its
-    * delete followed by its append (UpsertFusionSpec).
+    * The data directory is opened once (one schema-inference job), and
+    * that frame serves the doomed count, the delta's staging and the
+    * survivors. The stored row set alone decides the result, so an
+    * upsert equals its delete followed by its append (UpsertFusionSpec).
     */
   private[operators] def mutate(spark: SparkSession, indexPath: String,
                                 engine: Engine, doomed: Option[Selection],
@@ -116,14 +115,12 @@ object ClusterStore {
       if (readCountFile(spark, s"$indexPath/_ROWS_BASE").isEmpty)
         Some(rowCount(spark, dir))
       else None
-    val stored = if (exists && delta.isDefined)
-      Some(spark.read.parquet(dir)) else None
+    val stored = if (exists) Some(spark.read.parquet(dir)) else None
     val staged = delta.map(engine.stage(_, stored))
-    val counted = doomed.filter(_ => exists)
-      .map(sel => sel -> spark.read.parquet(dir))
-    val perCluster = counted.fold(Map.empty[Int, Long]) { case (sel, live) =>
-      sel.matching(live).groupBy(col("cluster")).agg(count(lit(1)))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val perCluster = doomed.zip(stored).fold(Map.empty[Int, Long]) {
+      case (sel, live) =>
+        sel.matching(live).groupBy(col("cluster")).agg(count(lit(1)))
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     }
     val nDel = perCluster.values.sum
     val touched = (perCluster.keys ++
@@ -133,7 +130,7 @@ object ClusterStore {
     if (touched.isEmpty && !extras) return 0L  // nothing matched or added
     val survivors =
       if (touched.isEmpty) None
-      else stored.orElse(counted.map(_._2)).map { live =>
+      else stored.map { live =>
         val inTouched = live.filter(col("cluster").isin(touched.toIndexedSeq: _*))
         engine.survivors(doomed.fold(inTouched)(_.keep(inTouched)))
       }

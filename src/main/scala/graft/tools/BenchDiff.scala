@@ -26,8 +26,12 @@ package graft.tools
   * the work changed; same-bytes/same-shuffle flags are reported as
   * attribution noise and do not fail the run.
   *
-  * Exit code 1 when any work-backed regression is flagged, so a round
-  * script can gate on it.
+  * Job count is the deterministic channel: every query whose `jobs`
+  * per attempt rose is listed (an artifact without a `jobs` map skips
+  * this check).
+  *
+  * Exit code 1 when any work-backed regression or job rise is flagged,
+  * so a round script can gate on it.
   */
 object BenchDiff {
 
@@ -67,6 +71,48 @@ object BenchDiff {
 
   private def mapOf(json: String, key: String): Map[String, Double] =
     objectOf(json, key).map(numberMap).getOrElse(Map.empty)
+
+  /** One query's value in the old and the new artifact. */
+  private[tools] final case class Row(q: String, o: Double, n: Double) {
+    def ratio: Double = if (o > 0) n / o else Double.PositiveInfinity
+  }
+
+  private val absFloor = 0.2 // cpu-sec — below this a ratio is arithmetic noise
+
+  /** `cpu_sec` of the queries both artifacts carry, by name. */
+  private[tools] def cpuRows(oldJ: String, newJ: String): Seq[Row] = {
+    val (o, n) = (mapOf(oldJ, "cpu_sec"), mapOf(newJ, "cpu_sec"))
+    (o.keySet & n.keySet).toSeq.sorted.map(q => Row(q, o(q), n(q)))
+  }
+
+  /** The queries whose CPU grew > `ratioFlag`× and by the absolute
+    * floor, largest ratio first, split into work-backed regressions
+    * (`bytes_read` or `shuffle_write` moved > 1%, or is missing) and
+    * attribution noise (both identical).
+    */
+  private[tools] def cpuGrowth(oldJ: String, newJ: String,
+                               ratioFlag: Double): (Seq[Row], Seq[Row]) = {
+    def moved(key: String, q: String): Boolean =
+      (mapOf(oldJ, key).get(q), mapOf(newJ, key).get(q)) match {
+        case (Some(a), Some(b)) =>
+          math.abs(b - a) > 0.01 * math.max(math.max(a, b), 1.0)
+        case _ => true
+      }
+    cpuRows(oldJ, newJ)
+      .filter(r => r.n - r.o > absFloor && r.ratio > ratioFlag)
+      .sortBy(-_.ratio)
+      .partition(r => moved("bytes_read", r.q) || moved("shuffle_write", r.q))
+  }
+
+  /** The queries whose Spark jobs per attempt rose; none when either
+    * artifact lacks a `jobs` map.
+    */
+  private[tools] def jobRises(oldJ: String, newJ: String): Seq[Row] = {
+    val (o, n) = (mapOf(oldJ, "jobs"), mapOf(newJ, "jobs"))
+    (o.keySet & n.keySet).toSeq.sorted.collect {
+      case q if n(q) > o(q) => Row(q, o(q), n(q))
+    }
+  }
 
   private def load(p: String): String =
     new String(java.nio.file.Files.readAllBytes(
@@ -163,55 +209,34 @@ object BenchDiff {
       "usage: BenchDiff <old.json> <new.json> [ratioFlag] " +
         "[--band <third.json>] | " +
         "BenchDiff --spread <a.json> <b.json> [more.json ...]")
-    val args2 = posArgs
-    val ratioFlag = if (args2.length > 2) args2(2).toDouble else 1.5
-    val absFloor = 0.2 // cpu-sec — below this a ratio is arithmetic noise
-    val (oldJ, newJ) = (load(args2(0)), load(args2(1)))
+    val ratioFlag = if (posArgs.length > 2) posArgs(2).toDouble else 1.5
+    val (oldJ, newJ) = (load(posArgs(0)), load(posArgs(1)))
     val (cpuOld, cpuNew) = (mapOf(oldJ, "cpu_sec"), mapOf(newJ, "cpu_sec"))
     val (wallOld, wallNew) = (mapOf(oldJ, "queries"), mapOf(newJ, "queries"))
-    val (bytesOld, bytesNew) =
-      (mapOf(oldJ, "bytes_read"), mapOf(newJ, "bytes_read"))
-    val (shufOld, shufNew) =
-      (mapOf(oldJ, "shuffle_write"), mapOf(newJ, "shuffle_write"))
+    val (bytesNew, shufNew) =
+      (mapOf(newJ, "bytes_read"), mapOf(newJ, "shuffle_write"))
     require(cpuOld.nonEmpty && cpuNew.nonEmpty,
       "both artifacts must carry a cpu_sec map (bench r10+)")
 
-    val common = (cpuOld.keySet & cpuNew.keySet).toSeq.sorted
+    val rows = cpuRows(oldJ, newJ)
     val added = (cpuNew.keySet -- cpuOld.keySet).toSeq.sorted
     val removed = (cpuOld.keySet -- cpuNew.keySet).toSeq.sorted
 
     def f(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
-    case class Row(q: String, o: Double, n: Double) {
-      def ratio: Double = if (o > 0) n / o else Double.PositiveInfinity
-      def wallNote: String =
-        (wallOld.get(q), wallNew.get(q)) match {
-          case (Some(wo), Some(wn)) if wo > 0 =>
-            s" (wall ${f(wn / wo)}x)"
-          case _ => ""
-        }
-    }
-    val rows = common.map(q => Row(q, cpuOld(q), cpuNew(q)))
-    // work changed ⟺ bytes_read or shuffle_write moved > 1% (or a map
-    // is missing the query — then we can't clear it, treat as changed)
-    def workChanged(q: String): Boolean = {
-      def moved(o: Map[String, Double], n: Map[String, Double]) =
-        (o.get(q), n.get(q)) match {
-          case (Some(a), Some(b)) =>
-            math.abs(b - a) > 0.01 * math.max(math.max(a, b), 1.0)
-          case _ => true
-        }
-      moved(bytesOld, bytesNew) || moved(shufOld, shufNew)
-    }
-    val cpuGrew = rows.filter(r =>
-      r.n - r.o > absFloor && r.ratio > ratioFlag).sortBy(-_.ratio)
-    val (flagged, noise) = cpuGrew.partition(r => workChanged(r.q))
+    def wallNote(q: String): String =
+      (wallOld.get(q), wallNew.get(q)) match {
+        case (Some(wo), Some(wn)) if wo > 0 => s" (wall ${f(wn / wo)}x)"
+        case _ => ""
+      }
+    val (flagged, noise) = cpuGrowth(oldJ, newJ, ratioFlag)
+    val rose = jobRises(oldJ, newJ)
     val improved = rows.filter(r =>
       r.o - r.n > absFloor && r.ratio < 1 / ratioFlag).sortBy(_.ratio)
 
     val (to, tn) = (rows.map(_.o).sum, rows.map(_.n).sum)
     println(s"== BenchDiff cpu_sec: ${args(0)} -> ${args(1)} ==")
-    println(s"common ${common.size}  added ${added.size}  " +
+    println(s"common ${rows.size}  added ${added.size}  " +
       s"removed ${removed.size}")
     println(s"common-query cpu total: ${f(to)} -> ${f(tn)} " +
       s"(${f(if (to > 0) tn / to else 0)}x)")
@@ -224,7 +249,7 @@ object BenchDiff {
       println(s"FLAGGED (> ${ratioFlag}x cpu AND bytes/shuffle moved):")
       flagged.foreach(r => println(
         s"  ${r.q}: ${f(r.o)} -> ${f(r.n)} cpu-sec " +
-          s"(${f(r.ratio)}x)${r.wallNote}"))
+          s"(${f(r.ratio)}x)${wallNote(r.q)}"))
     }
     // replication band from the third sidecar, when recorded
     val band: Map[String, Double] = bandPath.map { bp =>
@@ -257,7 +282,7 @@ object BenchDiff {
         }
         println(
           s"  ${r.q}: ${f(r.o)} -> ${f(r.n)} cpu-sec " +
-            s"(${f(r.ratio)}x)${r.wallNote}$note")
+            s"(${f(r.ratio)}x)${wallNote(r.q)}$note")
       }
     }
     // machine-adjudicated outliers (round-14 VERDICT #6): the
@@ -294,8 +319,12 @@ object BenchDiff {
       println("improved:")
       improved.foreach(r => println(
         s"  ${r.q}: ${f(r.o)} -> ${f(r.n)} cpu-sec " +
-          s"(${f(r.ratio)}x)${r.wallNote}"))
+          s"(${f(r.ratio)}x)${wallNote(r.q)}"))
     }
-    if (flagged.nonEmpty) sys.exit(1)
+    if (rose.nonEmpty) {
+      println("JOBS ROSE (Spark jobs per attempt):")
+      rose.foreach(r => println(s"  ${r.q}: ${r.o} -> ${r.n}"))
+    }
+    if (flagged.nonEmpty || rose.nonEmpty) sys.exit(1)
   }
 }

@@ -15,16 +15,6 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = graft.Session.local(cpus)
-    // executor-cpu channel (Bench's load-immune measure, here per rep)
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) cpuNanos.addAndGet(m.executorCpuTime): Unit
-        }
-      })
     spark.read.parquet(s"$sfDir/nation.parquet").count() // warm-up
 
     val explain = args.headOption.contains("--explain")
@@ -44,15 +34,16 @@ object Profile {
         println(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       } else {
+        // wall and executor CPU per rep (Bench's load-immune channel)
         val times = (1 to reps).map { _ =>
           spark.catalog.clearCache()
-          val c0 = cpuNanos.get
-          val t0 = System.nanoTime()
-          // noop sink like Bench: count() lets Catalyst prune the work
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(120)   // let async task-end events drain
-          (wall, (cpuNanos.get - c0) / 1e9)
+          val (wall, m) = graft.obs.QueryMetrics.measure(spark) {
+            val t0 = System.nanoTime()
+            // noop sink like Bench: count() lets Catalyst prune the work
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }
+          (wall, m.cpuSec)
         }
         println(f"$name: ${times.map(t => f"${t._1}%.2f").mkString(" ")} s" +
           f"  cpu ${times.map(t => f"${t._2}%.2f").mkString(" ")} s")

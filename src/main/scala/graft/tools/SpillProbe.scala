@@ -22,33 +22,6 @@ import org.apache.spark.sql.functions._
   * regenerates.
   */
 object SpillProbe {
-
-  /** Per-query totals from task metrics — the listener sees every
-    * task, so the numbers are complete whatever the plan shape.
-    */
-  private final class SpillListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val peakExecMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        memSpilled.addAndGet(m.memoryBytesSpilled): Unit
-        diskSpilled.addAndGet(m.diskBytesSpilled): Unit
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        peakExecMem.updateAndGet(p =>
-          math.max(p, m.peakExecutionMemory)): Unit
-      }
-    }
-    def reset(): Unit = {
-      memSpilled.set(0); diskSpilled.set(0)
-      shuffleWrite.set(0); peakExecMem.set(0)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SPILL_COPIES", "100").toInt
@@ -88,31 +61,23 @@ object SpillProbe {
         .parquet(s"$staging/embeddings.parquet")
     }
 
-    val listener = new SpillListener
-    spark.sparkContext.addSparkListener(listener)
     def gb(b: Long): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(b / 1e9))
     Seq("q_v_semdedup", "q_d_minhash_lsh", "q_t_kn3_surprisal")
       .foreach { name =>
-      listener.reset()
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, big)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; poll until the counters
-      // stop moving (Bench.metricsSnapshot's quiesce convention)
-      var prev = -1L
-      var waited = 0
-      while (waited < 2000 &&
-          prev != listener.memSpilled.get + listener.shuffleWrite.get) {
-        prev = listener.memSpilled.get + listener.shuffleWrite.get
-        Thread.sleep(50); waited += 50
+      // task-metric totals over every task of the query, whatever the
+      // plan shape
+      val (sec, m) = graft.obs.QueryMetrics.measure(spark) {
+        val t0 = System.nanoTime()
+        graft.SparkEntry.queries(name)(spark, big)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       }
       println(f"[spill] $name copies=$copies wall=$sec%.1f s " +
-        s"mem_spilled_gb=${gb(listener.memSpilled.get)} " +
-        s"disk_spilled_gb=${gb(listener.diskSpilled.get)} " +
-        s"shuffle_write_gb=${gb(listener.shuffleWrite.get)} " +
-        s"peak_exec_mem_gb=${gb(listener.peakExecMem.get)}")
+        s"mem_spilled_gb=${gb(m.memorySpilledBytes)} " +
+        s"disk_spilled_gb=${gb(m.diskSpilledBytes)} " +
+        s"shuffle_write_gb=${gb(m.shuffleWriteBytes)} " +
+        s"peak_exec_mem_gb=${gb(m.peakExecutionMemory)}")
     }
     spark.stop()
   }

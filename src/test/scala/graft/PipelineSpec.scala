@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SpecBus
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -133,7 +133,7 @@ class PipelineSpec extends SparkSpec {
                              e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try { body; SpecBus.drain(spark.sparkContext) }
+    try { body; GraftBus.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
     plans.asScala.toSeq
   }

@@ -11,20 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `body`'s result and the number of Spark jobs it started. */
   def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.SpecBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val result = body
-      org.apache.spark.SpecBus.drain(sc)
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (result, totals) = graft.obs.QueryMetrics.measure(spark)(body)
+    (result, totals.jobs)
   }
 }
 

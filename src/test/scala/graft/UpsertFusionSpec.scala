@@ -194,13 +194,13 @@ class UpsertFusionSpec extends SparkSpec {
   /** Spark jobs of one streamed CDC epoch on these fixtures — the
     * delta upserted and the tombstones deleted, under the inline-delete
     * cap — per engine in the test session (`local[4]`, 4 shuffle
-    * partitions), as measured before both engines shared one mutation
-    * path. Job count does not depend on box load, so a rise above it
-    * is a deterministic regression signal; a change that cuts jobs
-    * lowers it.
+    * partitions), as measured once each mutation opened the index's
+    * data directory once. Job count does not depend on box load, so a
+    * rise above it is a deterministic regression signal; a change that
+    * cuts jobs lowers it.
     */
-  private val ivfEpochJobCeiling = 12
-  private val hnswEpochJobCeiling = 13
+  private val ivfEpochJobCeiling = 11
+  private val hnswEpochJobCeiling = 12
 
   test("one streamed CDC epoch stays within its Spark job ceiling on " +
     "both engines") {
