@@ -97,18 +97,12 @@ object Layout {
   // ── File-level data skipping ────────────────────────────────────────
 
   private def statsPath(tablePath: String): String = tablePath + "__stats"
-  private def asidePath(tablePath: String) =
-    new org.apache.hadoop.fs.Path(statsPath(tablePath) + "._old")
+  /** `staged` over the manifest, the live one moving to `__stats._old`. */
+  private def manifestSwap(tablePath: String, staged: Option[org.apache.hadoop.fs.Path]) =
+    Commit.Swap(staged, new org.apache.hadoop.fs.Path(statsPath(tablePath)),
+      new org.apache.hadoop.fs.Path(statsPath(tablePath) + "._old"))
   private def lockFile(tablePath: String) =
     new org.apache.hadoop.fs.Path(statsPath(tablePath) + "._lock")
-
-  /** Test seam for the DML kill matrix: called with a label between
-    * every pair of externally-visible steps of [[rewriteMatching]]'s
-    * publish sequence ("staged" → "aside" → "published" → "swapped").
-    * LayoutExtensionsSpec throws here to simulate a writer dying at
-    * each point, then asserts readers recover. No-op in production.
-    */
-  private[graft] var dmlSeam: String => Unit = _ => ()
 
   /** Serialize manifest DML per table on a lock file next to the
     * manifest. Acquisition is create-exclusive (atomic on HDFS-like
@@ -136,7 +130,7 @@ object Layout {
       val created = try {
         val out = fs.create(lock, false)
         out.write(id.getBytes("UTF-8")); out.close(); true
-      } catch { case _: java.io.IOException => false }
+      } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
       owned = created && {
         // confirm by content: if two creators raced through the local-FS
         // exists window, exactly one id survives in the file. The read
@@ -172,32 +166,20 @@ object Layout {
   }
 
   /** Complete (or roll back) a manifest swap a crashed writer left
-    * mid-flight. MUST run under the table's manifest lock. States:
-    *  - live manifest AND `._old` aside → the swap published but the
-    *    aside was not yet dropped: finish (delete the aside);
-    *  - aside but NO live manifest → crashed between the two renames:
-    *    ROLL BACK (rename the aside home). Roll-back is always correct
-    *    here because [[rewriteMatching]] deletes the dirty data files
-    *    only AFTER a successful swap — the old manifest still lists
-    *    only live files, and the already-moved-in survivor files are
-    *    unlisted garbage [[vacuumUnlisted]] sweeps;
-    *  - any `__stats._new.*` staging → a crashed writer's private
-    *    build: discard (writers serialize on the lock, so none can be
-    *    live while we hold it).
-    * Idempotent; one parent-dir listing when there is nothing to do.
+    * mid-flight. MUST run under the table's manifest lock. The staging
+    * is private to the dead writer, so [[Commit.recover]] ROLLS BACK a
+    * swap that had not published — always correct, because
+    * [[rewriteMatching]] deletes the dirty data files only AFTER a
+    * successful swap (the moved-in survivors are unlisted garbage
+    * [[vacuumUnlisted]] sweeps). Any `__stats._new.*` staging is then
+    * discarded (writers serialize on the lock, so none is live).
     */
   private[graft] def recoverManifest(fs: org.apache.hadoop.fs.FileSystem,
                                      tablePath: String): Unit = {
-    val statsDir = new org.apache.hadoop.fs.Path(statsPath(tablePath))
-    val aside = asidePath(tablePath)
-    if (fs.exists(aside)) {
-      if (fs.exists(statsDir)) fs.delete(aside, true)
-      else if (!fs.rename(aside, statsDir))
-        throw new java.io.IOException(
-          s"recoverManifest: could not restore $aside to $statsDir")
-    }
-    val parent = statsDir.getParent
-    val prefix = statsDir.getName + "._new."
+    val swap = manifestSwap(tablePath, None)
+    Commit.recover(fs, Seq(swap), None)
+    val parent = swap.live.getParent
+    val prefix = swap.live.getName + "._new."
     if (parent != null && fs.exists(parent))
       fs.listStatus(parent)
         .filter(_.getPath.getName.startsWith(prefix))
@@ -505,10 +487,10 @@ object Layout {
 
         // 2. crash-atomic manifest swap (stats of NEW files only;
         //    untouched rows carried over verbatim). Build in a
-        //    per-writer staging dir, publish by rename-aside — never
-        //    delete the live manifest before its replacement is in
-        //    place (see recoverManifest for the repair of every
-        //    intermediate state).
+        //    per-writer staging dir, publish by Commit's rename-aside
+        //    swap — never delete the live manifest before its
+        //    replacement is in place (see recoverManifest for the
+        //    repair of every intermediate state).
         val cols = stats.columns.filter(_.startsWith("min_"))
           .map(_.stripPrefix("min_"))
         val bloomCols = stats.columns.filter(_.startsWith("bloom_"))
@@ -530,25 +512,12 @@ object Layout {
                   .as("file"))
                 .agg(aggs.head, aggs.tail: _*))
           }
-        val statsDir = new org.apache.hadoop.fs.Path(statsPath(tablePath))
         val statsStaging = new org.apache.hadoop.fs.Path(
           statsPath(tablePath) + "._new." +
             java.util.UUID.randomUUID().toString.take(8))
         newRows.coalesce(1).write.mode("overwrite")
           .parquet(statsStaging.toString)
-        dmlSeam("staged")
-        val aside = asidePath(tablePath)
-        if (!fs.rename(statsDir, aside))
-          throw new java.io.IOException(
-            s"deleteMatching: could not move $statsDir aside")
-        dmlSeam("aside")
-        if (!fs.rename(statsStaging, statsDir))
-          throw new java.io.IOException(
-            s"deleteMatching: could not publish manifest at $statsDir " +
-              "(recoverManifest will roll back)")
-        dmlSeam("published")
-        fs.delete(aside, true)
-        dmlSeam("swapped")
+        Commit.swap(fs, Seq(manifestSwap(tablePath, Some(statsStaging))), None)
 
         // 3. dirty files are unlisted garbage now
         dirty.foreach(n =>

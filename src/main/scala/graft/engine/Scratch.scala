@@ -145,16 +145,14 @@ object Scratch {
     *
     * The rebuild is ATOMIC-swap, not delete-then-build-in-place
     * (round-6 ADVICE): `build` writes into a staging sibling, the
-    * marker lands inside it, and ONE rename publishes artifact+marker
-    * together. A concurrent reader of the old artifact races only the
-    * final delete+rename window instead of the whole build, and a
-    * crash at any point leaves either the old artifact or a dangling
-    * staging dir — never a half-built artifact that a marker-mtime
-    * check could misjudge. A lost rename race (another process
-    * published first) is accepted iff the winner's marker carries OUR
-    * fingerprint and is fresh; a rename that fails with nothing
-    * published is an error and must throw (NOTES r5 lesson #2: Hadoop
-    * `rename` returns false on genuine IO failures too).
+    * marker lands inside it, and ONE [[Commit]] swap (the old artifact
+    * moving to `<dir>._old`) publishes artifact+marker together. A
+    * concurrent reader races only the swap's two renames, and a crash
+    * leaves the old artifact (moved home by the next call) or a
+    * dangling staging dir — never a half-built artifact. A failed
+    * publish (a lost race, or a real IO error: Hadoop `rename` returns
+    * false on those too) is accepted iff a fresh artifact carrying OUR
+    * fingerprint is in place.
     */
   def ensureAt(spark: SparkSession, artifactDir: String, sourcePath: String,
                fingerprint: String = "",
@@ -167,6 +165,7 @@ object Scratch {
     def fresh: Boolean = fs.exists(marker) &&
       fs.getFileStatus(marker).getModificationTime >= srcModified &&
       readMarker(fs, marker).contains(fingerprint)
+    recoverAt(fs, target)
     if (!fresh) {
       val staging = new Path(artifactDir + "._staging_" +
         java.util.UUID.randomUUID().toString.take(8))
@@ -174,18 +173,19 @@ object Scratch {
         build(staging.toString)
         val o = fs.create(new Path(staging, markerName), true)
         o.write(fingerprint.getBytes("UTF-8")); o.close()
-        fs.delete(target, true)
-        if (!fs.rename(staging, target)) {
-          // lost the race (another builder published) — or a real IO
-          // failure; serving a stale/absent artifact silently is the
-          // one unacceptable outcome
-          if (!fresh) throw new java.io.IOException(
-            s"Scratch.ensureAt: could not publish $staging -> $target " +
-              "and no fresh artifact exists")
-        }
-      } finally fs.delete(staging, true) // no-op when the rename won
+        // serving a stale/absent artifact is the one unacceptable outcome
+        try Commit.swap(fs, Seq(artifactSwap(target, Some(staging))), None)
+        catch { case e: java.io.IOException => if (!fresh) throw e }
+      } finally fs.delete(staging, true) // no-op once published
     }
   }
+
+  private def artifactSwap(target: Path, staged: Option[Path]) =
+    Commit.Swap(staged, target, new Path(s"${target}._old"))
+
+  /** Move home an artifact a crashed [[ensureAt]] left aside. */
+  private[graft] def recoverAt(fs: org.apache.hadoop.fs.FileSystem, target: Path): Unit =
+    Commit.recover(fs, Seq(artifactSwap(target, None)), None)
 
   /** Return a scratch directory for (`tag`, `sourcePath`), running
     * `build` first iff the artifact is missing, half-built (no marker:

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,10 +47,12 @@ import org.apache.spark.sql.functions._
   * updates a match" ambiguous — callers should dedup the source first
   * (Delta throws; we keep whichever rows the join produces).
   *
-  * Durability: write to `<path>__tmp`, then atomically swap directories
-  * via Hadoop rename (single-writer pipeline — same guarantee level the
-  * reference actually relies on; Delta's log adds concurrent-writer
-  * isolation we don't need).
+  * Durability: the result is written to `<path>__tmp` and published by
+  * [[Commit]]'s swap, the live table moving aside to `<path>__old`
+  * first. Every writer runs [[Commit.recover]] before it reads the
+  * target, so a crash at any point leaves the old table or the new one
+  * (single-writer pipeline, the guarantee level the reference relies
+  * on; Delta's log adds concurrent-writer isolation we don't need).
   *
   * Null-safe key equality (`<=>`) so null keys match like Delta's
   * `=` on nulls does NOT — we intentionally use null-safe semantics so
@@ -92,49 +94,37 @@ object Upsert {
             keys: Seq[String], uniqueKeyTarget: Boolean = false,
             mergeSchema: Boolean = false): Unit = {
     require(keys.nonEmpty, "merge requires at least one key column")
-    val p = new Path(targetPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a swap that died between its two renames BEFORE the
-    // existence check — otherwise the table (alive only in __old)
-    // reads as "new" and the increment silently becomes the whole table
-    recoverReplace(fs, p)
+    rewrite(spark, targetPath) {
+      case None => source
+      case Some(existing) =>
+        // schema evolution = widen the TARGET with null-typed new columns
+        // BEFORE alignment; every join below then works on the evolved
+        // schema and kept rows carry nulls in the new columns
+        val target =
+          if (!mergeSchema) existing
+          else source.columns
+            .filterNot(c => existing.columns.exists(_.equalsIgnoreCase(c)))
+            .foldLeft(existing)((df, c) =>
+              df.withColumn(c, lit(null).cast(source.schema(c).dataType)))
+        val src = alignByName(source, target)
 
-    if (!fs.exists(p)) {
-      source.write.mode("overwrite").parquet(targetPath)
-      return
-    }
-
-    val existing = ParquetTable.open(spark, targetPath)
-    // schema evolution = widen the TARGET with null-typed new columns
-    // BEFORE alignment; every join below then works on the evolved
-    // schema and kept rows carry nulls in the new columns
-    val target =
-      if (!mergeSchema) existing
-      else source.columns
-        .filterNot(c => existing.columns.exists(_.equalsIgnoreCase(c)))
-        .foldLeft(existing)((df, c) =>
-          df.withColumn(c, lit(null).cast(source.schema(c).dataType)))
-    val src = alignByName(source, target)
-
-    val keptCond: Column = keys
-      .map(k => target(k) <=> src(k))
-      .reduce(_ && _)
-    val kept = target.join(src, keptCond, "left_anti")
-    val result =
-      if (uniqueKeyTarget) kept.unionByName(src)
-      else {
-        // one updated copy per matched target row (multiplicity kept)
-        val targetKeys = target.select(keys.map(col).toIndexedSeq: _*)
-        val updCond: Column = keys
-          .map(k => targetKeys(k) <=> src(k))
+        val keptCond: Column = keys
+          .map(k => target(k) <=> src(k))
           .reduce(_ && _)
-        val updated = targetKeys.join(src, updCond, "inner")
-          .select(src.columns.map(src(_)).toIndexedSeq: _*)
-        val inserted = src.join(target, keptCond, "left_anti")
-        kept.unionByName(updated).unionByName(inserted)
-      }
-
-    atomicReplace(spark, targetPath, result)
+        val kept = target.join(src, keptCond, "left_anti")
+        if (uniqueKeyTarget) kept.unionByName(src)
+        else {
+          // one updated copy per matched target row (multiplicity kept)
+          val targetKeys = target.select(keys.map(col).toIndexedSeq: _*)
+          val updCond: Column = keys
+            .map(k => targetKeys(k) <=> src(k))
+            .reduce(_ && _)
+          val updated = targetKeys.join(src, updCond, "inner")
+            .select(src.columns.map(src(_)).toIndexedSeq: _*)
+          val inserted = src.join(target, keptCond, "left_anti")
+          kept.unionByName(updated).unionByName(inserted)
+        }
+    }
   }
 
   /** Apply a CDC changefeed (insert/update/delete rows tagged by an op
@@ -146,27 +136,33 @@ object Upsert {
     *     delete is a no-op (never inserted);
     *   - any other op: upsert (update matched, insert unmatched).
     *
-    * Same execution accounting as [[merge]]: the changefeed is the
-    * (small) broadcastable side; the target is never shuffled when the
-    * feed broadcasts; one rewrite commit.
+    * Same execution accounting as [[merge]]: the target is opened from
+    * one footer, the changefeed is the (small) broadcastable side, and
+    * the target's shuffle map stage runs once before AQE switches the
+    * anti join to a broadcast; one rewrite commit.
     */
   def applyChanges(spark: SparkSession, targetPath: String,
                    changes: DataFrame, keys: Seq[String],
                    opCol: String = "op", deleteOp: String = "D",
                    uniqueKeyTarget: Boolean = false): Unit = {
     require(keys.nonEmpty, "applyChanges requires at least one key column")
+    rewrite(spark, targetPath)(
+      applyChangesPlan(_, changes, keys, opCol, deleteOp, uniqueKeyTarget))
+  }
+
+  /** The prologue [[merge]] and [[applyChanges]] share: recover BEFORE
+    * the existence check (a table alive only in `__old` must not read
+    * as "new"), then write `plan(None)` as the new table or swap in
+    * `plan` of the target opened from its footer.
+    */
+  private def rewrite(spark: SparkSession, targetPath: String)
+                     (plan: Option[DataFrame] => DataFrame): Unit = {
     val p = new Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverReplace(fs, p)
-    if (!fs.exists(p)) {
-      applyChangesPlan(None, changes, keys, opCol, deleteOp, uniqueKeyTarget)
-        .write.mode("overwrite").parquet(targetPath)
-      return
-    }
-    val target = spark.read.parquet(targetPath)
-    atomicReplace(spark, targetPath,
-      applyChangesPlan(Some(target), changes, keys, opCol, deleteOp,
-        uniqueKeyTarget))
+    recover(fs, p)
+    if (!fs.exists(p)) plan(None).write.mode("overwrite").parquet(targetPath)
+    else atomicReplace(spark, targetPath,
+      plan(Some(ParquetTable.open(spark, targetPath))))
   }
 
   /** The merged-state PLAN for a changefeed applied to an optional
@@ -330,8 +326,10 @@ object Upsert {
     * costs 0.1% of a full-table rewrite, and the anti join's partition
     * filter is pushed into the target scan (IN (<source partitions>)).
     *
-    * Commit granularity is per-partition-set via Spark's dynamic
-    * partition overwrite (replaces exactly the partitions written).
+    * The merged partitions land in `<path>__delta_tmp` and commit as one
+    * journaled [[Commit]] swap: each live partition moves aside into
+    * `<path>__backup` (outside the table root, so a leftover can't be
+    * misparsed as a partition value), then its replacement moves in.
     * `partitionCol` must be part of every source row; rows may move
     * INTO a partition but a key is assumed not to move BETWEEN
     * partitions (same invariant Delta's partitioned merges rely on for
@@ -343,14 +341,12 @@ object Upsert {
     require(keys.nonEmpty, "mergePartitioned requires at least one key column")
     val p = new Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(targetPath + "__delta_tmp")
-    val backup = new Path(targetPath + "__backup")
+    val (tmp, backup) = partitionedScratch(p)
     // crash recovery FIRST — before the target read snapshots its file
     // listing. A crashed run may have left partitions only in the
     // backup dir; restoring after the read would make their old rows
     // invisible to this merge (and lost when the commit rewrites them).
-    fs.delete(tmp, true)
-    recoverBackup(fs, p, backup)
+    recoverPartitioned(fs, p)
     if (!fs.exists(p)) {
       source.write.partitionBy(partitionCol).parquet(targetPath)
       return
@@ -364,7 +360,7 @@ object Upsert {
     // isin() never matches null, so a null-keyed source partition needs
     // an explicit isNull arm — without it the target's existing
     // null-partition rows would be excluded from `affected`, yet the
-    // commit rename would still replace their directory
+    // commit would still replace their directory
     // (__HIVE_DEFAULT_PARTITION__), silently dropping them
     val nonNullParts = parts.filter(_ != null)
     val partFilter0 = col(partitionCol).isin(nonNullParts.toIndexedSeq: _*)
@@ -380,127 +376,67 @@ object Upsert {
     val updated = affectedKeys.join(srcAligned, updCond, "inner")
       .select(srcAligned.columns.map(srcAligned(_)).toIndexedSeq: _*)
     val inserted = srcAligned.join(affected, cond, "left_anti")
-    val merged = kept.unionByName(updated).unionByName(inserted)
     // single staged write (merged reads from targetPath, so it cannot be
-    // written in place): the tmp output IS partitioned, and each affected
-    // partition directory is swapped into the target by rename — affected
-    // data is written exactly once, untouched partitions are never opened.
-    //
-    // Two-phase commit so a crash or failed rename mid-swap cannot strand
-    // the table half-updated with the old data gone: phase 1 renames every
-    // affected target partition into a backup dir OUTSIDE the table root
-    // (never deleted until all swaps succeed — and outside so a leftover
-    // backup can't be misparsed as a partition value by a later read);
-    // phase 2 renames the tmp partitions in; any failure rolls back by
-    // deleting the partially-renamed new dirs and restoring the backups.
-    merged.write.partitionBy(partitionCol).parquet(tmp.toString)
-    val partDirs = fs.listStatus(tmp)
+    // written in place): affected data is written exactly once, and
+    // untouched partitions are never opened
+    kept.unionByName(updated).unionByName(inserted)
+      .write.partitionBy(partitionCol).parquet(tmp.toString)
+    fs.mkdirs(backup)
+    Commit.swap(fs, fs.listStatus(tmp).toSeq
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith(partitionCol + "="))
-    val stagedOut = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
-    val renamedIn = scala.collection.mutable.ListBuffer.empty[Path]
-    try {
-      fs.mkdirs(backup)
-      partDirs.foreach { st => // phase 1: stage affected originals aside
-        val dst = new Path(p, st.getPath.getName)
-        if (fs.exists(dst)) {
-          val bak = new Path(backup, st.getPath.getName)
-          if (!fs.rename(dst, bak))
-            throw new java.io.IOException(
-              s"mergePartitioned: cannot stage out $dst")
-          stagedOut += ((dst, bak))
-        }
-      }
-      partDirs.foreach { st => // phase 2: swap the new partitions in
-        val dst = new Path(p, st.getPath.getName)
-        if (!fs.rename(st.getPath, dst))
-          throw new java.io.IOException(
-            s"mergePartitioned: cannot commit ${st.getPath} -> $dst")
-        renamedIn += dst
-      }
-    } catch {
-      case e: Throwable =>
-        renamedIn.foreach(dst => fs.delete(dst, true))
-        // restores must be CHECKED: a failed restore means the staged
-        // original survives only in the backup dir — in that case keep
-        // the backup on disk (recoverBackup on the next run retries)
-        // instead of deleting the only remaining copy
-        val allRestored = stagedOut.forall { case (dst, bak) =>
-          fs.rename(bak, dst) || fs.exists(dst)
-        }
-        fs.delete(tmp, true)
-        if (allRestored) fs.delete(backup, true)
-        throw e
-    }
+      .map(st => partSwap(p, st.getPath.getName)), Some(new Path(tmp, "_COMMIT")))
     fs.delete(backup, true)
     fs.delete(tmp, true)
   }
 
-  /** Crash recovery for [[mergePartitioned]]'s two-phase commit: a
-    * leftover backup dir means a prior run died between staging a
-    * partition out (phase 1) and renaming its replacement in (phase 2)
-    * — for any staged partition the target no longer has, the backup
-    * holds the ONLY copy, so restore it before anything deletes the
-    * backup. Partitions the target does have were committed (or never
-    * staged); their backup copies are stale and dropped.
-    */
-  private def recoverBackup(fs: org.apache.hadoop.fs.FileSystem,
-                            target: Path, backup: Path): Unit = {
-    if (fs.exists(backup)) {
-      fs.listStatus(backup).foreach { st =>
-        val dst = new Path(target, st.getPath.getName)
-        if (!fs.exists(dst) && !fs.rename(st.getPath, dst))
-          throw new java.io.IOException(
-            s"mergePartitioned: cannot recover ${st.getPath} -> $dst")
-      }
-      fs.delete(backup, true)
-    }
+  /** `<path>__delta_tmp` (the staged partitions and the journal) and
+    * `<path>__backup` (the live partitions moved aside). */
+  private def partitionedScratch(p: Path) =
+    (new Path(s"${p}__delta_tmp"), new Path(s"${p}__backup"))
+
+  private def partSwap(p: Path, name: String) = Commit.Swap(
+    Some(new Path(s"${p}__delta_tmp/$name")), new Path(p, name), new Path(s"${p}__backup/$name"))
+
+  /** Finish or undo a [[mergePartitioned]] commit a crash interrupted;
+    * without a journal, the partitions in `__backup` are pending. */
+  private[graft] def recoverPartitioned(fs: FileSystem, p: Path): Unit = {
+    val (tmp, backup) = partitionedScratch(p)
+    val pending =
+      if (!fs.exists(backup)) Nil
+      else fs.listStatus(backup).toSeq.map(st => partSwap(p, st.getPath.getName))
+    Commit.recover(fs, pending, Some(new Path(tmp, "_COMMIT")))
+    fs.delete(tmp, true)
+    fs.delete(backup, true)
   }
 
-  /** Heal a [[atomicReplace]] that crashed between its two renames:
-    * the table then lives ONLY at `<path>__old` — restore it. A stale
-    * `__old` next to a live table (crash after commit, before cleanup)
-    * is just dropped.
-    */
-  private def recoverReplace(fs: org.apache.hadoop.fs.FileSystem,
-                             dst: Path): Unit = {
-    val old = new Path(dst.toString + "__old")
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-      throw new java.io.IOException(
-        s"upsert: cannot recover $old -> $dst")
-  }
+  private def replaceSwap(dst: Path) =
+    Commit.Swap(Some(new Path(s"${dst}__tmp")), dst, new Path(s"${dst}__old"))
+
+  /** Finish or undo an [[atomicReplace]] a crash interrupted. */
+  private[graft] def recover(fs: FileSystem, path: Path): Unit =
+    Commit.recover(fs, Seq(replaceSwap(path)), None)
 
   /** Write `df` to `path` atomically even though `df`'s plan reads from
-    * `path`: materialize to `<path>__tmp`, swap via rename, drop the old
-    * generation. Rename is atomic on HDFS-like filesystems; on object
-    * stores a committer would take this role — the contract (readers see
-    * old or new, never partial) is the same.
+    * `path`: materialize to `<path>__tmp`, then publish it with
+    * [[Commit]]'s swap (the live table moves to `<path>__old`, the new
+    * one moves in, the old one is dropped). Rename is atomic on
+    * HDFS-like filesystems; on object stores a committer would take
+    * this role — the contract (readers see old or new, never partial)
+    * is the same.
     *
-    * Known window (single-writer contract): between the `dst → old` and
-    * `tmp → dst` renames the table directory briefly does not exist, so
-    * a CONCURRENT reader listing at that instant fails fast (it never
-    * sees partial data). The engine's pipelines are single-writer/
-    * single-reader per table, matching the guarantee level the reference
-    * actually relies on; multi-reader deployments would front this with
-    * a generation pointer (a small file naming the current directory)
-    * updated by one rename.
+    * Between the swap's two renames a CONCURRENT reader listing fails
+    * fast (it never sees partial data), and a crash there is rolled
+    * forward by the next writer's [[Commit.recover]]; the pipelines are
+    * single-writer/single-reader per table, like the reference.
     */
   def atomicReplace(spark: SparkSession, path: String, df: DataFrame): Unit = {
     val dst = new Path(path)
-    val tmp = new Path(path + "__tmp")
-    val old = new Path(path + "__old")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverReplace(fs, dst)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"upsert: cannot stage out $dst")
-    if (!fs.rename(tmp, dst)) {
-      fs.rename(old, dst) // roll back
-      throw new java.io.IOException(s"upsert: cannot commit $tmp -> $dst")
-    }
-    fs.delete(old, true)
+    val swap = replaceSwap(dst)
+    recover(fs, dst)
+    df.write.mode("overwrite").parquet(swap.staged.get.toString)
+    Commit.swap(fs, Seq(swap), None)
   }
 }
 

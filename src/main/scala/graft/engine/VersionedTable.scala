@@ -48,6 +48,9 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
   private val stagingDir = new Path(base, "_staging")
   private val modePath = new Path(base, "_mode")
   private val vacuumedPath = new Path(base, "_vacuumed")
+  /** The watermark's swap: `_vacuumed.new` over `_vacuumed`. */
+  private val markSwap = Commit.Swap(Some(new Path(base, "_vacuumed.new")),
+    vacuumedPath, new Path(base, "_vacuumed.old"))
 
   private def fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -198,27 +201,24 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     val out = f.create(staging, true)
     out.write(target.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
-    try {
-      var n = listNumbers(claimsDir).lastOption.getOrElse(-1L) + 1L
-      var committed = false
-      while (!committed) {
-        val won =
-          try { f.create(claimPath(n), false).close(); true }
-          catch {
-            case e: java.io.IOException =>
-              if (f.exists(claimPath(n))) false else throw e
-          }
-        if (won) {
-          if (!f.rename(staging, genPath(n)))
-            throw new java.io.IOException(
-              s"rename $staging -> ${genPath(n)} failed")
-          committed = true
-        } else n += 1
+    try claimNext(staging) finally if (f.exists(staging)) f.delete(staging, false)
+  }
+
+  /** Claim the lowest free version and rename `staging` in as it: a lost
+    * claim race moves on, a genuine IO failure surfaces. */
+  private def claimNext(staging: Path): Long = {
+    val f = fs
+    var n = listNumbers(claimsDir).lastOption.getOrElse(-1L) + 1L
+    def claimed: Boolean =
+      try { f.create(claimPath(n), false).close(); true }
+      catch {
+        case e: java.io.IOException =>
+          if (f.exists(claimPath(n))) false else throw e
       }
-      n
-    } finally {
-      if (f.exists(staging)) f.delete(staging, false)
-    }
+    while (!claimed) n += 1
+    if (!f.rename(staging, genPath(n)))
+      throw new java.io.IOException(s"rename $staging -> ${genPath(n)} failed")
+    n
   }
 
   /** Commit `df` as the next generation; returns its version number.
@@ -238,30 +238,8 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     val staging = new Path(stagingDir,
       "." + java.util.UUID.randomUUID().toString)
     df.write.mode("overwrite").parquet(staging.toString)
-    try {
-      var n = listNumbers(claimsDir).lastOption.getOrElse(-1L) + 1L
-      var committed = false
-      while (!committed) {
-        val won =
-          try { f.create(claimPath(n), false).close(); true }
-          catch {
-            // lost the race only if the claim actually exists now —
-            // a genuine IO failure must surface, not spin the loop
-            case e: java.io.IOException =>
-              if (f.exists(claimPath(n))) false else throw e
-          }
-        if (won) {
-          if (!f.rename(staging, genPath(n)))
-            throw new java.io.IOException(
-              s"rename $staging -> ${genPath(n)} failed")
-          committed = true
-        } else n += 1
-      }
-      n
-    } finally {
-      // a failed commit must not leave staging garbage
-      if (f.exists(staging)) f.delete(staging, true)
-    }
+    // a failed commit must not leave staging garbage
+    try claimNext(staging) finally if (f.exists(staging)) f.delete(staging, true)
   }
 
   /** Exactly-once streaming append: commit `df` as generation
@@ -479,11 +457,11 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     *    committed epoch), exactly like choosing a Delta vacuum
     *    retention.
     *
-    * Crash safety: the squash builds in a `.new` sibling, the live
-    * generation moves aside to `.old`, the `.new` renames in, the
-    * watermark advances, THEN old generations delete — every
-    * intermediate state is recognized and completed by
-    * [[recoverCompaction]] (run automatically at the next
+    * Crash safety: the squash builds in a `.new` sibling and commits
+    * with the advanced watermark in ONE journaled [[Commit]] swap (the
+    * live generation moves aside to `.old`, the `.new` moves in), THEN
+    * the retired generations delete — a crash at any point is finished
+    * or undone by [[recoverCompaction]] (run automatically at the next
     * compactAppend; run it explicitly after a crash before trusting
     * reads). Concurrent APPENDS of batches > `upTo` are safe
     * throughout; concurrent readers can transiently see the table
@@ -508,68 +486,48 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum).sum
     val nFiles = math.max(1L,
       (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val newP = genAux(upTo, "new")
-    val oldP = genAux(upTo, "old")
-    f.delete(newP, true)
-    union.coalesce(nFiles).write.mode("overwrite").parquet(newP.toString)
-    if (!f.rename(genPath(upTo), oldP))
-      throw new java.io.IOException(
-        s"compactAppend($upTo): could not move ${genPath(upTo)} aside")
-    if (!f.rename(newP, genPath(upTo)))
-      throw new java.io.IOException(
-        s"compactAppend($upTo): could not publish $newP " +
-          "(recoverCompaction will complete it)")
-    finishSquash(upTo)
+    union.coalesce(nFiles).write.mode("overwrite")
+      .parquet(genAux(upTo, "new").toString)
+    Commit.swap(f, squashSwap(upTo) +: stageWatermark(upTo - 1).toSeq,
+      Some(genAux(upTo, "commit")))
+    dropRetired()
     upTo
   }
 
   private def genAux(n: Long, suffix: String) =
     new Path(genDir, f"$n%06d.$suffix")
 
-  /** Complete a [[compactAppend]] interrupted at any point — each
-    * crash state is distinguishable from the `.new`/`.old` siblings:
-    * squash built but unpublished (discard it; rebuildable), crashed
-    * between the renames (publish `.new`, then finish), crashed
-    * before cleanup (finish: advance watermark, drop folded
-    * generations). Idempotent; cheap (one directory listing) when
-    * there is nothing to recover.
+  private def squashSwap(n: Long) =
+    Commit.Swap(Some(genAux(n, "new")), genPath(n), genAux(n, "old"))
+
+  /** Complete or undo a [[compactAppend]] interrupted at any point:
+    * [[Commit.recover]] on each squash its `.new`/`.old`/`.commit`
+    * siblings name (one that published without a journal still advances
+    * the watermark) and on the watermark, then drop the retired
+    * generations. Idempotent; one listing when there is nothing to do.
     */
   def recoverCompaction(): Unit = {
     val f = fs
     if (!f.exists(genDir)) return
-    val names = f.listStatus(genDir).map(_.getPath.getName).toSeq
-    def numOf(name: String, suf: String): Option[Long] =
-      scala.util.Try(name.stripSuffix(suf).toLong).toOption
-    names.filter(_.endsWith(".new")).foreach { name =>
-      numOf(name, ".new").foreach { n =>
-        if (f.exists(genPath(n)) && !f.exists(genAux(n, "old")))
-          f.delete(genAux(n, "new"), true) // unpublished squash: discard
-        else if (!f.exists(genPath(n))) {
-          if (!f.rename(genAux(n, "new"), genPath(n)))
-            throw new java.io.IOException(
-              s"recoverCompaction: could not publish ${genAux(n, "new")}")
-          finishSquash(n)
-        }
-      }
+    val squashes = f.listStatus(genDir).toSeq.map(_.getPath.getName)
+      .flatMap(name => Seq(".new", ".old", ".commit").find(name.endsWith)
+        .flatMap(suf => scala.util.Try(name.stripSuffix(suf).toLong).toOption))
+      .distinct
+    squashes.foreach { n =>
+      val published = f.exists(genAux(n, "old"))
+      Commit.recover(f, Seq(squashSwap(n)), Some(genAux(n, "commit")))
+      if (published) advanceVacuumWatermark(n - 1)
     }
-    names.filter(_.endsWith(".old")).foreach { name =>
-      numOf(name, ".old").foreach { n =>
-        if (f.exists(genPath(n)) && !f.exists(genAux(n, "new")))
-          finishSquash(n) // published but not cleaned up
-      }
-    }
+    // after the journals: a squash's journal may name `_vacuumed.new`
+    recoverWatermark()
+    if (squashes.nonEmpty) dropRetired()
   }
 
-  /** Post-publish tail of a squash: retire the folded generations
-    * (watermark FIRST — the retired rows are inside the squash, and a
-    * replay of a folded batch must read "already committed" even if a
-    * crash interrupts the deletes), then drop their files.
-    */
-  private def finishSquash(n: Long): Unit = {
+  /** Drop the retired claims and generations (at or below the watermark). */
+  private def dropRetired(): Unit = {
     val f = fs
-    advanceVacuumWatermark(n - 1)
-    f.delete(genAux(n, "old"), true)
-    listNumbers(claimsDir).filter(_ < n).foreach { m =>
+    val floor = vacuumedWatermark.getOrElse(-1L)
+    listNumbers(claimsDir).filter(_ <= floor).foreach { m =>
       f.delete(genPath(m), true)
       f.delete(claimPath(m), false)
     }
@@ -583,6 +541,7 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     */
   def vacuum(keepLast: Int = 1, stagingOlderThanMs: Long = 3600000L): Seq[Long] = {
     require(keepLast >= 1, "must keep at least one version")
+    recoverWatermark()
     modeMarker.foreach(m => require(m != "append",
       s"vacuum on the 'append'-mode table at $basePath would silently " +
         "delete appended batches from the readAll() union"))
@@ -635,25 +594,22 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     readSmallFile(vacuumedPath).flatMap(s =>
       scala.util.Try(s.trim.toLong).toOption)
 
-  private def advanceVacuumWatermark(v: Long): Unit = {
-    val cur = vacuumedWatermark.getOrElse(-1L)
-    if (v > cur) {
-      val f = fs
-      val tmp = new Path(base, s"_vacuumed.tmp.${java.util.UUID.randomUUID()}")
-      val o = f.create(tmp, true)
+  private def recoverWatermark(): Unit =
+    Commit.recover(fs, Seq(markSwap), None)
+
+  private def advanceVacuumWatermark(v: Long): Unit =
+    stageWatermark(v).foreach(w => Commit.swap(fs, Seq(w), None))
+
+  /** [[markSwap]] staged with watermark `v`, None when it is already
+    * there. It advances BEFORE any claim/gen deletion, so a crash on
+    * either side of it leaves a complete ledger. */
+  private def stageWatermark(v: Long): Option[Commit.Swap] =
+    if (v <= vacuumedWatermark.getOrElse(-1L)) None
+    else {
+      val o = fs.create(markSwap.staged.get, true)
       o.write(v.toString.getBytes("UTF-8")); o.close()
-      // single-file replace. A crash between delete and rename loses
-      // the marker — SAFE, because the watermark advances BEFORE any
-      // claim/gen deletion: at that point the ledger is still complete
-      // and the interrupted vacuum simply never happened
-      f.delete(vacuumedPath, false)
-      if (!f.rename(tmp, vacuumedPath)) {
-        f.delete(tmp, true)
-        throw new java.io.IOException(
-          s"failed to advance vacuum watermark to $v at $basePath")
-      }
+      Some(markSwap)
     }
-  }
 
   /** Commit `df` as version `expectedBase + 1` ONLY — the optimistic-
     * concurrency primitive for read-modify-write callers (claim taken ⇒
@@ -696,7 +652,6 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     }
   }
 
-  /** Remove the table entirely (tests and rebuild-from-scratch). */
   /** DESCRIBE HISTORY: one row per live version — `(version, kind,
     * target, n_files, bytes)` where `kind` is `data` or `restore` and
     * `target` is the version whose data directory backs it (itself
@@ -717,5 +672,6 @@ final class VersionedTable(val spark: SparkSession, val basePath: String) {
     }.toDF("version", "kind", "target", "n_files", "bytes")
   }
 
+  /** Remove the table entirely (tests and rebuild-from-scratch). */
   def destroy(): Unit = fs.delete(base, true)
 }

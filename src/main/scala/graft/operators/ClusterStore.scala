@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
+import graft.engine.Commit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -104,6 +105,7 @@ object ClusterStore {
                                 delta: Option[DataFrame],
                                 deltaRowsHint: Option[Long] = None): Long = {
     val dir = s"$indexPath/${engine.dataDir}"
+    recover(spark, dir)
     val exists = hasParquetFiles(spark, dir)
     if (!exists && delta.isEmpty) return 0L    // already emptied
     // a prior op in this session may have left a stale listing in the
@@ -148,76 +150,84 @@ object ClusterStore {
 
   /** Replace the `touched` `cluster=N` partition dirs under `dataDir`
     * with `rows`' content in ONE write: `rows` lands cluster-
-    * partitioned in a dot-prefixed sibling dir on the same filesystem
-    * (invisible to Spark reads), then each touched dir is swapped in
-    * with fs-level delete + rename. A touched cluster with no output
-    * rows is simply deleted — the emptied-partition case. Untouched
-    * partitions' files stay byte-identical (their dirs are never
-    * listed, let alone rewritten). Crash mid-swap leaves a non-atomic
-    * window; callers that need atomicity wrap in their own ledger.
+    * partitioned in the dot-prefixed `.rewrite` sibling dir on the same
+    * filesystem (invisible to Spark reads), then one journaled
+    * [[graft.engine.Commit]] swap moves each touched live dir aside
+    * and its replacement in. A touched cluster with no output rows is
+    * retired — the emptied-partition case. Untouched partitions' files
+    * stay byte-identical (their dirs are never listed, let alone
+    * rewritten). Callers run [[recover]] before they read `dataDir`.
     *
     * With `appendExtras = true`, `rows` may ALSO carry clusters
     * outside `touched`: their files are MOVED into the live partition
-    * dirs (fs renames — append semantics, nothing existing is
+    * dirs by the same commit (append semantics, nothing existing is
     * replaced). This is how an IVF mutation commits its rewrite AND
     * its delta in one write job. With the default `false`, an output
     * cluster outside `touched` fails the commit — the guard on every
     * rebuild-shaped caller and on the driver-computed assignment
     * hints.
-    *
-    * The previous shape (materialize keep rows through scratch, then
-    * dynamic-partition-overwrite from the scratch) wrote every
-    * surviving row twice and paid two extra Spark jobs per mutation.
     */
   private[operators] def rewriteSwap(spark: SparkSession, dataDir: String,
                                      rows: DataFrame,
                                      touched: Array[Int],
-                                     appendExtras: Boolean = false): Unit = {
+                                     appendExtras: Boolean = false): Unit =
+    rewriteSwapWith(spark, dataDir, rows, touched, appendExtras)(_ => Nil)
+
+  /** [[rewriteSwap]] that also publishes what `stage` writes into the
+    * staging root (the HNSW split's widened router). */
+  private[operators] def rewriteSwapWith(spark: SparkSession, dataDir: String,
+                                         rows: DataFrame, touched: Array[Int],
+                                         appendExtras: Boolean)
+                                        (stage: Path => Seq[Commit.Swap]): Unit = {
     val dataPath = new Path(dataDir)
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dataPath.getParent,
-      s".rewrite-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      rows.write.partitionBy("cluster").mode("overwrite")
-        .parquet(tmp.toString)
-      val present: Set[String] =
-        if (fs.exists(tmp))
-          fs.listStatus(tmp).iterator
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("cluster="))
-            .map(_.getPath.getName).toSet
-        else Set.empty
-      val touchedNames = touched.map(c => s"cluster=$c").toSet
-      if (!appendExtras) {
-        val stray = present.filterNot(touchedNames)
-        require(stray.isEmpty,
-          s"rewrite produced rows for unswapped partition(s) " +
-            s"${stray.mkString(",")} under $dataDir")
-      }
-      fs.mkdirs(dataPath)
-      touchedNames.foreach { name =>
-        val live = new Path(dataPath, name)
-        fs.delete(live, true)
-        if (present(name))
-          require(fs.rename(new Path(tmp, name), live),
-            s"partition swap failed for $name under $dataDir")
-      }
-      present.filterNot(touchedNames).foreach { name =>
-        val live = new Path(dataPath, name)
-        fs.mkdirs(live)
-        // move every file (part files AND their checksum siblings — a
-        // .crc left behind would be deleted with the tmp dir and the
-        // moved part would lose its checksum record)
-        fs.listStatus(new Path(tmp, name)).foreach { st =>
-          if (st.isFile)
-            require(fs.rename(st.getPath, new Path(live, st.getPath.getName)),
-              s"partition append-move failed for $name under $dataDir")
-        }
-      }
-    } finally fs.delete(tmp, true)
+    val tmp = stagingOf(dataPath)
+    val aside = new Path(tmp, "_old")
+    rows.write.partitionBy("cluster").mode("overwrite").parquet(tmp.toString)
+    val present = if (!fs.exists(tmp)) Set.empty[String]
+      else fs.listStatus(tmp).map(_.getPath.getName).filter(_.startsWith("cluster=")).toSet
+    val touchedNames = touched.map(c => s"cluster=$c").toSet
+    if (!appendExtras) {
+      val stray = present.filterNot(touchedNames)
+      require(stray.isEmpty,
+        s"rewrite produced rows for unswapped partition(s) " +
+          s"${stray.mkString(",")} under $dataDir")
+    }
+    val replaced = touchedNames.toSeq.sorted.map { name =>
+      Commit.Swap(Some(new Path(tmp, name)).filter(_ => present(name)),
+        new Path(dataPath, name), new Path(aside, name))
+    }
+    // an extra cluster's files move into its live dir (part files move
+    // with their checksum siblings)
+    val appended = present.filterNot(touchedNames).toSeq.sorted.flatMap { name =>
+      fs.mkdirs(new Path(dataPath, name))
+      fs.listStatus(new Path(tmp, name)).toSeq.map(st => Commit.Swap(Some(st.getPath),
+        new Path(new Path(dataPath, name), st.getPath.getName), new Path(aside, name)))
+    }
+    val extra = stage(tmp)
+    fs.mkdirs(dataPath); fs.mkdirs(aside)
+    Commit.swap(fs, replaced ++ appended ++ extra, Some(journalOf(tmp)))
+    fs.delete(tmp, true)
     // the fs-level moves bypass Spark's write-path cache invalidation
     // — refresh so later reads see the new listing
     spark.catalog.refreshByPath(dataDir)
+  }
+
+  private def stagingOf(dataPath: Path) = new Path(dataPath.getParent, ".rewrite")
+  private def journalOf(staging: Path) = new Path(staging, "_COMMIT")
+
+  /** Finish or undo a [[rewriteSwap]] a crash interrupted. Every writer
+    * of the index runs it before it reads `dataDir`; metadata only.
+    */
+  private[graft] def recover(spark: SparkSession, dataDir: String): Unit = {
+    val dataPath = new Path(dataDir)
+    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = stagingOf(dataPath)
+    if (fs.exists(tmp)) {
+      Commit.recover(fs, Nil, Some(journalOf(tmp)))
+      fs.delete(tmp, true)
+      spark.catalog.refreshByPath(dataDir)
+    }
   }
 
   // ── metadata: driver-side listings and footers, never a Spark job ──
@@ -307,6 +317,7 @@ object ClusterStore {
     * partition in one task, one file. Returns the number compacted.
     */
   private[operators] def compact(spark: SparkSession, dataDir: String): Int = {
+    recover(spark, dataDir)
     val touched = filesPerCluster(spark, dataDir).filter(_._2 > 1)
       .keys.toArray.sorted
     if (touched.isEmpty) return 0

@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Commit
 import graft.functions.NativeExpressions.{cosine, nearestCentroids}
 
 /** Graph ANN: a sharded HNSW (Hierarchical Navigable Small World,
@@ -771,9 +773,9 @@ object Hnsw {
     * full retrain measurably loses ~0.1 by scattering it.
     *
     * Single-writer maintenance op (same contract as appendToIndex):
-    * the graph partitions land before the router update, so a
-    * concurrent reader in the window sees the OLD router and probes
-    * `cluster` for only its sub-0 rows — the same transient
+    * both sub-shards and the widened router publish in one commit, graph
+    * first, so a concurrent reader in that window sees the OLD router
+    * and probes `cluster` for only its sub-0 rows — the transient
     * under-probe any nightly-maintenance deployment accepts.
     * `_ROWS`/`_ROWS_BASE` are untouched: the meters track appends,
     * and a split neither adds rows nor resets drift.
@@ -785,6 +787,7 @@ object Hnsw {
     */
   def splitShard(spark: SparkSession, indexPath: String, cluster: Int,
                  iters: Int = 4, seed: Long = 42L): Int = {
+    ClusterStore.recover(spark, s"$indexPath/graph")
     val b = buildParams(spark, indexPath)
     val model = Ivf.loadModelCached(spark, s"$indexPath/centroids")
     require(cluster >= 0 && cluster < model.centroids.length,
@@ -810,19 +813,16 @@ object Hnsw {
         col("__newcl"), col("vec_id"), col("vec"),
         delta = false, b.attrs),
       b.attrs, b.m, b.efC)
-    // single-write partition swap (round-17: the split was the last
-    // maintenance op still on the dynamic-overwrite commit; rewriteSwap
-    // is the same non-atomicity contract with one write and two fs
-    // renames, and it never lists the untouched shards)
-    ClusterStore.rewriteSwap(spark, s"$indexPath/graph", rebuilt,
-      Array(cluster, newId))
-    // router update last (see the maintenance-window note above);
-    // saveModel's overwrite bumps the centroid dir's stat, so
-    // loadModelCached serves the widened router immediately
-    Ivf.saveModel(spark, Ivf.IvfModel(
-      model.centroids.updated(cluster, sub.centroids(0)) :+
-        sub.centroids(1)),
-      s"$indexPath/centroids")
+    // one commit publishes both halves AND the widened router, a fresh
+    // centroid dir that loadModelCached serves immediately
+    ClusterStore.rewriteSwapWith(spark, s"$indexPath/graph", rebuilt,
+      Array(cluster, newId), appendExtras = false) { staging =>
+      val router = new Path(staging, "centroids")
+      Ivf.saveModel(spark, Ivf.IvfModel(model.centroids.updated(cluster,
+        sub.centroids(0)) :+ sub.centroids(1)), router.toString)
+      Seq(Commit.Swap(Some(router), new Path(s"$indexPath/centroids"),
+        new Path(staging, "_old/centroids")))
+    }
     newId
   }
 

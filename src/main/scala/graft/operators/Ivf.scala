@@ -312,8 +312,8 @@ object Ivf {
     *    [[appendedFraction]] and rebuild via [[ensureIndex]] with a
     *    bumped fingerprint once it outgrows the recall budget (the
     *    same retrain contract FAISS documents for IVF add);
-    *  - an append is not atomic: wrap concurrent/replayed ingest in
-    *    the caller's dedup (e.g. commit the delta's ids through a
+    *  - an append commits atomically but is not idempotent: wrap
+    *    concurrent/replayed ingest in the caller's dedup (e.g. commit the delta's ids through a
     *    [[graft.engine.VersionedTable]] ledger first), or tolerate
     *    re-appended ids being deduplicated at read time.
     * Appends are deltas BEYOND the ensureIndex source snapshot: if

@@ -166,9 +166,14 @@ object TransitionStream {
               val staging = new org.apache.hadoop.fs.Path(out,
                 s".staging_b${batchId}_${java.util.UUID.randomUUID()}")
               batch.toDF().write.mode("overwrite").parquet(staging.toString)
-              // rename can only lose to another attempt of the SAME
-              // batch id (which wrote identical content) — drop ours
-              if (!fs.rename(staging, dst)) fs.delete(staging, true)
+              // rename loses only to another attempt of the SAME batch
+              // (identical content): drop ours. With no batch=N in place
+              // it was an IO error — fail, or the checkpoint moves on
+              if (!fs.rename(staging, dst)) {
+                if (!fs.exists(dst)) throw new java.io.IOException(
+                  s"transitions: could not publish $staging as $dst")
+                fs.delete(staging, true)
+              }
             } else {
               // already claimed: still CONSUME every partition — the
               // stateful operator's stores only commit when the batch

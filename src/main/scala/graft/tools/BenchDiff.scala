@@ -2,8 +2,8 @@ package graft.tools
 
 /** One-command round-over-round bench comparison on the LOAD-IMMUNE
   * basis (round-10 VERDICT #5): reads two bench artifacts (the JSON
-  * line `graft.Bench` writes to `target/bench*.json` / the driver's
-  * `BENCH_r{N}.json`) and diffs the per-query `cpu_sec` map — executor
+  * line `graft.Bench` writes to its `target/bench*.json` sidecar) and
+  * diffs the per-query `cpu_sec` map — executor
   * CPU seconds per attempt, which a thrashed box does not inflate the
   * way wall time does. This turns the phantom-regression adjudication
   * loop (r8–r10's recurring time sink: "is +40% wall a regression or
@@ -31,7 +31,10 @@ package graft.tools
   * this check).
   *
   * Exit code 1 when any work-backed regression or job rise is flagged,
-  * so a round script can gate on it.
+  * so a round script can gate on it. A `BENCH_r{N}.json` run record
+  * (`n, rc, cpus, sf, tail, parsed`, `tail` a 2,000-character fragment
+  * of the bench line) is not a bench line: given one, BenchDiff says
+  * so and exits 2.
   */
 object BenchDiff {
 
@@ -114,9 +117,18 @@ object BenchDiff {
     }
   }
 
-  private def load(p: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(p)), "UTF-8")
+  /** A run record (`n, rc, cpus, sf, tail, parsed`), not a bench line. */
+  private[tools] def isRunRecord(json: String): Boolean =
+    json.contains("\"tail\"") && objectOf(json, "cpu_sec").isEmpty
+
+  private def load(p: String): String = {
+    val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    if (isRunRecord(json)) {
+      println(s"$p is a BENCH_r*.json run record; BenchDiff needs the full target/bench*.json sidecar")
+      sys.exit(2)
+    }
+    json
+  }
 
   /** `--spread a.json b.json [c.json …]`: quantify the per-query
     * quiet-cpu NOISE BAND across repeated same-code runs (round-12

@@ -393,18 +393,28 @@ class LayoutExtensionsSpec extends SparkSpec {
     val want = (li: org.apache.spark.sql.DataFrame) =>
       li.filter(!col("l_orderkey").between(100L, 400L))
         .collect().map(_.toSeq).toSet
+    // each kill point fails one filesystem call of the writer (which
+    // dies with it): the manifest's aside move, its publish, the aside
+    // drop, then the first dirty-file delete
+    FaultFs.install(spark)
+    val killAt = Map[String, ((String, String)) => Boolean](
+      "staged" -> (c => c._1 == "rename" && c._2.endsWith("__stats")),
+      "aside" -> (c => c._1 == "rename" && c._2.contains("__stats._new.") &&
+        !c._2.contains("/_temporary/")),
+      "published" -> (c => c._1 == "delete" && c._2.endsWith("__stats._old")),
+      "swapped" -> (c => c._1 == "delete" && c._2.endsWith(".parquet")))
     for (kill <- Seq("staged", "aside", "published", "swapped")) {
-      val (path, li) = freshDmlTable(s"kill-$kill")
+      val (local, li) = freshDmlTable(s"kill-$kill")
+      val path = FaultFs.path(local)
       val preDml = li.collect().map(_.toSeq).toSet
       val postDml = want(li)
-      graft.engine.Layout.dmlSeam =
-        label => if (label == kill) throw new RuntimeException(s"kill@$label")
+      FaultFs.armWhen(killAt(kill))
       try {
-        val died = intercept[RuntimeException] {
+        val died = intercept[java.io.IOException] {
           graft.engine.Layout.deleteMatching(spark, path, "l_orderkey", 100L, 400L)
         }
-        assert(died.getMessage == s"kill@$kill")
-      } finally graft.engine.Layout.dmlSeam = _ => ()
+        assert(died.getMessage.startsWith("injected fault"), s"kill@$kill: $died")
+      } finally FaultFs.disarm()
       // reader self-heal: manifestRead must ALWAYS succeed and show a
       // consistent table — pre-DML content if the swap had not
       // published ("staged"/"aside" → rolled back), post-DML content

@@ -173,4 +173,20 @@ class UpsertSpec extends SparkSpec {
     assert(got.count() == 100)
     assert(got.agg(sum("v")).head.getLong(0) == (0 until 100).map(_ * 2 + 1).sum)
   }
+
+  test("q_cdc_apply opens its target from one footer: 8 Spark jobs, " +
+    "rows equal to the changefeed applied by hand") {
+    val dir = "/root/testdata/sf0.001"
+    val part = spark.read.parquet(s"$dir/part.parquet")
+    val want = part.filter(col("p_partkey") % 7 =!= 0 && col("p_partkey") % 7 =!= 1)
+      .unionByName(part.filter(col("p_partkey") % 7 === 1)
+        .withColumn("p_retailprice", col("p_retailprice") * 3))
+      .unionByName(part.filter(col("p_partkey") % 7 === 2)
+        .withColumn("p_partkey", col("p_partkey") + 1000000L))
+      .collect().map(_.toSeq).toSet
+    val (got, jobs) = jobsOf(graft.SparkEntry.queries("q_cdc_apply")(spark, dir)
+      .collect().map(_.toSeq).toSet)
+    assert(got == want)
+    assert(jobs == 8, s"q_cdc_apply ran $jobs Spark jobs")
+  }
 }

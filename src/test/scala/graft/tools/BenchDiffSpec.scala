@@ -44,4 +44,12 @@ class BenchDiffSpec extends AnyFunSuite {
     assert(BenchDiff.jobRises(noJobs, cur).isEmpty)
     assert(BenchDiff.jobRises(old, noJobs).isEmpty)
   }
+
+  test("a BENCH_r16.json-shaped run record is told apart from a bench line") {
+    val record = "{\n  \"n\": 16,\n  \"rc\": 0,\n  \"cpus\": 32,\n  \"sf\": 0.1,\n" +
+      "  \"tail\": \"emp_epochs\\\":0.162,\\\"q_v_hnsw_cpt\\\":2.113}\",\n" +
+      "  \"parsed\": {\"metric\": \"total\", \"value\": 3.0}\n}"
+    assert(BenchDiff.isRunRecord(record))
+    assert(!BenchDiff.isRunRecord(old))
+  }
 }
