@@ -20,8 +20,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   * opens about twenty tables, so that job is a fixed cost per table.
   * [[open]] reads the same footer on the driver and hands Spark the
   * schema it would have inferred, the pattern of the vector indexes'
-  * `ClusterStore.clusterRows`. [[footerMax]] answers `max(col)` from
-  * row-group statistics without a scan.
+  * `ClusterStore.clusterRows`. [[footerMax]] answers `max(col)` and
+  * [[footerRows]] the row count from row-group metadata without a scan.
   *
   * Both stay off any layout whose answer would need more than that: a
   * merged schema, partition directories, summary files, glob paths or
@@ -79,6 +79,19 @@ object ParquetTable {
       }
       if (groups.contains(None)) None
       else Some(groups.flatten.flatten.maxOption)
+    }
+  }
+
+  /** Row count of an unpartitioned parquet table from its footers,
+    * with no Spark job; `None` for a layout [[open]] leaves to Spark or
+    * an unreadable footer.
+    */
+  def footerRows(spark: SparkSession, path: String): Option[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, path).flatMap { files =>
+      try Some(files.map(f =>
+        readFooter(conf, f).getBlocks.asScala.map(_.getRowCount).sum).sum)
+      catch { case NonFatal(_) => None }
     }
   }
 

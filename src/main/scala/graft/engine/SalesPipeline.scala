@@ -35,5 +35,5 @@ final class SalesPipeline(spark: SparkSession, catalog: TableCatalog) {
   def dim(spec: DimSpec): DataFrame = catalog.read(spec.table)
   def fact: DataFrame = catalog.read(FactBuilder.factSales.table)
   def silverAnalysis: DataFrame =
-    SilverTransform.unitsByBranchYear(spark.read.parquet(silverPath))
+    SilverTransform.unitsByBranchYear(ParquetTable.open(spark, silverPath))
 }

@@ -454,7 +454,7 @@ object Upsert {
 final class UpsertTable(spark: SparkSession, path: String) {
   def merge(source: DataFrame, keys: Seq[String]): MergeBuilder =
     new MergeBuilder(spark, path, source, keys)
-  def toDF: DataFrame = spark.read.parquet(path)
+  def toDF: DataFrame = ParquetTable.open(spark, path)
 }
 
 final class MergeBuilder(spark: SparkSession, path: String,

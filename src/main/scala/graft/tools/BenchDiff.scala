@@ -32,22 +32,25 @@ package graft.tools
   *
   * Exit code 1 when any work-backed regression or job rise is flagged,
   * so a round script can gate on it. A `BENCH_r{N}.json` run record
-  * (`n, rc, cpus, sf, tail, parsed`, `tail` a 2,000-character fragment
-  * of the bench line) is not a bench line: given one, BenchDiff says
-  * so and exits 2.
+  * (`n, rc, cpus, sf, tail, parsed`) is read through its pretty-printed
+  * `parsed` bench line; a record whose `parsed` is null (`tail`, a
+  * 2,000-character fragment of the line, is all it keeps) has no
+  * `cpu_sec` map, and BenchDiff says so and exits 2.
   */
 object BenchDiff {
 
-  /** Extract the balanced `{...}` value of `"key":` from a JSON line.
-    * The bench maps hold only string keys and number values (no
-    * nested objects), but the scan is brace-balanced anyway so a
-    * future nested field cannot silently truncate the map.
+  /** Extract the balanced `{...}` value of `"key":` from a JSON text,
+    * compact or pretty-printed. The bench maps hold only string keys
+    * and number values (no nested objects), but the scan is
+    * brace-balanced anyway so a future nested field cannot silently
+    * truncate the map.
     */
   private[tools] def objectOf(json: String, key: String): Option[String] = {
-    val k = "\"" + key + "\":{"
-    val i = json.indexOf(k)
-    if (i < 0) return None
-    val start = i + k.length - 1
+    val k = ("\"" + java.util.regex.Pattern.quote(key) + "\"\\s*:\\s*\\{").r
+    val start = k.findFirstMatchIn(json) match {
+      case Some(m) => m.end - 1
+      case None => return None
+    }
     var depth = 0; var j = start; var inStr = false; var esc = false
     while (j < json.length) {
       val c = json(j)
@@ -117,17 +120,21 @@ object BenchDiff {
     }
   }
 
-  /** A run record (`n, rc, cpus, sf, tail, parsed`), not a bench line. */
-  private[tools] def isRunRecord(json: String): Boolean =
-    json.contains("\"tail\"") && objectOf(json, "cpu_sec").isEmpty
+  /** The bench line an artifact holds: a sidecar's line as it is, a
+    * run record's `parsed` object, or None for a run record whose
+    * `parsed` carries no `cpu_sec` map.
+    */
+  private[tools] def benchLine(json: String): Option[String] =
+    if (!json.contains("\"tail\"")) Some(json)
+    else objectOf(json, "parsed").filter(objectOf(_, "cpu_sec").nonEmpty)
 
   private def load(p: String): String = {
     val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-    if (isRunRecord(json)) {
-      println(s"$p is a BENCH_r*.json run record; BenchDiff needs the full target/bench*.json sidecar")
+    benchLine(json).getOrElse {
+      println(s"$p is a BENCH_r*.json run record without a parsed cpu_sec map; " +
+        "BenchDiff needs it or the full target/bench*.json sidecar")
       sys.exit(2)
     }
-    json
   }
 
   /** `--spread a.json b.json [c.json …]`: quantify the per-query

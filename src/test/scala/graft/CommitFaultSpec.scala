@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Layout, Scratch, Upsert, VersionedTable}
+import graft.engine.{Ingest, Layout, ParquetTable, SalesPipeline, ScdType1, Scratch,
+  SilverTransform, TableCatalog, Upsert, VersionedTable}
 import graft.operators.{ClusterStore, Hnsw, Ivf}
 import graft.streaming.{EventStream, TransitionStream}
 
@@ -19,10 +20,10 @@ import graft.streaming.{EventStream, TransitionStream}
   * call and every later one failing (renames both throwing and
   * returning false), revive the filesystem, run the protocol's recovery
   * entry and read. The reader must see exactly the pre- or the
-  * post-commit state, and when it sees the pre-commit state, rerunning
-  * the operation must reach the post-commit state. A rename that
-  * returns false while the process lives on (a real IO error) gets the
-  * same checks.
+  * post-commit state of each independently committed part, and when it
+  * does not see the post-commit state, rerunning the operation must
+  * reach it. A rename that returns false while the process lives on (a
+  * real IO error) gets the same checks.
   */
 class CommitFaultSpec extends SparkSpec {
   import spark.implicits._
@@ -48,11 +49,20 @@ class CommitFaultSpec extends SparkSpec {
 
   /** One protocol: `setup` builds the pre-commit state under a local
     * root, `op` commits at a `fault:` root, `recover` is the protocol's
-    * recovery entry, `read` what a reader sees.
+    * recovery entry, `read` what a reader sees, and `parts` splits a
+    * read into the parts that commit independently.
     */
   private final class Protocol(val setup: String => Unit, val op: String => Unit,
                               val recover: String => Unit,
-                              val read: String => Seq[String])
+                              val read: String => Seq[String],
+                              val parts: Seq[String] => Seq[Seq[String]] = Seq(_))
+
+  /** Every part of `got` equals that part of `pre` or of `post`. */
+  private def eachPreOrPost(parts: Seq[String] => Seq[Seq[String]], got: Seq[String],
+                            pre: Seq[String], post: Seq[String]): Boolean =
+    parts(got).zip(parts(pre).zip(parts(post))).forall {
+      case (g, (a, b)) => g == a || g == b
+    }
 
   private def copyTree(from: String, to: String): Unit = {
     val src = Paths.get(from)
@@ -102,8 +112,8 @@ class CommitFaultSpec extends SparkSpec {
       try scala.util.Try(p.op(root)) finally FaultFs.disarm()
       try p.recover(root) catch { case e: Exception => fail(s"$what: recovery failed: $e") }
       val got = p.read(root)
-      assert(got == pre || got == post, s"$what: recovered to neither state")
-      if (got == pre) {
+      assert(eachPreOrPost(p.parts, got, pre, post), s"$what: recovered to neither state")
+      if (got != post) {
         p.op(root)
         assert(p.read(root) == post, s"$what: rerun did not converge")
       }
@@ -143,6 +153,84 @@ class CommitFaultSpec extends SparkSpec {
         Seq("k"), "dt"),
       root => Upsert.recoverPartitioned(fsOf(root), new Path(s"$root/t")),
       table))
+  }
+
+  // the sales fixtures' silver before and after the incremental CSV,
+  // outside the fault scheme
+  private lazy val salesSilver: Seq[DataFrame] = {
+    val base = tmpDir("cf-silver")
+    Seq("init" -> PipelineSpec.initialRows, "inc" -> PipelineSpec.incrementalRows)
+      .map { case (name, lines) =>
+        val bronze = Ingest.csvToBronze(spark,
+          PipelineSpec.writeCsv(s"$base/$name.csv", lines), s"$base/$name/bronze")
+        SilverTransform.writeSilver(SilverTransform.transform(bronze),
+          s"$base/$name/silver")
+        ParquetTable.open(spark, s"$base/$name/silver")
+      }
+  }
+
+  private def dims(root: String, incremental: Boolean): Unit =
+    new ScdType1(spark, TableCatalog(spark, root)).buildAll(ScdType1.all,
+      salesSilver(if (incremental) 1 else 0), incremental)
+
+  private def recoverDims(root: String): Unit = ScdType1.all.foreach { s =>
+    Upsert.recover(fsOf(root), new Path(TableCatalog(spark, root).pathFor(s.table)))
+  }
+
+  /** Each dim's rows tagged with its table, "-" for a missing dim. */
+  private def readDims(root: String): Seq[String] = {
+    val cat = TableCatalog(spark, root)
+    ScdType1.all.flatMap { s =>
+      (if (cat.tableExists(s.table)) rows(cat.read(s.table)) else Seq("-"))
+        .map(s.table + "\t" + _)
+    }
+  }
+
+  private def dimParts(read: Seq[String]): Seq[Seq[String]] =
+    read.groupBy(_.takeWhile(_ != '\t')).toSeq.sortBy(_._1).map(_._2)
+
+  test("ScdType1.buildAll: the bounded dim writes, initial run") {
+    sweep(new Protocol(_ => (), dims(_, incremental = false), recoverDims,
+      readDims, dimParts))
+  }
+
+  test("ScdType1.buildAll: the bounded dim writes, incremental run") {
+    sweep(new Protocol(dims(_, incremental = false), dims(_, incremental = true),
+      recoverDims, readDims, dimParts))
+  }
+
+  test("SalesPipeline.run: a failed dim leaves each other dim old or new, " +
+    "and builds no fact") {
+    val base = tmpDir("cf-contract")
+    val (initCsv, incCsv) = (PipelineSpec.writeCsv(s"$base/init.csv",
+      PipelineSpec.initialRows), PipelineSpec.writeCsv(s"$base/inc.csv",
+      PipelineSpec.incrementalRows))
+    def run(root: String, csv: String, incremental: Boolean): Unit =
+      new SalesPipeline(spark, TableCatalog(spark, root)).run(csv, incremental)
+    def fact(root: String) = rows(TableCatalog(spark, root)
+      .read(graft.engine.FactBuilder.factSales.table))
+    val (local, clean) = (tmpDir("cf-contract-wh"), tmpDir("cf-contract-wh"))
+    val root = FaultFs.path(local)
+    run(root, initCsv, incremental = false)
+    copyTree(local, clean)
+    val (pre, preFact) = (readDims(root), fact(root))
+    run(clean, incCsv, incremental = true)
+    val (post, postFact) = (readDims(clean), fact(clean))
+    // the dealer dim's swap fails before it moves anything
+    FaultFs.armWhen { case (op, path) => op == "rename" && path.endsWith("/dim_dealer") }
+    try intercept[java.io.IOException](run(root, incCsv, incremental = true))
+    finally FaultFs.disarm()
+    recoverDims(root)
+    val got = readDims(root)
+    assert(eachPreOrPost(dimParts, got, pre, post), "a dim recovered to neither state")
+    def dealer(read: Seq[String]) =
+      read.filter(_.startsWith(ScdType1.dimDealer.table + "\t"))
+    assert(dealer(got) == dealer(pre), "the failed dealer dim moved")
+    assert(got != pre, "no other dim committed")
+    assert(fact(root) == preFact, "the fact was built after a failed dim")
+    run(root, incCsv, incremental = true)
+    assert(readDims(root) == post && fact(root) == postFact,
+      "rerun did not converge")
   }
 
   private def ivf(root: String): Unit =

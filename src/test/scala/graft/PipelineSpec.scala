@@ -107,7 +107,7 @@ class PipelineSpec extends SparkSpec {
     * does not depend on box load, so a rise above it is a deterministic
     * regression signal; a change that cuts jobs lowers it.
     */
-  private val incrementalRunJobCeiling = 38
+  private val incrementalRunJobCeiling = 23
 
   test("an incremental run stays within its Spark job ceiling") {
     val base = tmpDir("pipeline_jobs")

@@ -46,10 +46,25 @@ class BenchDiffSpec extends AnyFunSuite {
   }
 
   test("a BENCH_r16.json-shaped run record is told apart from a bench line") {
-    val record = "{\n  \"n\": 16,\n  \"rc\": 0,\n  \"cpus\": 32,\n  \"sf\": 0.1,\n" +
-      "  \"tail\": \"emp_epochs\\\":0.162,\\\"q_v_hnsw_cpt\\\":2.113}\",\n" +
-      "  \"parsed\": {\"metric\": \"total\", \"value\": 3.0}\n}"
-    assert(BenchDiff.isRunRecord(record))
-    assert(!BenchDiff.isRunRecord(old))
+    // a run record keeps the line pretty-printed under `parsed`, or only
+    // a `tail` fragment when `parsed` is null
+    def record(parsed: String) =
+      "{\n  \"n\": 16,\n  \"rc\": 0,\n  \"cpus\": 32,\n  \"sf\": 0.1,\n" +
+        "  \"tail\": \"emp_epochs\\\":0.162,\\\"q_v_hnsw_cpt\\\":2.113}\",\n" +
+        "  \"parsed\": " + parsed + "\n}"
+    val parsed = "{\n    \"metric\": \"total\",\n    \"cpu_sec\": {\n" +
+      "      \"q_a\": 1.5,\n      \"q_b\": 2\n    },\n    \"value\": 3.0\n  }"
+    assert(BenchDiff.benchLine(old).contains(old))
+    val line = BenchDiff.benchLine(record(parsed))
+    assert(line.contains(parsed))
+    assert(BenchDiff.cpuRows(line.get, line.get).map(r => r.q -> r.n) ==
+      Seq("q_a" -> 1.5, "q_b" -> 2.0))
+    assert(BenchDiff.benchLine(record("null")).isEmpty)
+    // the committed records: r16 carries its full maps, r15 only a tail
+    def file(n: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"BENCH_r$n.json")), "UTF-8")
+    val r16 = BenchDiff.benchLine(file("16"))
+    assert(r16.exists(BenchDiff.cpuRows(_, BenchDiff.benchLine(file("16_c8")).get).nonEmpty))
+    assert(BenchDiff.benchLine(file("15")).isEmpty)
   }
 }
